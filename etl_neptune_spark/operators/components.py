@@ -322,6 +322,7 @@ def connected_components(
     # excluding) — both regimes compute the exact same components, so
     # the answer is unaffected by where the boundary falls (pinned by
     # test_cc_regime_boundary_answers_match).
+    # bounded: at most driver_cap + 1 rows by the limit
     probe_rows = raw.limit(driver_cap + 1).collect() if driver_cap else []
     if driver_cap and len(probe_rows) <= driver_cap:
         raw.unpersist()

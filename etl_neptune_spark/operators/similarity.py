@@ -39,7 +39,6 @@ value is ~1e-11 per pair — the DuckDB oracle agrees in practice.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -130,11 +129,8 @@ def _key_py(v):
 # call and the ANN lifecycle certs call the assign kernel many times
 # per run, while the kernel itself is <50 ms at that size). 16 MB of
 # scan bytes ≈ several hundred thousand vectors — the size where the
-# r10 A/B first showed the per-row win. Parameterised for clusters
-# whose scan splits are already sized by the source layout.
-_SPREAD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(16 * 1024 * 1024))
-)
+# r10 A/B first showed the per-row win.
+_SPREAD_MIN_BYTES = 16 * 1024 * 1024
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -461,7 +457,8 @@ def sign_bucket_expr(
     spreads across 2^bits buckets. The emitted arithmetic is the same
     left-fold of doubles in Spark (0-based arrays) and DuckDB
     (``one_based=True``), so buckets match bit-identically across
-    engines."""
+    engines; ``_sign_bits`` is the same fold in numpy for the IVF
+    kernels."""
     signs = rademacher_signs(bits, dim, seed)
     base = 1 if one_based else 0
     parts = []
@@ -776,6 +773,87 @@ def _kmeans(sample: np.ndarray, k: int, iters: int = 10, seed: int = 42) -> np.n
     return cents
 
 
+def _sign_bits(vec, signs: np.ndarray):
+    """``sign_bucket_expr`` evaluated on an Arrow ``list<float>`` column,
+    bit for bit: each bit is a float64 left fold from 0.0 over the
+    dimensions in order, one ``+``/``-`` per term (a matmul or pairwise
+    sum would reorder the additions and change low bits). The SQL
+    CASE's edge cases carry over: a NaN sum reads '1' (Spark orders NaN
+    above every number), and a null row or a row holding a null element
+    reads '0' (its comparison is null)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    acc = np.zeros((len(vec), len(signs)))
+    null = np.zeros(len(vec), dtype=bool)
+    for i in range(signs.shape[1]):
+        x = pc.list_element(vec, i)
+        null |= x.is_null().to_numpy(zero_copy_only=False)
+        x = x.to_numpy(zero_copy_only=False).astype(np.float64)
+        acc = acc + x[:, None] * signs[:, i]
+    on = ((acc >= 0) | np.isnan(acc)) & ~null[:, None]
+    return pc.binary_join_element_wise(
+        *[pa.array(np.where(bit, "1", "0")) for bit in on.T], ""
+    )
+
+
+def _split_rounds(history, split_bits: int, dim: int) -> list:
+    """A recorded split history ``[(sfx_seed, [oversized cells])]`` in
+    the form ``_split_keys`` consumes: per round, the oversized cells as
+    an Arrow value set and that round's seeded hyperplanes."""
+    import pyarrow as pa
+
+    return [
+        (pa.array(cells, pa.string()), rademacher_signs(split_bits, dim, sfx_seed))
+        for sfx_seed, cells in history
+    ]
+
+
+def _split_keys(keys: list, vec, rounds: list) -> list:
+    """Replay a cap-split history on Arrow string cell keys — the one
+    place an IVF sub-cell key is computed. In round order, every key in
+    that round's oversized list gains ``|<bits>``, the sign bits of its
+    row's vector under the round's hyperplanes (``_sign_bits``), so a
+    corpus row, an appended vector and a probe of the same vector all
+    land in the same sub-cell. ``keys`` are key columns over the rows of
+    ``vec`` (a cell and its probe columns); ``rounds`` comes from
+    ``_split_rounds``."""
+    import pyarrow.compute as pc
+
+    for cells, signs in rounds:
+        hits = [pc.is_in(key, value_set=cells) for key in keys]
+        if not any(pc.any(hit).as_py() for hit in hits):
+            continue
+        sfx = _sign_bits(vec, signs)
+        keys = [
+            pc.if_else(hit, pc.binary_join_element_wise(key, sfx, "|"), key)
+            for key, hit in zip(keys, hits)
+        ]
+    return keys
+
+
+def _resplit_cells(
+    df: DataFrame, vcol: str, history: list, split_bits: int, dim: int
+) -> DataFrame:
+    """Apply a split history to the string ``cell`` column of a frame
+    that is already keyed (``cap_ivf_cells``' corpus rounds and its
+    query side): the assign kernel's ``_split_keys`` step as one Arrow
+    pass, every other column passed through."""
+    import pyarrow as pa
+
+    rounds = _split_rounds(history, split_bits, dim)
+    names = df.columns
+    ci, vi = names.index("cell"), names.index(vcol)
+
+    def resplit(batches):
+        for batch in batches:
+            cols = batch.columns
+            (cols[ci],) = _split_keys([cols[ci]], cols[vi], rounds)
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return df.mapInArrow(resplit, df.schema)
+
+
 def cap_ivf_cells(
     corpus: DataFrame,
     queries: DataFrame,
@@ -792,8 +870,9 @@ def cap_ivf_cells(
     from ``vec``, probe rows from ``qvec``), so both roles land in the
     same sub-cell without any coordination — the ``refined_sign_buckets``
     recipe applied to IVF cells. Each round costs one cell-size
-    aggregate plus one broadcast join against the (tiny) oversized-cell
-    list; ``max_rounds`` bounds the loop, with exact-duplicate /
+    aggregate plus one Arrow re-keying pass over the rows of the
+    oversized cells (``_split_keys``, the assign kernel's split step);
+    ``max_rounds`` bounds the loop, with exact-duplicate /
     near-identical vectors as the documented residual floor (hyperplanes
     cannot separate them).
 
@@ -816,15 +895,14 @@ def cap_ivf_cells(
     rounds× over into deserialized block storage — at 2M×64f that cache
     churn, not the split math, was the sf100 wall (driver thread dumps:
     29/32 executor threads in MemoryStore.putIteratorAsValues). The
-    query side leaves the loop entirely: its final keys are exactly a
-    replay of the recorded history (``_replay_cell_splits`` — the same
-    transform the persisted append/probe paths already use), so it pays
-    zero checkpoints. Oversized detection over the active set is
+    query side leaves the loop entirely: its final keys are one Arrow
+    pass that replays the recorded history, so it pays zero
+    checkpoints. Oversized detection over the active set is
     equivalent to detection over the full corpus: a cell's whole
     population moves between active/done together (keys extend only
     currently-oversized keys), so a frozen cell can never grow.
     Answers are bit-identical — same seeds, same per-round oversized
-    lists, same suffix expression, only WHERE rows are cached changes.
+    lists, same suffix function, only WHERE rows are cached changes.
 
     Determinism assumption (ADVICE r10): round-0 frozen rows keep their
     lineage rooted at the UNCACHED input frame, so a caller that runs
@@ -838,10 +916,8 @@ def cap_ivf_cells(
     """
     from pyspark.storagelevel import StorageLevel
 
-    spark = corpus.sparkSession
     corpus = corpus.withColumn("cell", F.col("cell").cast("string"))
     queries = queries.withColumn("cell", F.col("cell").cast("string"))
-    cols = list(corpus.columns)
     history: list[tuple[int, list[str]]] = []
     done: list[DataFrame] = []
     active = corpus
@@ -858,42 +934,84 @@ def cap_ivf_cells(
             break
         sfx_seed = seed + 101 * (round_no + 1)
         history.append((sfx_seed, cells))
-        ov = F.broadcast(
-            spark.createDataFrame([(c,) for c in cells], "cell string")
-            .withColumn("__over", F.lit(True))
-        )
-        joined = active.join(ov, "cell", "left")
+        over = F.coalesce(F.col("cell").isin(cells), F.lit(False))
         # Under-cap rows freeze: a lazy view over the PREVIOUS round's
-        # checkpoint blocks (no new materialization, no sign_bucket).
-        done.append(joined.filter(F.col("__over").isNull()).select(*cols))
+        # checkpoint blocks (no new materialization, no re-keying).
+        done.append(active.filter(~over))
         # Only the oversized remainder is re-keyed and checkpointed —
         # serialized storage: compact bytes instead of per-row objects
         # (the MemoryStore/SizeEstimator churn measured above).
-        active = (
-            joined.filter(F.col("__over"))
-            .withColumn(
-                "cell",
-                F.concat(
-                    F.col("cell"),
-                    F.lit("|"),
-                    sign_bucket("vec", split_bits, dim, sfx_seed),
-                ),
-            )
-            .select(*cols)
-            .localCheckpoint(
-                # MEMORY_AND_DISK is the SERIALIZED level in the Python
-                # API (MEMORY_AND_DISK_DESER is the DataFrame default).
-                eager=False,
-                storageLevel=StorageLevel.MEMORY_AND_DISK,
-            )
+        active = _resplit_cells(
+            active.filter(over), "vec", history[-1:], split_bits, dim
+        ).localCheckpoint(
+            # MEMORY_AND_DISK is the SERIALIZED level in the Python
+            # API (MEMORY_AND_DISK_DESER is the DataFrame default).
+            eager=False,
+            storageLevel=StorageLevel.MEMORY_AND_DISK,
         )
     if record is not None:
         record.extend(history)
     out_c = active
     for d in done:
         out_c = out_c.unionByName(d)
-    out_q = _replay_cell_splits(queries, "qvec", history, split_bits, dim)
-    return out_c, out_q
+    if history:
+        queries = _resplit_cells(queries, "qvec", history, split_bits, dim)
+    return out_c, queries
+
+
+def _train_sample(
+    emb: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_clusters: int | None,
+    train_sample: int,
+    seed: int,
+    n: int | None = None,
+) -> tuple[np.ndarray, int]:
+    """Bounded coarse-quantizer training input shared by ``ivf_topk``,
+    ``ivf_build`` and ``ivfpq_topk``: ``(sample matrix, n_clusters)``.
+
+    ``n_clusters=None`` derives the cell count from the corpus: ~√N
+    clamped to [4, train_sample // 8], the FAISS sizing rule (``n`` is
+    the corpus count when the caller already has it). The sample orders
+    by a seeded hash of the id and takes the first ``train_sample`` — a
+    deterministic uniform draw across the whole corpus, planned as
+    TakeOrderedAndProject (per-partition top-N heaps, no full sort).
+    limit() alone would take the head of the first parquet file — a
+    biased k-means sample on clustered or partitioned data."""
+    if n_clusters is None:
+        if n is None:
+            n = emb.count()  # one bounded action, metadata-cheap on parquet
+        n_clusters = int(min(max(4, round(math.sqrt(n))), max(4, train_sample // 8)))
+    sample = (
+        emb.select(
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).alias(vec_col),
+            F.hash(F.col(id_col), F.lit(seed)).alias("__r"),
+        )
+        .orderBy("__r", "__id")
+        .limit(train_sample)
+        .select(vec_col)
+        .toArrow()  # bounded: <= train_sample rows by the limit above
+    )
+    m = _arrow_matrix(sample.column(0))
+    if not len(m):
+        raise ValueError("IVF training: empty corpus")
+    return m, n_clusters
+
+
+def _topk_table(qs: list, ns: list, cs: list):
+    """A cell scorer's output from per-query numpy slices (empty when
+    no query kept a candidate)."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "query_id": np.concatenate(qs or [np.empty(0, np.int64)]),
+            "neighbor_id": np.concatenate(ns or [np.empty(0, np.int64)]),
+            "cos": np.concatenate(cs or [np.empty(0)]),
+        }
+    )
 
 
 def _make_cell_scorer(k: int):
@@ -910,19 +1028,10 @@ def _make_cell_scorer(k: int):
     self-query certificates' sf100 walls (SCALING.md). Ranking math is
     unchanged: same rounded float64 scores, same (cos desc, id asc)
     lexsort, same self-mask."""
-    import pyarrow as pa
-
-    empty = pa.table(
-        {
-            "query_id": pa.array([], pa.int64()),
-            "neighbor_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
-    )
 
     def score(key, qt, ct):
         if qt.num_rows == 0 or ct.num_rows == 0:
-            return empty
+            return _topk_table([], [], [])
         qi = qt.column("qid").to_numpy()
         ci = ct.column("vid").to_numpy()
         c = np.round(
@@ -940,32 +1049,25 @@ def _make_cell_scorer(k: int):
                 out_q.append(np.full(len(sel), qi[r], dtype=np.int64))
                 out_n.append(ci[sel].astype(np.int64))
                 out_c.append(c[r, sel])
-        if not out_q:
-            return empty
-        return pa.table(
-            {
-                "query_id": pa.array(np.concatenate(out_q)),
-                "neighbor_id": pa.array(np.concatenate(out_n)),
-                "cos": pa.array(np.concatenate(out_c)),
-            }
-        )
+        return _topk_table(out_q, out_n, out_c)
 
     return score
 
 
-def _rank_cell_candidates(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
-    """Cogroup-score probed cells and rank the survivors globally —
-    block-local top-k per probed cell is a superset of the global
-    top-k over the probed cells, so the window pass is exact."""
+def _rank_cell_candidates(
+    queries: DataFrame, corpus: DataFrame, k: int, scorer
+) -> DataFrame:
+    """Cogroup-score probed cells with ``scorer`` (an applyInArrow
+    kernel emitting (query_id, neighbor_id, cos)) and rank the
+    survivors globally — block-local top-k per probed cell is a
+    superset of the global top-k over the probed cells, so the window
+    pass is exact."""
     from pyspark.sql import Window
 
     candidates = (
         queries.groupBy("cell")
         .cogroup(corpus.groupBy("cell"))
-        .applyInArrow(
-            _make_cell_scorer(k),
-            schema="query_id long, neighbor_id long, cos double",
-        )
+        .applyInArrow(scorer, schema="query_id long, neighbor_id long, cos double")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
     return (
@@ -974,6 +1076,43 @@ def _rank_cell_candidates(queries: DataFrame, corpus: DataFrame, k: int) -> Data
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos", "rank")
     )
+
+
+def _probe_rows(assigned: DataFrame, nprobe: int) -> DataFrame:
+    """The query role of an assigned frame: one (qid, qvec, cell) row
+    per probed cell."""
+    return assigned.select(
+        F.col("vid").alias("qid"),
+        F.col("vec").alias("qvec"),
+        F.explode(F.array(*[f"probe{p}" for p in range(nprobe)])).alias("cell"),
+    )
+
+
+def _capped_roles(
+    assigned: DataFrame,
+    corpus_cols: list[str],
+    nprobe: int,
+    cell_cap: int | None,
+    dim: int,
+    seed: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Corpus and probe roles of a freshly assigned self-query frame,
+    with cells capped by ``cap_ivf_cells`` unless ``cell_cap`` is None
+    (the shared tail of ``ivf_topk`` and ``ivfpq_topk``)."""
+    if cell_cap is not None:
+        # localCheckpoint (compute-once), not persist: a persisted
+        # frame owned by nobody leaks CacheManager blocks across
+        # repeated invocations in a long-lived session; checkpoint
+        # blocks are context-cleaned once the result is dropped. It
+        # must wrap `assigned` BEFORE corpus/queries derive from it —
+        # r9 found the original rebound the name after the derivation,
+        # so every cap-split round silently re-ran the assign kernel.
+        assigned = assigned.localCheckpoint(eager=False)
+    corpus = assigned.select(*corpus_cols)
+    queries = _probe_rows(assigned, nprobe)
+    if cell_cap is None:
+        return corpus, queries
+    return cap_ivf_cells(corpus, queries, cell_cap, dim=dim, seed=seed)
 
 
 def ivf_topk(
@@ -1013,88 +1152,15 @@ def ivf_topk(
     Self-query form (every vector is a query), matching ``lsh_topk``.
     No SQL oracle exists for k-means state, so this operator is
     certified rows-only plus a recall-vs-brute-force test."""
-    from pyspark.sql import Window
-
-    spark = emb.sparkSession
-    if n_clusters is None:
-        n = emb.count()  # one bounded action, metadata-cheap on parquet
-        n_clusters = int(min(max(4, round(math.sqrt(n))), max(4, train_sample // 8)))
-    # Unbiased bounded training sample: order by a seeded hash of the id
-    # and take the first N — a deterministic uniform draw across the
-    # whole corpus, planned as TakeOrderedAndProject (per-partition
-    # top-N heaps, no full sort). limit() alone would take the head of
-    # the first parquet file — a biased k-means sample on clustered or
-    # partitioned data.
-    sample_pdf = (
-        emb.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias(vec_col),
-            F.hash(F.col(id_col), F.lit(seed)).alias("__r"),
-        )
-        .orderBy("__r", "__id")
-        .limit(train_sample)
-        .select(vec_col)
-        .toPandas()  # bounded: <= train_sample rows by the limit above
+    sample, n_clusters = _train_sample(
+        emb, id_col, vec_col, n_clusters, train_sample, seed
     )
-    cents = _kmeans(_matrix(sample_pdf[vec_col]), n_clusters, seed=seed)
-    bc = spark.sparkContext.broadcast(cents)
-
-    def assign(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            vec = batch.column(1)
-            u = _unit(_arrow_matrix(vec))
-            sims = u @ bc.value.T
-            order = np.argsort(-sims, axis=1)
-            arrays = [
-                batch.column(0).cast(pa.int64()),
-                vec,
-                pa.array(order[:, 0].astype(np.int32)),
-            ]
-            names = ["vid", "vec", "cell"]
-            # probe list for the query role (nearest nprobe cells)
-            for p in range(nprobe):
-                arrays.append(pa.array(order[:, p].astype(np.int32)))
-                names.append(f"probe{p}")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    probes_schema = ", ".join(f"probe{p} int" for p in range(nprobe))
-    # _spread (r10): gated on the scan's partition count, so a well-
-    # laid-out input skips the extra shuffle entirely. The r8 "no
-    # spread here" measurement (2× slower at sf1) predates the
-    # zero-copy kernel AND the single-row-group fixture finding: on an
-    # under-filed input the whole assign→cap-split→checkpoint lineage
-    # serializes through one task (the r9 sf100 ">40 min" bind), which
-    # dwarfs the one narrow shuffle the gate might add. mapInArrow +
-    # zero-copy ingest/pass-through as in _assign_with_centroids.
-    assigned = _spread(emb.select(id_col, vec_col)).mapInArrow(
-        assign, f"vid long, vec array<float>, cell int, {probes_schema}"
+    cents = _kmeans(sample, n_clusters, seed=seed)
+    assigned = _assign_with_centroids(emb, cents, id_col, vec_col, nprobe)
+    corpus, queries = _capped_roles(
+        assigned, ["vid", "vec", "cell"], nprobe, cell_cap, sample.shape[1], seed
     )
-    if cell_cap is not None and len(sample_pdf):
-        # localCheckpoint (compute-once), not persist: a persisted
-        # frame owned by nobody leaks CacheManager blocks across
-        # repeated invocations in a long-lived session; checkpoint
-        # blocks are context-cleaned once the result is dropped. It
-        # must wrap `assigned` BEFORE corpus/queries derive from it —
-        # r9 found the original rebound the name after the derivation,
-        # so every cap-split round silently re-ran the assign kernel.
-        assigned = assigned.localCheckpoint(eager=False)
-
-    corpus = assigned.select("vid", "vec", "cell")
-    queries = assigned.select(
-        F.col("vid").alias("qid"),
-        F.col("vec").alias("qvec"),
-        F.explode(F.array(*[f"probe{p}" for p in range(nprobe)])).alias("cell"),
-    )
-
-    if cell_cap is not None and len(sample_pdf):
-        corpus, queries = cap_ivf_cells(
-            corpus, queries, cell_cap, dim=len(sample_pdf[vec_col].iloc[0]),
-            seed=seed,
-        )
-
-    return _rank_cell_candidates(queries, corpus, k)
+    return _rank_cell_candidates(queries, corpus, k, _make_cell_scorer(k))
 
 
 # --------------------------------------------------------------------------
@@ -1117,11 +1183,11 @@ def ivf_topk(
 #   degrades until retrained.
 # - ``ivf_query_persisted`` — answer top-k from the persisted index
 #   with NO k-means stage anywhere: centroids are a tiny parquet read
-#   broadcast to the probe assigner, the split history replays the
-#   exact sub-cell keys, and the cogroup scorer reads the codes
-#   snapshot. Mirrors the reference's cache-reuse posture
-#   (OPTIMIZATION-CHANGELOG.md:100-113: reuse expensive state across
-#   runs instead of recomputing it).
+#   broadcast to the assign kernel, which replays the split history
+#   to the exact sub-cell keys in the same Arrow pass, and the cogroup
+#   scorer reads the codes snapshot. Mirrors the reference's
+#   cache-reuse posture (OPTIMIZATION-CHANGELOG.md:100-113: reuse
+#   expensive state across runs instead of recomputing it).
 #
 # At 100 TB the build is one linear assign pass + bounded driver
 # actions; every query afterwards touches nprobe cells of the parquet
@@ -1137,10 +1203,20 @@ def _assign_with_centroids(
     id_col: str,
     vec_col: str,
     nprobe: int,
+    history: list | tuple = (),
+    split_bits: int = 4,
+    extra: tuple | None = None,
 ) -> DataFrame:
-    """Distributed nearest-centroid assignment against a FROZEN
-    quantizer: one Arrow pass, no training. Emits (vid, vec, cell,
-    probe0..probe{nprobe-1}).
+    """The IVF assign kernel: one Arrow pass that keys vectors into
+    cells against a FROZEN quantizer, no training. ``cell`` is the
+    nearest centroid and ``probe0..probe{nprobe-1}`` the ``nprobe``
+    nearest, each extended by the recorded split ``history``
+    (``_split_keys``), so every key it emits is final. Emits (vid, vec,
+    [extra], cell, probe0..) with string keys.
+
+    ``extra``: an optional ``(name, spark_type, fn)``; ``fn`` maps the
+    batch's unit vectors to one more Arrow column computed in the same
+    pass (IVF-PQ's codes).
 
     mapInArrow, not mapInPandas (r10, VERDICT r9 task 1): the vector
     column enters as a zero-copy buffer view (``_arrow_matrix``) and
@@ -1148,106 +1224,45 @@ def _assign_with_centroids(
     route paid one ndarray object per row inbound and a per-row
     list re-serialization outbound, which is what bound the 2M-vector
     certificates at scan parallelism. Only (id, vec) cross the
-    boundary (guide §4: project before an opaque kernel)."""
+    boundary (guide §4: project before an opaque kernel). ``_spread``
+    (r10) is gated on the scan's partition count: on an under-filed
+    input the whole assign → cap-split → checkpoint lineage would
+    otherwise serialize through one task."""
     import pyarrow as pa
 
     bc = emb.sparkSession.sparkContext.broadcast(cents)
+    rounds = _split_rounds(history, split_bits, cents.shape[1])
+    key_names = ["cell", *(f"probe{p}" for p in range(nprobe))]
+    extra_names = [extra[0]] if extra else []
+    names = ["vid", "vec", *extra_names, *key_names]
 
     def assign(batches):
         for batch in batches:
             vec = batch.column(1)
             u = _unit(_arrow_matrix(vec))
-            sims = u @ bc.value.T
-            order = np.argsort(-sims, axis=1)
-            arrays = [
-                batch.column(0).cast(pa.int64()),
-                vec,
-                pa.array(order[:, 0].astype(np.int32)),
-            ]
-            names = ["vid", "vec", "cell"]
-            for p in range(nprobe):
-                arrays.append(
+            order = np.argsort(-(u @ bc.value.T), axis=1)
+            keys = _split_keys(
+                [
                     pa.array(order[:, min(p, order.shape[1] - 1)].astype(np.int32))
-                )
-                names.append(f"probe{p}")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+                    .cast(pa.string())
+                    for p in range(max(nprobe, 1))
+                ],
+                vec,
+                rounds,
+            )
+            arrays = [batch.column(0).cast(pa.int64()), vec]
+            if extra:
+                arrays.append(extra[2](u))
+            # cell and probe0 are both the nearest centroid's key
+            yield pa.RecordBatch.from_arrays(
+                arrays + keys[:1] + keys[:nprobe], names=names
+            )
 
-    probes_schema = ", ".join(f"probe{p} int" for p in range(nprobe))
-    return _spread(emb.select(id_col, vec_col)).mapInArrow(
-        assign, f"vid long, vec array<float>, cell int, {probes_schema}"
+    schema = ", ".join(
+        ["vid long", "vec array<float>", *(f"{n} {extra[1]}" for n in extra_names)]
+        + [f"{n} string" for n in key_names]
     )
-
-
-# Replay rounds fused into one whole-stage-codegen span before the
-# chain is cut. Each round contributes a broadcast-join probe plus a
-# split_bits × dim CASE/sum suffix expression (~25 KB of generated
-# bytecode at 4×64) — and the span ALSO carries whatever sits upstream
-# in the same stage (measured at sf100: the nprobe explode's Generate
-# doConsume inlines the first replay rounds, so even TWO rounds plus
-# the explode overflowed janino's 64 KB method limit and Spark
-# abandoned codegen for the whole span — the InternalCompilerException
-# from the r10 probes, answers unaffected but the hottest projection
-# ran unfused). One round per span is the level that compiles with
-# headroom regardless of the upstream operator.
-_REPLAY_CODEGEN_CHUNK = 1
-
-
-def _replay_cell_splits(
-    df: DataFrame,
-    vcol: str,
-    history: list[tuple[int, list[str]]],
-    split_bits: int,
-    dim: int,
-) -> DataFrame:
-    """Replay a recorded cap-split history on fresh rows: each round's
-    oversized-cell list is broadcast and matching rows get the same
-    vector-derived sign-hyperplane suffix ``cap_ivf_cells`` assigned at
-    build time — so an appended vector or a probe lands in exactly the
-    sub-cell the persisted codes use.
-
-    Deep histories are cut every ``_REPLAY_CODEGEN_CHUNK`` rounds with a
-    lazy SERIALIZED localCheckpoint (VERDICT r10 task 1): the suffix
-    arithmetic is heavy enough that chaining 3+ rounds in one codegen
-    span exceeds janino's method limit and drops the whole span out of
-    codegen exactly at the scales where splitting fires. The cut is a
-    storage boundary only — same joins, same suffix expressions, same
-    seeds, bit-identical keys (pinned by
-    tests/test_llm_ops.py::test_replay_chunked_matches_unchunked) — and
-    never fires on histories ≤ chunk (every benched local scale exits
-    the cap loop in ≤ 2 rounds)."""
-    from pyspark.storagelevel import StorageLevel
-
-    spark = df.sparkSession
-    df = df.withColumn("cell", F.col("cell").cast("string"))
-    for round_no, (sfx_seed, cells) in enumerate(history):
-        if round_no and round_no % _REPLAY_CODEGEN_CHUNK == 0:
-            # Lazy + serialized: materialized by the caller's first
-            # action, compact bytes (the cap_ivf_cells storage-level
-            # rationale) — bounds both the codegen span and the
-            # replayed lineage depth.
-            df = df.localCheckpoint(
-                eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK
-            )
-        ov = F.broadcast(
-            spark.createDataFrame([(c,) for c in cells], "cell string")
-            .withColumn("__over", F.lit(True))
-        )
-        df = (
-            df.join(ov, "cell", "left")
-            .withColumn(
-                "cell",
-                F.when(
-                    F.col("__over"),
-                    F.concat(
-                        F.col("cell"),
-                        F.lit("|"),
-                        sign_bucket(vcol, split_bits, dim, sfx_seed),
-                    ),
-                ).otherwise(F.col("cell")),
-            )
-            .drop("__over")
-        )
-    return df
+    return _spread(emb.select(id_col, vec_col)).mapInArrow(assign, schema)
 
 
 def ivf_build(
@@ -1268,39 +1283,22 @@ def ivf_build(
     cap-split), but the trained state lands as parquet snapshots so
     queries and appends never retrain. Returns the persisted params."""
     spark = emb.sparkSession
-    if n_clusters is None:
-        n = emb.count()
-        n_clusters = int(
-            min(max(4, round(math.sqrt(n))), max(4, train_sample // 8))
-        )
-    sample_pdf = (
-        emb.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias(vec_col),
-            F.hash(F.col(id_col), F.lit(seed)).alias("__r"),
-        )
-        .orderBy("__r", "__id")
-        .limit(train_sample)
-        .select(vec_col)
-        .toPandas()  # bounded: <= train_sample rows by the limit above
+    sample, n_clusters = _train_sample(
+        emb, id_col, vec_col, n_clusters, train_sample, seed
     )
-    if not len(sample_pdf):
-        raise ValueError("ivf_build: empty corpus")
-    dim = len(sample_pdf[vec_col].iloc[0])
-    cents = _kmeans(_matrix(sample_pdf[vec_col]), n_clusters, seed=seed)
+    dim = sample.shape[1]
+    cents = _kmeans(sample, n_clusters, seed=seed)
 
     # Checkpoint the assignment: the recorded cap-split loop below runs
     # one aggregate + collect per round over this frame, and without the
     # checkpoint each round re-runs the whole assign kernel (r9).
-    corpus = (
-        _assign_with_centroids(emb, cents, id_col, vec_col, nprobe=1)
-        .select("vid", "vec", "cell")
-        .localCheckpoint(eager=False)
-    )
+    corpus = _assign_with_centroids(
+        emb, cents, id_col, vec_col, nprobe=0
+    ).localCheckpoint(eager=False)
     history: list[tuple[int, list[str]]] = []
     if cell_cap is not None:
         empty_q = spark.createDataFrame(
-            [], "qid long, qvec array<float>, cell int"
+            [], "qid long, qvec array<float>, cell string"
         )
         corpus, _ = cap_ivf_cells(
             corpus,
@@ -1311,8 +1309,6 @@ def ivf_build(
             split_bits=split_bits,
             record=history,
         )
-    else:
-        corpus = corpus.withColumn("cell", F.col("cell").cast("string"))
 
     # The three state tables are driver-resident metadata (centroids ≈
     # √N rows, meta 1 row, splits ≈ oversized-cell count): publish them
@@ -1399,9 +1395,10 @@ def ivf_append(
     state: tuple | None = None,
 ) -> None:
     """Add new vectors to a persisted IVF index WITHOUT retraining: one
-    frozen-quantizer assign pass + split-history replay, landed as an
-    O(batch) GraphStore delta (``read`` unions it; ``compact`` folds it
-    into the next snapshot). The FAISS ``index.add`` posture.
+    frozen-quantizer assign pass, which replays the split history in the
+    same Arrow kernel, landed as an O(batch) GraphStore delta (``read``
+    unions it; ``compact`` folds it into the next snapshot). The FAISS
+    ``index.add`` posture.
 
     ``state``: a pre-loaded ``_load_ivf_state`` result — pass it when
     appending several batches against the SAME frozen quantizer (the
@@ -1415,10 +1412,7 @@ def ivf_append(
         state if state is not None else _load_ivf_state(spark, store)
     )
     assigned = _assign_with_centroids(
-        new_emb, cents, id_col, vec_col, nprobe=1
-    ).select("vid", "vec", "cell")
-    assigned = _replay_cell_splits(
-        assigned, "vec", history, meta["split_bits"], meta["dim"]
+        new_emb, cents, id_col, vec_col, 0, history, meta["split_bits"]
     )
     store.append_delta(assigned, "codes", version)
 
@@ -1435,11 +1429,12 @@ def ivf_query_persisted(
 ) -> DataFrame:
     """Top-k from a PERSISTED IVF index: no k-means anywhere (pinned by
     tests via ``KMEANS_CALLS``) — centroids come from a tiny parquet
-    read, probes replay the recorded split history, and the scorer
-    cogroups against the codes snapshot. Identical semantics to
-    ``ivf_topk`` when the query set is the indexed corpus itself
-    (self-masking scorer), which is what ``q_ann_persist`` exploits to
-    hash-match the fresh-build answer.
+    read, the assign kernel keys each probe and replays the recorded
+    split history in the same Arrow pass, and the scorer cogroups
+    against the codes snapshot. Identical semantics to ``ivf_topk``
+    when the query set is the indexed corpus itself (self-masking
+    scorer), which is what ``q_ann_persist`` exploits to hash-match the
+    fresh-build answer.
 
     ``prune=False`` skips the isin() partition-prune and scans the full
     codes snapshot — the cell cogroup still restricts candidates, so
@@ -1454,16 +1449,8 @@ def ivf_query_persisted(
     spark = queries.sparkSession
     meta, cents, history = state if state is not None else _load_ivf_state(spark, store)
     nprobe = min(nprobe, meta["n_clusters"])
-    assigned = _assign_with_centroids(queries, cents, id_col, vec_col, nprobe)
-    probe_q = assigned.select(
-        F.col("vid").alias("qid"),
-        F.col("vec").alias("qvec"),
-        F.explode(
-            F.array(*[f"probe{p}" for p in range(nprobe)])
-        ).alias("cell"),
-    )
-    probe_q = _replay_cell_splits(
-        probe_q, "qvec", history, meta["split_bits"], meta["dim"]
+    assigned = _assign_with_centroids(
+        queries, cents, id_col, vec_col, nprobe, history, meta["split_bits"]
     )
     # Partition-prune the codes read to the PROBED cells: the snapshot
     # is hive-partitioned by cell (ivf_build / layout-preserving
@@ -1475,7 +1462,7 @@ def ivf_query_persisted(
     # set is DIMENSION-sized (≤ n_clusters + split history, no matter
     # how many queries), so the collect is bounded; probe_q is
     # checkpointed first so the assign kernel runs once, not twice.
-    probe_q = probe_q.localCheckpoint(eager=True)
+    probe_q = _probe_rows(assigned, nprobe).localCheckpoint(eager=True)
     probed = sorted(
         r["cell"] for r in probe_q.select("cell").distinct().collect()  # bounded: <= n_clusters + split cells
     )
@@ -1491,7 +1478,7 @@ def ivf_query_persisted(
             F.col("cell").isin(sorted({int(c) for c in probed}))
         )
     corpus = corpus.withColumn("cell", F.col("cell").cast("string"))
-    return _rank_cell_candidates(probe_q, corpus, k)
+    return _rank_cell_candidates(probe_q, corpus, k, _make_cell_scorer(k))
 
 
 def label_centroids(
@@ -1566,13 +1553,13 @@ def ivfpq_topk(
     same corpus — the refine depth is the binding factor.
 
     Scale posture: both quantizers train on ONE bounded driver sample
-    (the FAISS recipe); encoding is a linear Arrow pass; the per-cell
-    scan is the same cogroup shape as ``ivf_topk`` but carries codes,
-    not vectors — at 100 TB the cell working set shrinks by the PQ
-    compression factor, which is the point of the operator. Self-query
-    form, matching ``lsh_topk``/``ivf_topk``. k-means state has no SQL
-    form, so certification is rows-only plus a recall-vs-brute-force
-    test (tests/test_similarity_pq.py).
+    (the FAISS recipe); encoding rides the IVF assign kernel's Arrow
+    pass; the per-cell scan is the same cogroup shape as ``ivf_topk``
+    but carries codes, not vectors — at 100 TB the cell working set
+    shrinks by the PQ compression factor, which is the point of the
+    operator. Self-query form, matching ``lsh_topk``/``ivf_topk``.
+    k-means state has no SQL form, so certification is rows-only plus a
+    recall-vs-brute-force test (tests/test_llm_ops.py).
 
     ``cell_cap`` (round-7, found by the sf10 probe): like ``ivf_topk``,
     oversized quantizer cells are sub-split with vector-derived
@@ -1581,30 +1568,18 @@ def ivfpq_topk(
     per-cell ADC scan quadratic in corpus density (probes × candidates
     inside one cell) at the 200k-vector fixture. ``n_clusters=None``
     applies the same ~√N FAISS sizing as ``ivf_topk``."""
-    from pyspark.sql import Window  # noqa: F401 — used by the rank pass
+    import pyarrow as pa
 
     spark = emb.sparkSession
     n = emb.count() if (n_clusters is None or refine is None) else None
-    if n_clusters is None:
-        n_clusters = int(
-            min(max(4, round(math.sqrt(n))), max(4, train_sample // 8))
-        )
     if refine is None:
         # Corpus-adaptive re-rank depth (see docstring): one parquet
         # metadata count buys a depth that tracks near-tie growth.
         refine = max(32, 4 * k * math.ceil(math.log10(max(10, n))))
-    sample_pdf = (
-        emb.select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).alias(vec_col),
-            F.hash(F.col(id_col), F.lit(seed)).alias("__r"),
-        )
-        .orderBy("__r", "__id")
-        .limit(train_sample)
-        .select(vec_col)
-        .toPandas()  # bounded: <= train_sample rows by the limit above
+    sample, n_clusters = _train_sample(
+        emb, id_col, vec_col, n_clusters, train_sample, seed, n
     )
-    train = _unit(_matrix(sample_pdf[vec_col]))
+    train = _unit(sample)
     dim = train.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -1618,71 +1593,27 @@ def ivfpq_topk(
             for s in range(m)
         ]
     )  # (m, codebook_k, dsub)
-    bc_coarse = spark.sparkContext.broadcast(coarse)
     bc_books = spark.sparkContext.broadcast(books)
 
-    def encode(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            vec = batch.column(1)
-            u = _unit(_arrow_matrix(vec))
-            sims = u @ bc_coarse.value.T
-            order = np.argsort(-sims, axis=1)
-            codes = np.empty((len(u), m), dtype=np.int32)
-            for s in range(m):
-                sub = u[:, s * dsub : (s + 1) * dsub]
-                d2 = ((sub[:, None, :] - bc_books.value[s][None, :, :]) ** 2).sum(
-                    axis=2
-                )
-                codes[:, s] = np.argmin(d2, axis=1)
-            # codes as one ListArray over the raveled matrix — no
-            # per-row Python lists (r10, same recipe as _arrow_matrix
-            # ingest; offsets are the trivial arange × m).
-            codes_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(len(u) + 1, dtype=np.int32) * m),
-                pa.array(codes.ravel()),
-            )
-            arrays = [
-                batch.column(0).cast(pa.int64()),
-                vec,
-                codes_arr,
-                pa.array(order[:, 0].astype(np.int32)),
-            ]
-            names = ["vid", "vec", "codes", "cell"]
-            for p in range(nprobe):
-                arrays.append(pa.array(order[:, p].astype(np.int32)))
-                names.append(f"probe{p}")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    probes_schema = ", ".join(f"probe{p} int" for p in range(nprobe))
-    assigned = _spread(emb.select(id_col, vec_col)).mapInArrow(
-        encode,
-        f"vid long, vec array<float>, codes array<int>, cell int, {probes_schema}",
-    )
-    if cell_cap is not None and len(sample_pdf):
-        # checkpoint BEFORE corpus/queries derive from it (see ivf_topk)
-        assigned = assigned.localCheckpoint(eager=False)
-    corpus = assigned.select("vid", "vec", "codes", "cell")
-    queries = assigned.select(
-        F.col("vid").alias("qid"),
-        F.col("vec").alias("qvec"),
-        F.explode(F.array(*[f"probe{p}" for p in range(nprobe)])).alias("cell"),
-    )
-
-    if cell_cap is not None and len(sample_pdf):
-        corpus, queries = cap_ivf_cells(
-            corpus, queries, cell_cap, dim=dim, seed=seed
+    def encode(u):
+        codes = np.empty((len(u), m), dtype=np.int32)
+        for s in range(m):
+            sub = u[:, s * dsub : (s + 1) * dsub]
+            d2 = ((sub[:, None, :] - bc_books.value[s][None, :, :]) ** 2).sum(axis=2)
+            codes[:, s] = np.argmin(d2, axis=1)
+        # codes as one ListArray over the raveled matrix — no per-row
+        # Python lists (r10, same recipe as _arrow_matrix ingest;
+        # offsets are the trivial arange × m).
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(len(u) + 1, dtype=np.int32) * m),
+            pa.array(codes.ravel()),
         )
 
-    import pyarrow as pa
-
-    _empty_topk = pa.table(
-        {
-            "query_id": pa.array([], pa.int64()),
-            "neighbor_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
+    assigned = _assign_with_centroids(
+        emb, coarse, id_col, vec_col, nprobe, extra=("codes", "array<int>", encode)
+    )
+    corpus, queries = _capped_roles(
+        assigned, ["vid", "vec", "codes", "cell"], nprobe, cell_cap, dim, seed
     )
 
     def score(key, qt, ct):
@@ -1691,9 +1622,8 @@ def ivfpq_topk(
         # np.vstack over per-row codes lists, the conversion cost that
         # bound this certificate's sf100 wall (SCALING.md). Scoring
         # math unchanged (same LUT/ADC, same rounded float64 re-rank).
-        empty = _empty_topk
         if qt.num_rows == 0 or ct.num_rows == 0:
-            return empty
+            return _topk_table([], [], [])
         qi, ci = qt.column("qid").to_numpy(), ct.column("vid").to_numpy()
         qu = _unit(_arrow_matrix(qt.column("qvec")))
         codes = _arrow_matrix(ct.column("codes"), dtype=np.int64)  # (n, m)
@@ -1729,28 +1659,9 @@ def ivfpq_topk(
             out_q.append(np.full(len(order), qi[r], dtype=np.int64))
             out_n.append(ci[cand[order]].astype(np.int64))
             out_c.append(exact[order])
-        if not out_q:
-            return empty
-        return pa.table(
-            {
-                "query_id": pa.array(np.concatenate(out_q)),
-                "neighbor_id": pa.array(np.concatenate(out_n)),
-                "cos": pa.array(np.concatenate(out_c)),
-            }
-        )
+        return _topk_table(out_q, out_n, out_c)
 
-    candidates = (
-        queries.groupBy("cell")
-        .cogroup(corpus.groupBy("cell"))
-        .applyInArrow(score, schema="query_id long, neighbor_id long, cos double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        candidates.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    return _rank_cell_candidates(queries, corpus, k, score)
 
 
 def rrf_fuse(

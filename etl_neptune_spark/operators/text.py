@@ -180,6 +180,16 @@ def tfidf_top_terms(
     )
 
 
+_CURATION_COLUMNS = (
+    "predicted_lang",
+    "quality_score",
+    "content_hash",
+    "dup_count",
+    "is_survivor",
+    "kept",
+)
+
+
 def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -205,9 +215,17 @@ def curate_corpus(
     token count) rides the single scan of the heavy text column instead
     of paying a second full read plus a join-back (guide §8 "move heavy
     bytes once"). The report columns themselves are unchanged
-    (pinned by test_curate_corpus_carry_rides_the_scan)."""
+    (pinned by test_curate_corpus_carry_rides_the_scan). A carried name
+    that collides with ``id_col`` or a report column raises
+    ``ValueError``."""
     text = F.col(text_col)
     carry = carry or {}
+    clash = sorted(set(carry) & {id_col, "survivor_id", *_CURATION_COLUMNS})
+    if clash:
+        raise ValueError(
+            f"curate_corpus: carry keys {clash} collide with id_col or a "
+            "report column"
+        )
     enriched = docs.select(
         F.col(id_col),
         lang_id(text).alias("predicted_lang"),
@@ -227,16 +245,7 @@ def curate_corpus(
             & (F.col("predicted_lang") == keep_lang)
             & (F.col("quality_score") >= min_quality),
         )
-        .select(
-            id_col,
-            "predicted_lang",
-            "quality_score",
-            "content_hash",
-            "dup_count",
-            "is_survivor",
-            "kept",
-            *carry.keys(),
-        )
+        .select(id_col, *_CURATION_COLUMNS, *carry.keys())
     )
 
 

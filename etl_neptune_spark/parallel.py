@@ -10,14 +10,14 @@ default FIFO scheduling is exactly that back-fill behaviour.
 
 Results are answer-identical by construction: the thunks must be
 independent deterministic computations, and every one of them was
-already fully evaluated by the sequential form. Exceptions re-raise in
-thunk order, so a caller's raise-order semantics are preserved.
+already fully evaluated by the sequential form. A failure surfaces as
+soon as it happens: the caller does not wait behind thunks still running.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Any
 
 from pyspark import inheritable_thread_target
@@ -25,19 +25,30 @@ from pyspark import inheritable_thread_target
 
 def run_concurrent(*thunks: Callable[[], Any]) -> list[Any]:
     """Evaluate ``thunks`` on parallel driver threads; return their
-    results in order. The first (by position) failing thunk's exception
-    re-raises once every thread has finished — later thunks are not
-    cancelled (the sequential form evaluated all of them too, except
-    after a raise, where the extra evaluation is failure-mode-only and
-    answer-invisible).
+    results in order.
+
+    Fails fast: as soon as one thunk raises, the exception of the first
+    (by position) thunk that has finished with a failure re-raises. The
+    call does not wait for thunks still running; they finish on their
+    own threads, so a caller whose thunk blocks on another (a stream
+    awaiting termination) must unblock it from the failing side.
 
     ``inheritable_thread_target`` carries the JVM thread-locals (job
     group/description) into the pool threads under pinned-thread mode —
     the PySpark-documented way to run driver-side job threads."""
+    if not thunks:
+        raise ValueError("run_concurrent: needs at least one thunk")
     if len(thunks) == 1:
         return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+    pool = ThreadPoolExecutor(max_workers=len(thunks))
+    try:
         futures = [
             pool.submit(inheritable_thread_target(t)) for t in thunks
         ]
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f in done and f.exception() is not None:
+                raise f.exception()
         return [f.result() for f in futures]
+    finally:
+        pool.shutdown(wait=False)

@@ -1627,10 +1627,16 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "q_stream_ann_ingest: stream did not terminate"
                 )
 
-        run_concurrent(
-            _await_stream,
-            lambda: ivf_append(arrivals, store_b, version=1, state=ivf_state),
-        )
+        def _append_batch() -> None:
+            # A failed append stops the stream too, so the awaiting
+            # thread returns instead of sitting out its 600 s timeout.
+            try:
+                ivf_append(arrivals, store_b, version=1, state=ivf_state)
+            except BaseException:
+                q.stop()
+                raise
+
+        run_concurrent(_await_stream, _append_batch)
         _tm.mark("stream", rows=_staged_rows(cache))
 
         # streamed-vs-batched answers: two independent reads of two

@@ -3,6 +3,7 @@ multimodal plumbing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_neptune_spark.operators.dedup import (
@@ -624,12 +625,19 @@ def test_minhash_signature_kernel_matches_naive_definition(spark):
         assert got[doc_id] == expect, doc_id
 
 
-def test_ivf_persisted_index_no_retrain_and_matches_fresh(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize(
+    "cell_cap", [4096, 3], ids=["default_cap", "forced_split"]
+)
+def test_ivf_persisted_index_no_retrain_and_matches_fresh(
+    spark, sf_dir, tmp_path, cell_cap
+):
     """Persisted-IVF lifecycle (VERDICT r6 task 3): build once, then
     (a) the query path performs ZERO k-means training (KMEANS_CALLS
     pinned), (b) its answer equals a fresh ivf_topk build with the same
     parameters, and (c) appended vectors join the index via the frozen
-    quantizer and become findable without a rebuild."""
+    quantizer and become findable without a rebuild. The forced-split
+    cap makes (b) and (c) run against a live split history replayed by
+    the assign kernel."""
     from etl_neptune_spark.operators.similarity import (
         KMEANS_CALLS,
         ivf_append,
@@ -642,8 +650,10 @@ def test_ivf_persisted_index_no_retrain_and_matches_fresh(spark, sf_dir, tmp_pat
 
     emb = load_table(spark, sf_dir, "embeddings")
     store = GraphStore(str(tmp_path / "annidx"))
-    info = ivf_build(emb, store, n_clusters=8, version=0)
+    info = ivf_build(emb, store, n_clusters=8, version=0, cell_cap=cell_cap)
     assert info["n_clusters"] == 8
+    if cell_cap < 4096:
+        assert info["split_rounds"] >= 2
 
     before = KMEANS_CALLS["n"]
     got = {
@@ -654,7 +664,9 @@ def test_ivf_persisted_index_no_retrain_and_matches_fresh(spark, sf_dir, tmp_pat
 
     fresh = {
         (r.query_id, r.neighbor_id, r.cos, r.rank)
-        for r in ivf_topk(emb, k=5, n_clusters=8, nprobe=4).collect()
+        for r in ivf_topk(
+            emb, k=5, n_clusters=8, nprobe=4, cell_cap=cell_cap
+        ).collect()
     }
     assert got == fresh
 
@@ -1049,17 +1061,18 @@ def test_minhash_salt_absolute_floor(spark):
 
 
 def test_replay_chunked_matches_unchunked(spark):
-    """r11 codegen-depth cap pin: ``_replay_cell_splits`` cuts the
-    replay chain with a lazy serialized localCheckpoint every
-    ``_REPLAY_CODEGEN_CHUNK`` rounds (the janino method-limit fix).
-    The cut is a storage boundary only — on a fabricated 5-round
-    history (deep enough that the cut fires twice) the chunked replay
-    must produce bit-identical cell keys to the plain unchunked loop."""
+    """The split-history replay runs inside the Arrow kernels
+    (``_split_keys``, a numpy fold of the SQL ``sign_bucket``
+    expression). On a fabricated 5-round history, plus rows holding
+    NaN, null elements, a null array, -0.0, ±inf and denormal-scale
+    values, the kernel keys must equal the SQL join-chain replay bit
+    for bit — through ``cap_ivf_cells``' re-keying pass and through the
+    assign kernel that keys appends and probes."""
     import numpy as np
 
     from etl_neptune_spark.operators.similarity import (
-        _REPLAY_CODEGEN_CHUNK,
-        _replay_cell_splits,
+        _assign_with_centroids,
+        _resplit_cells,
         sign_bucket,
     )
 
@@ -1067,19 +1080,34 @@ def test_replay_chunked_matches_unchunked(spark):
     rows = [
         (i, [float(x) for x in rng.normal(0, 1, size=16)]) for i in range(400)
     ]
+    nan, inf = float("nan"), float("inf")
+    edge = [
+        [0.0] * 16,
+        [-0.0] * 16,
+        [nan] + [1.0] * 15,
+        [inf] * 16,
+        [-inf] * 16,
+        [inf, -inf] + [0.0] * 14,
+        [1e-30] * 16,
+        [-1e-30] + [0.0] * 15,
+        [1e8, 1.0, -1e8] + [0.0] * 13,
+        [None] + [1.0] * 15,
+        [1.0] * 15 + [None],
+        None,
+    ]
+    rows += [(1000 + j, v) for j, v in enumerate(edge)]
+    null_ids = [1009, 1010, 1011]
     df = spark.createDataFrame(rows, "qid long, qvec array<float>").withColumn(
         "cell", F.lit("0")
     )
     # 5 rounds, split_bits=1: round r splits every key reachable after
-    # r-1 rounds (2^(r-1) strings), so most rows keep extending and the
-    # chunk boundary fires inside a live chain.
+    # r-1 rounds (2^(r-1) strings), so most rows keep extending.
     split_bits, dim, seed = 1, 16, 42
     history = []
     reachable = ["0"]
     for r in range(5):
         history.append((seed + 101 * (r + 1), sorted(reachable)))
         reachable = [c + "|" + b for c in reachable for b in ("0", "1")]
-    assert len(history) > _REPLAY_CODEGEN_CHUNK  # the cut must fire
 
     ref = df
     for sfx_seed, cells in history:
@@ -1103,9 +1131,24 @@ def test_replay_chunked_matches_unchunked(spark):
             .drop("__over")
         )
     ref_map = {r["qid"]: r["cell"] for r in ref.collect()}
-    out = _replay_cell_splits(df, "qvec", history, split_bits, dim)
+    out = _resplit_cells(df, "qvec", history, split_bits, dim)
     out_map = {r["qid"]: r["cell"] for r in out.collect()}
     assert out_map == ref_map
+    # Null rows fold to all-'0' bits, so they still extend every round.
+    assert all(ref_map[i] == "0" + "|0" * 5 for i in null_ids)
+    # The assign kernel (one centroid: every row's base cell is "0")
+    # replays the same history onto the cell and each probe column.
+    assigned = _assign_with_centroids(
+        df.filter(~F.col("qid").isin(null_ids)),
+        np.ones((1, dim)),
+        "qid",
+        "qvec",
+        2,
+        history,
+        split_bits,
+    )
+    for r in assigned.collect():
+        assert r["cell"] == r["probe0"] == r["probe1"] == ref_map[r["vid"]]
     # Depth sanity: the fixture genuinely exercised multi-round suffixes.
     assert max(c.count("|") for c in ref_map.values()) >= 4
 
@@ -1137,3 +1180,7 @@ def test_curate_corpus_carry_rides_the_scan(spark):
         n = row.pop("n_tokens")
         assert n == want_tokens[did]
         assert row == b[did]
+    # A carried name may not shadow the id or a report column.
+    for bad in ("doc_id", "survivor_id", "kept"):
+        with pytest.raises(ValueError, match="collide"):
+            curate_corpus(docs, carry={bad: F.lit(1)})

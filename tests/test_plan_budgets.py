@@ -41,7 +41,10 @@ BUDGETS = {
     "q_upsert_nodes": (2, 0, 0, 41248), # SMJ full-outer MERGE (both sides)
     "q_gc_anti": (1, 1, 0, 2960),       # broadcast anti-join + final agg
     "q_dedup_minhash": (2, 3, 0, 91795),  # banded LSH: band agg + verify
-    "q_llm_pipeline": (4, 4, 2, 25812), # composed stages SHARE 2 exchanges
+    # composed stages SHARE 2 exchanges; 3 broadcasts, not 4, since
+    # 6f60344's curate_corpus(carry=) change (the token count rides the
+    # curation scan instead of a join-back)
+    "q_llm_pipeline": (4, 3, 2, 25812),
     # the shuffle-free co-located MERGE: ZERO runtime exchanges is the
     # whole point of the bucketed layout — pinned at the metric level,
     # not just the plan shape
