@@ -117,7 +117,7 @@ def main() -> None:
         queries["q_flow_edges"](spark, sf_dir).count()
     except Exception as exc:  # noqa: BLE001
         print(f"warmup q_flow_edges failed: {exc}", file=sys.stderr)
-    spark.range(1024).repartition(32).mapInPandas(
+    spark.range(1024).repartition(32).mapInArrow(
         lambda it: it, "id long"
     ).count()
     # Warm the Structured Streaming machinery once (class loading,

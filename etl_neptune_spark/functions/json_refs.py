@@ -6,7 +6,7 @@ trees collecting reference tokens: ``extract_ref_or_getatt`` /
 ``deep_find_lambda_refs`` (lambda/etl_cfn/neptune_etl_cfn.py:200-242)
 and ``extract_sfn_lambda_refs`` (lambda/etl_aws/neptune_etl_aws.py:
 1117-1147). Fixed-depth paths go to ``get_json_object``; unbounded
-recursion does not, so this is a vectorized (Arrow-batched) pandas UDF
+recursion does not, so this is an Arrow UDF (``F.arrow_udf``)
 returning ``array<string>`` — UDTF-shaped once exploded.
 
 Scale note: the UDF is per-row O(tree size) and embarrassingly
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -42,22 +42,26 @@ def _walk(node, out: list[str]) -> None:
         out.append(str(node))
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_json_refs(payloads: pd.Series) -> pd.Series:
+def _refs(payload: str | None) -> list[str]:
+    """All reference tokens in one JSON document, in tree order; none
+    for a null or unparseable payload."""
+    if payload is None:
+        return []
+    try:
+        tree = json.loads(payload)
+    except (ValueError, TypeError):
+        return []
+    out: list[str] = []
+    _walk(tree, out)
+    return out
+
+
+@F.arrow_udf(T.ArrayType(T.StringType()))
+def extract_json_refs(payloads: pa.Array) -> pa.Array:
     """All reference tokens in a JSON document, in tree order."""
-
-    def one(payload: str | None) -> list[str]:
-        if payload is None:
-            return []
-        try:
-            tree = json.loads(payload)
-        except (ValueError, TypeError):
-            return []
-        out: list[str] = []
-        _walk(tree, out)
-        return out
-
-    return payloads.map(one)
+    return pa.array(
+        [_refs(p) for p in payloads.to_pylist()], type=pa.list_(pa.string())
+    )
 
 
 def json_refs_joined(col: Column | str, sep: str = ",") -> Column:
@@ -80,15 +84,7 @@ def json_refs_udtf():
     @udtf(returnType="ref: string, pos: int")
     class JsonRefs:
         def eval(self, payload: str):
-            if payload is None:
-                return
-            try:
-                tree = json.loads(payload)
-            except (ValueError, TypeError):
-                return
-            out: list[str] = []
-            _walk(tree, out)
-            for i, r in enumerate(out):
+            for i, r in enumerate(_refs(payload)):
                 yield r, i
 
     return JsonRefs

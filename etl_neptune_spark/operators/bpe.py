@@ -26,6 +26,8 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import map_batches, pylists
+
 END = "</w>"  # end-of-word marker, standard BPE
 
 
@@ -107,16 +109,14 @@ def bpe_encode(
 
     Returns (id, n_words, n_tokens, tokens array<string>). The merge
     table rides the closure (broadcast by Spark's task serialization —
-    a few KB); each Arrow batch encodes with a per-worker word memo."""
+    a few KB); each partition encodes with one word memo."""
     ranks = {pair: i for i, pair in enumerate(merges)}
 
     def gen(batches):
-        import pandas as pd
-
         memo: dict[str, list[str]] = {}
-        for pdf in batches:
+        for batch in batches:
             ids, n_words, n_tokens, toks = [], [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
+            for i, t in zip(*pylists(batch)):
                 if t is None:
                     continue
                 words = [w for w in t.lower().split() if w]
@@ -132,16 +132,10 @@ def bpe_encode(
                 n_words.append(len(words))
                 n_tokens.append(len(out))
                 toks.append(out)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "n_words": pd.Series(n_words, dtype="int64"),
-                    "n_tokens": pd.Series(n_tokens, dtype="int64"),
-                    "tokens": pd.Series(toks, dtype="object"),
-                }
-            )
+            yield ids, n_words, n_tokens, toks
 
-    return docs.select(id_col, text_col).mapInPandas(
+    return map_batches(
+        docs.select(id_col, text_col),
         gen,
-        schema=f"{id_col} long, n_words long, n_tokens long, tokens array<string>",
+        f"{id_col} long, n_words long, n_tokens long, tokens array<string>",
     )

@@ -15,11 +15,13 @@ No reference counterpart (BASELINE.json north star). Design targets the
 - **SimHash**: linear scan producing a fixed-width bit signature;
   bucket on the signature (or signature bands for hamming>0).
 
-Shingle-set and signature GENERATION runs as Arrow-batched
-``mapInPandas`` (Catalyst higher-order functions execute interpreted
-per element — measured ~6× slower than a Python loop over an Arrow
-batch; ``hashlib.md5`` is byte-identical to SQL ``md5``, so oracle
-parity holds). Everything relational — posting-list joins, band
+Shingle-set and signature GENERATION runs as Arrow row kernels
+(``boundary.map_rows``, or ``boundary.map_batches`` where a kernel
+keeps a per-batch digest table or a per-partition memo):
+Catalyst higher-order functions execute interpreted per element —
+measured ~6× slower than a Python loop over an Arrow batch;
+``hashlib.md5`` is byte-identical to SQL ``md5``, so oracle parity
+holds. Everything relational — posting-list joins, band
 self-joins, bucket-size aggregation, candidate verification — stays in
 Spark SQL with whole-stage codegen.
 
@@ -35,27 +37,12 @@ from __future__ import annotations
 
 import hashlib
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import map_batches, map_rows, pylists, spread
+
 HEX_ODD = "13579bdf"  # hex digits with low bit set → +1 vote in simhash
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Hash-repartition to full parallelism before CPU-heavy per-row
-    signature work. Local test inputs are one small parquet file → one
-    partition, which would serialize the hashing onto a single core; on
-    a real cluster the scan already yields many splits and this round
-    robin is a cheap row-level rebalance (raw text moves once, before
-    the 10×-larger shingle explosion). Gated on the input's current
-    partition count: when the scan's natural splits already cover the
-    cluster, the repartition would be a pure extra shuffle of the raw
-    text and is skipped."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
 
 
 def word_shingles(text: Column, n: int = 3) -> Column:
@@ -96,33 +83,25 @@ def doc_shingles(
     """(id, shingles: array<string>) — distinct word n-grams of
     lower(text), docs with no shingle dropped.
 
-    Arrow-batched ``mapInPandas``: Catalyst's higher-order functions
-    (transform/slice) execute interpreted per element, which made
-    shingling itself the dominant cost of every dedup query; a Python
-    loop over an Arrow batch is ~6× faster here and byte-identical
-    (str.lower/split match SQL lower/string_split on this data)."""
+    Arrow row kernel, the raw text spread first: Catalyst's
+    higher-order functions (transform/slice) execute interpreted per
+    element, which made shingling itself the dominant cost of every
+    dedup query; a Python loop over an Arrow batch is ~6× faster here
+    and byte-identical (str.lower/split match SQL lower/string_split on
+    this data)."""
 
-    def gen(batches):
-        for pdf in batches:
-            ids, shs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    continue
-                w = t.lower().split(" ")
-                sh = list(
-                    dict.fromkeys(
-                        " ".join(w[j : j + n]) for j in range(len(w) - n + 1)
-                    )
-                )
-                if sh:
-                    ids.append(i)
-                    shs.append(sh)
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "shingles": shs}
-            )
+    def row(i, t):
+        if t is None:
+            return
+        w = t.lower().split(" ")
+        sh = list(dict.fromkeys(" ".join(w[j : j + n]) for j in range(len(w) - n + 1)))
+        if sh:
+            yield i, sh
 
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema=f"{id_col} long, shingles array<string>"
+    return map_rows(
+        spread(docs.select(id_col, text_col)),
+        row,
+        f"{id_col} long, shingles array<string>",
     )
 
 
@@ -149,10 +128,11 @@ def minhash_band_entries(
 
     def gen(batches):
         md5 = hashlib.md5
-        for pdf in batches:
-            digs = _batch_digests(pdf["shingles"], num_hashes)
+        for batch in batches:
+            ids, shingles = pylists(batch)
+            digs = _batch_digests(shingles, num_hashes)
             out_id, out_band, out_hash = [], [], []
-            for i, sh in zip(pdf[id_col], pdf["shingles"]):
+            for i, sh in zip(ids, shingles):
                 sig = digs.signature(sh)
                 for b in range(bands):
                     out_id.append(i)
@@ -160,15 +140,13 @@ def minhash_band_entries(
                     out_hash.append(
                         md5("|".join(sig[b * rows : (b + 1) * rows]).encode()).hexdigest()
                     )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(out_id, dtype="int64"),
-                    "band": pd.Series(out_band, dtype="int32"),
-                    "band_hash": out_hash,
-                }
-            )
+            yield out_id, out_band, out_hash
 
-    return shingled.mapInPandas(gen, schema=f"{id_col} long, band int, band_hash string")
+    return map_batches(
+        shingled.select(id_col, "shingles"),
+        gen,
+        f"{id_col} long, band int, band_hash string",
+    )
 
 
 class _batch_digests:
@@ -226,17 +204,14 @@ def minhash_signatures(
     calibration and custom banding."""
 
     def gen(batches):
-        for pdf in batches:
-            digs = _batch_digests(pdf["shingles"], num_hashes)
-            ids, sigs = [], []
-            for i, sh in zip(pdf[id_col], pdf["shingles"]):
-                ids.append(i)
-                sigs.append(digs.signature(sh))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "sig": sigs}
-            )
+        for batch in batches:
+            ids, shingles = pylists(batch)
+            digs = _batch_digests(shingles, num_hashes)
+            yield ids, [digs.signature(sh) for sh in shingles]
 
-    return shingled.mapInPandas(gen, schema=f"{id_col} long, sig array<string>")
+    return map_batches(
+        shingled.select(id_col, "shingles"), gen, f"{id_col} long, sig array<string>"
+    )
 
 
 # A (band, band_hash) bucket counts as hot when BOTH hold — mirroring
@@ -640,6 +615,46 @@ def simhash16(text: Column) -> Column:
     return F.array_join(bits, "")
 
 
+def _simhash(
+    docs: DataFrame, id_col: str, text_col: str, out_col: str, votes
+) -> DataFrame:
+    """(id, out_col): the SimHash kernel both widths share. ``votes``
+    maps a word's md5 hex digest to its ±1 vote per bit; bit p of the
+    signature is 1 iff the doc's summed votes on p are positive. Only
+    the bit string leaves the worker."""
+
+    def gen(batches):
+        import numpy as np
+        from collections import Counter
+
+        md5 = hashlib.md5
+        # Word → ±1 vote vector memo, one per partition: corpus
+        # vocabulary is tiny next to total word count, so this drops
+        # md5 work by orders of magnitude; Counter folds repeated words
+        # into one scaled add.
+        memo: dict = {}
+        for batch in batches:
+            ids, sigs = [], []
+            for i, t in zip(*pylists(batch)):
+                if t is None:
+                    continue
+                total = 0
+                for w, n in Counter(t.lower().split(" ")).items():
+                    v = memo.get(w)
+                    if v is None:
+                        v = np.array(votes(md5(w.encode()).hexdigest()), dtype=np.int64)
+                        if len(memo) < 2_000_000:  # bound worker memory
+                            memo[w] = v
+                    total = total + n * v
+                ids.append(i)
+                sigs.append("".join("1" if v > 0 else "0" for v in total))
+            yield ids, sigs
+
+    return map_batches(
+        spread(docs.select(id_col, text_col)), gen, f"{id_col} long, {out_col} string"
+    )
+
+
 def simhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -648,42 +663,13 @@ def simhash_signatures(
     Same vote semantics as ``simhash16``, computed per Arrow batch in
     Python (one md5 per word, 16 hex-digit votes); only the 16-char
     signature leaves the worker."""
-
-    def gen(batches):
-        import numpy as np
-        from collections import Counter
-
-        md5 = hashlib.md5
-        odd = set(HEX_ODD)
-        # Word → ±1 vote vector memo: corpus vocabulary is tiny next to
-        # total word count, so this drops md5 work by orders of
-        # magnitude; Counter folds repeated words into one scaled add.
-        memo: dict = {}
-        for pdf in batches:
-            ids, sigs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    continue
-                votes = np.zeros(16, dtype=np.int64)
-                for w, n in Counter(t.lower().split(" ")).items():
-                    v = memo.get(w)
-                    if v is None:
-                        h = md5(w.encode()).hexdigest()
-                        v = np.array(
-                            [1 if h[p] in odd else -1 for p in range(16)],
-                            dtype=np.int64,
-                        )
-                        if len(memo) < 2_000_000:  # bound worker memory
-                            memo[w] = v
-                    votes += n * v
-                ids.append(i)
-                sigs.append("".join("1" if v > 0 else "0" for v in votes))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "simhash": sigs}
-            )
-
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema=f"{id_col} long, simhash string"
+    odd = set(HEX_ODD)
+    return _simhash(
+        docs,
+        id_col,
+        text_col,
+        "simhash",
+        lambda h: [1 if h[p] in odd else -1 for p in range(16)],
     )
 
 
@@ -730,43 +716,14 @@ def simhash64_signatures(
     scale). Bit p votes by bit ``p%4`` of hex digit ``p//4`` of
     md5(word) — derived from the HEX STRING exactly as the DuckDB
     oracle derives it, so signatures match bit-for-bit."""
-
-    def gen(batches):
-        import numpy as np
-        from collections import Counter
-
-        md5 = hashlib.md5
-        memo: dict = {}
-        for pdf in batches:
-            ids, sigs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    continue
-                votes = np.zeros(64, dtype=np.int64)
-                for w, n in Counter(t.lower().split(" ")).items():
-                    v = memo.get(w)
-                    if v is None:
-                        h = md5(w.encode()).hexdigest()
-                        v = np.array(
-                            [
-                                1
-                                if (int(h[p // 4], 16) >> (3 - p % 4)) & 1
-                                else -1
-                                for p in range(64)
-                            ],
-                            dtype=np.int64,
-                        )
-                        if len(memo) < 2_000_000:
-                            memo[w] = v
-                    votes += n * v
-                ids.append(i)
-                sigs.append("".join("1" if v > 0 else "0" for v in votes))
-            yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"), "simhash64": sigs}
-            )
-
-    return _spread(docs.select(id_col, text_col)).mapInPandas(
-        gen, schema=f"{id_col} long, simhash64 string"
+    return _simhash(
+        docs,
+        id_col,
+        text_col,
+        "simhash64",
+        lambda h: [
+            1 if (int(h[p // 4], 16) >> (3 - p % 4)) & 1 else -1 for p in range(64)
+        ],
     )
 
 
@@ -920,36 +877,20 @@ def simhash_band_pairs(
     # near-quadratic candidate set + verify with output-sized work.
     usig = sh.select("simhash").distinct()
 
-    def enumerate_flips(batches):
-        def flip(s: str, i: int) -> str:
-            return s[:i] + ("1" if s[i] == "0" else "0") + s[i + 1 :]
+    def flip(s: str, i: int) -> str:
+        return s[:i] + ("1" if s[i] == "0" else "0") + s[i + 1 :]
 
-        for pdf in batches:
-            sig, flipped, ham = [], [], []
-            for s in pdf["simhash"] if max_hamming >= 1 else ():
-                for i in range(16):
-                    f1 = flip(s, i)
-                    sig.append(s)
-                    flipped.append(f1)
-                    ham.append(1)
-                    if max_hamming >= 2:
-                        for j in range(i + 1, 16):
-                            f2 = flip(f1, j)
-                            sig.append(s)
-                            flipped.append(f2)
-                            ham.append(2)
-                            if max_hamming >= 3:
-                                for k in range(j + 1, 16):
-                                    sig.append(s)
-                                    flipped.append(flip(f2, k))
-                                    ham.append(3)
-            yield pd.DataFrame(
-                {"sig_a": sig, "sig_b": flipped, "hamming": ham}
-            )
+    def enumerate_flips(s):
+        for i in range(16) if max_hamming >= 1 else ():
+            f1 = flip(s, i)
+            yield s, f1, 1
+            for j in range(i + 1, 16) if max_hamming >= 2 else ():
+                f2 = flip(f1, j)
+                yield s, f2, 2
+                for k in range(j + 1, 16) if max_hamming >= 3 else ():
+                    yield s, flip(f2, k), 3
 
-    flips = usig.mapInPandas(
-        enumerate_flips, schema="sig_a string, sig_b string, hamming int"
-    )
+    flips = map_rows(usig, enumerate_flips, "sig_a string, sig_b string, hamming int")
     # sig_a < sig_b keeps each unordered pair once (every true pair is
     # generated from both endpoints' mask sets).
     sig_pairs = flips.join(

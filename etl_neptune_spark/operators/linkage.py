@@ -29,6 +29,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import map_rows
+
 
 def collapse_exact(records: DataFrame, name_col: str, key_col: str) -> DataFrame:
     """Collapse byte-identical names to one row: (name, n_rec, min_key).
@@ -110,7 +112,7 @@ def doc_spans(
     """(id, pos, span_hash) — every n-word window of lower(text), NOT
     distinct (positions matter for span removal), 1-based positions.
 
-    Arrow-batched ``mapInPandas`` for the same reason as
+    An Arrow row kernel (``boundary.map_rows``) for the same reason as
     ``dedup.doc_shingles``: Catalyst higher-order functions run
     interpreted per element and the hashing loop is the hot path. Only
     the 32-hex md5 digest of each span leaves Python — the shuffle that
@@ -118,31 +120,15 @@ def doc_spans(
     collisions (2^-128-scale) are the usual accepted risk of
     hash-keyed dedup at corpus scale."""
 
-    def gen(batches):
-        import pandas as pd
+    def row(i, t):
+        if t is None:
+            return
+        ws = t.lower().split(" ")
+        for p in range(len(ws) - n + 1):
+            yield i, p + 1, hashlib.md5(" ".join(ws[p : p + n]).encode()).hexdigest()
 
-        for pdf in batches:
-            ids, poss, hs = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None:
-                    continue
-                ws = t.lower().split(" ")
-                for p in range(len(ws) - n + 1):
-                    ids.append(i)
-                    poss.append(p + 1)
-                    hs.append(
-                        hashlib.md5(" ".join(ws[p : p + n]).encode()).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "pos": pd.Series(poss, dtype="int32"),
-                    "span_hash": pd.Series(hs, dtype="object"),
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema=f"{id_col} long, pos int, span_hash string"
+    return map_rows(
+        docs.select(id_col, text_col), row, f"{id_col} long, pos int, span_hash string"
     )
 
 

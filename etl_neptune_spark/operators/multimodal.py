@@ -1,40 +1,29 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata,
-processed by Arrow-batched ``mapInPandas`` operators.
+processed by Arrow row kernels (``boundary.map_rows``).
 
 No reference counterpart (BASELINE.json north star). The design for a
 100 TB multimodal corpus: media lives as a ``binary`` column (or
 pointers to object storage) beside typed metadata columns; decode /
-feature-extract / resize / frame-sample run as ``mapInPandas`` batch
-iterators so each Python crossing handles a whole Arrow batch and the
+feature-extract / resize / frame-sample run as ``mapInArrow`` row
+kernels so each Python crossing handles a whole Arrow batch and the
 operator parallelizes per input split with no shuffle.
 
-Codec resolution order per payload: PIL when installed (any format) →
-the pure-stdlib PNG codec (``functions.pngcodec``: zlib + numpy, REAL
-decode/resize/re-encode for 8-bit PNG — always available, including in
-this container) → a deterministic fake over the raw bytes for payloads
-that are not decodable images (the driver fixtures' UTF-8 text always
-lands here, keeping the oracle queries byte-identical regardless of
-installed libraries). The Spark-side plumbing — schema, batching, UDF
-signatures, partitioning — is identical on every path.
+Codec resolution order per payload: the pure-stdlib PNG codec
+(``functions.pngcodec``: zlib + numpy, REAL decode/resize/re-encode for
+8-bit PNG) → the pure-stdlib baseline JPEG codec
+(``functions.jpegcodec``) → a deterministic fake over the raw bytes for
+payloads that are not decodable images (the driver fixtures' UTF-8 text
+always lands here). Both codecs are stdlib + numpy, so every answer is
+the same on every host, whatever image libraries it has installed.
 """
 
 from __future__ import annotations
 
-import io
-from collections.abc import Iterator
-
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-try:  # full-format codec when the environment provides it
-    from PIL import Image as _PILImage
-
-    _HAVE_PIL = True
-except ImportError:  # this container: PNG-only via the stdlib codec
-    _PILImage = None
-    _HAVE_PIL = False
-
+from ..boundary import map_rows
 from ..functions import avicodec as _avi
 from ..functions import jpegcodec as _jpeg
 from ..functions import pngcodec as _png
@@ -66,23 +55,10 @@ def _fake_decode(payload: bytes) -> dict:
 
 
 def _decode_payload(payload: bytes) -> dict:
-    """Image metadata: PIL when available AND the bytes decode as an
-    image; the pure-stdlib PNG codec for PNG payloads (real decode,
-    always available); the deterministic fake otherwise. Fixture
-    payloads are text bytes, so oracle runs on the driver tables always
-    take the fake path — byte-identical with or without PIL."""
-    if _HAVE_PIL:
-        try:
-            img = _PILImage.open(io.BytesIO(payload))
-            return {
-                "n_bytes": len(payload),
-                "width": img.width,
-                "height": img.height,
-                "channels": len(img.getbands()),
-                "format": (img.format or "unknown").lower(),
-            }
-        except Exception:
-            pass
+    """Image metadata, keys in ``IMAGE_META_SCHEMA`` order: the stdlib
+    PNG codec for PNG payloads, a JPEG header read for JPEG payloads,
+    the deterministic fake otherwise (fixture payloads are text bytes,
+    so oracle runs on the driver tables always take the fake path)."""
     if _png.is_png(payload):
         try:
             img = _png.decode(payload)
@@ -121,16 +97,12 @@ def with_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def decode_image_meta(
     df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload"
 ) -> DataFrame:
-    """binary payload → typed image metadata via mapInPandas batches."""
+    """binary payload → typed image metadata, one Arrow row kernel."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = pdf[bin_col].map(lambda b: _decode_payload(bytes(b)))
-            out = pd.DataFrame(list(metas))
-            out.insert(0, "doc_id", pdf[id_col].values)
-            yield out
+    def row(i, b):
+        yield (i, *_decode_payload(b).values())
 
-    return df.select(id_col, bin_col).mapInPandas(batches, IMAGE_META_SCHEMA)
+    return map_rows(df.select(id_col, bin_col), row, IMAGE_META_SCHEMA)
 
 
 def extract_features(
@@ -145,24 +117,18 @@ def extract_features(
     fully real and testable. The output feeds the similarity operators
     unchanged (``operators.similarity`` consumes any array<float>)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, b):
+        arr = np.frombuffer(b, dtype=np.uint8)
+        # float64 histogram/norm, one final round to float32:
+        # engine-reproducible (integer sums are exact in f64; the f64
+        # quotient rounds to REAL identically in SQL), unlike
+        # all-float32 arithmetic with its double-rounding.
+        hist = np.bincount(arr % dim, minlength=dim).astype("float64")
+        n = np.linalg.norm(hist)
+        yield i, (hist / n if n else hist).astype("float32").tolist()
 
-        for pdf in it:
-            feats = []
-            for b in pdf[bin_col].values:
-                arr = np.frombuffer(bytes(b), dtype=np.uint8)
-                # float64 histogram/norm, one final round to float32:
-                # engine-reproducible (integer sums are exact in f64;
-                # the f64 quotient rounds to REAL identically in SQL),
-                # unlike all-float32 arithmetic with its double-rounding.
-                hist = np.bincount(arr % dim, minlength=dim).astype("float64")
-                n = np.linalg.norm(hist)
-                feats.append((hist / n if n else hist).astype("float32").tolist())
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "features": feats})
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, "doc_id bigint, features array<float>"
+    return map_rows(
+        df.select(id_col, bin_col), row, "doc_id bigint, features array<float>"
     )
 
 
@@ -175,56 +141,28 @@ def resize_images(
 ) -> DataFrame:
     """binary payload → resized binary payload + output dims.
 
-    Payloads that PIL can decode are really resized
-    (``Image.resize`` → PNG bytes); PNG payloads are really resized by
-    the stdlib codec even without PIL (decode → nearest-neighbor
-    resample → re-encode); everything else — the text-byte fixtures
-    always — takes the deterministic fake resample (width*height/64
-    bytes), preserving the contract: binary in, binary out, typed."""
+    PNG payloads are really resized by the stdlib codec (decode →
+    nearest-neighbor resample → re-encode); everything else — the
+    text-byte fixtures always — takes the deterministic fake resample
+    (width*height/64 bytes), preserving the contract: binary in, binary
+    out, typed."""
+    target = max(1, width * height // 64)
 
-    def _fake_resize(raw: bytes, target: int) -> bytes:
-        if not raw:
-            return b""
-        step = max(1, len(raw) // target)
-        return raw[::step][:target]
+    def resized(raw: bytes) -> bytes:
+        if _png.is_png(raw):
+            try:
+                return _png.encode(_png.resize_nearest(_png.decode(raw), width, height))
+            except _png.PngError:
+                pass
+        return raw[:: max(1, len(raw) // target)][:target]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        target = max(1, width * height // 64)
-        for pdf in it:
-            out = []
-            for b in pdf[bin_col].values:
-                raw = bytes(b)
-                if _HAVE_PIL:
-                    try:
-                        img = _PILImage.open(io.BytesIO(raw))
-                        buf = io.BytesIO()
-                        img.resize((width, height)).save(buf, format="PNG")
-                        out.append(buf.getvalue())
-                        continue
-                    except Exception:
-                        pass
-                if _png.is_png(raw):
-                    try:
-                        out.append(
-                            _png.encode(
-                                _png.resize_nearest(_png.decode(raw), width, height)
-                            )
-                        )
-                        continue
-                    except _png.PngError:
-                        pass
-                out.append(_fake_resize(raw, target))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].values,
-                    "payload": out,
-                    "width": width,
-                    "height": height,
-                }
-            )
+    def row(i, b):
+        yield i, resized(b), width, height
 
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, "doc_id bigint, payload binary, width int, height int"
+    return map_rows(
+        df.select(id_col, bin_col),
+        row,
+        "doc_id bigint, payload binary, width int, height int",
     )
 
 
@@ -240,25 +178,17 @@ def fabricate_png(
     q_png_pipeline), while the bytes on the wire are genuine
     zlib-compressed PNG scanlines, not text."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, n):
+        w, h = n % 13 + 4, n % 7 + 3
+        k = i % 251 + 1
+        img = (
+            (np.arange(w * h * 3, dtype=np.int64) * k % 256)
+            .astype(np.uint8)
+            .reshape(h, w, 3)
+        )
+        yield i, _png.encode(img)
 
-        for pdf in it:
-            pays = []
-            for i, n in zip(pdf[id_col].values, pdf[size_col].values):
-                w, h = int(n) % 13 + 4, int(n) % 7 + 3
-                k = int(i) % 251 + 1
-                img = (
-                    (np.arange(w * h * 3, dtype=np.int64) * k % 256)
-                    .astype(np.uint8)
-                    .reshape(h, w, 3)
-                )
-                pays.append(_png.encode(img))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": pays})
-
-    return df.select(id_col, size_col).mapInPandas(
-        batches, "doc_id bigint, payload binary"
-    )
+    return map_rows(df.select(id_col, size_col), row, "doc_id bigint, payload binary")
 
 
 def fabricate_jpeg(
@@ -273,50 +203,26 @@ def fabricate_jpeg(
     That makes the decoded pixels SQL-predictable (q_jpeg_pipeline)
     while the wire bytes are genuine Huffman-coded DCT data."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, n):
+        tw, th = n % 3 + 2, n % 2 + 2
+        t = np.arange(tw * th, dtype=np.int64).reshape(th, tw)
+        tiles = ((i * 7 + t * 13) % 128 * 2).astype(np.uint8)
+        img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
+        yield i, _jpeg.encode(img, quality=50)
 
-        for pdf in it:
-            pays = []
-            for i, n in zip(pdf[id_col].values, pdf[size_col].values):
-                tw, th = int(n) % 3 + 2, int(n) % 2 + 2
-                t = np.arange(tw * th, dtype=np.int64).reshape(th, tw)
-                tiles = ((int(i) * 7 + t * 13) % 128 * 2).astype(np.uint8)
-                img = np.kron(tiles, np.ones((8, 8), dtype=np.uint8))
-                pays.append(_jpeg.encode(img, quality=50))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": pays})
-
-    return df.select(id_col, size_col).mapInPandas(
-        batches, "doc_id bigint, payload binary"
-    )
+    return map_rows(df.select(id_col, size_col), row, "doc_id bigint, payload binary")
 
 
-def _decode_jpeg_pixels(payload: bytes):
-    """Full-pixel JPEG decode through the BEST available codec: PIL
-    (libjpeg — the codec you'd ship; ~100× the pure-numpy throughput)
-    when importable, the pure-stdlib baseline codec otherwise. On the
-    fabricated certification corpus the two are BIT-IDENTICAL — every
-    block is DC-only with a quantizer-divisible DC, so any conforming
-    decoder recovers the exact pixels (pinned by
-    tests/test_jpegcodec.py::test_pil_parity_on_fabricated_corpus
-    wherever PIL exists); the driver gate therefore certifies whichever
-    codec this seam picked. Bit parity between the two codecs is only
-    certified for the fabricated DC-only corpus; arbitrary real-world
-    JPEGs would decode environment-dependently, which is why only
-    fabricated payloads flow through the certificates. The PIL branch
-    is gated on ``is_jpeg`` so non-JPEG payloads raise exactly as the
-    stdlib path does (PIL would otherwise happily open PNG/BMP/GIF,
-    silently weakening decode_jpeg_pixel_stats' raise-on-non-JPEG
-    contract — ADVICE r6)."""
-    if _HAVE_PIL and _jpeg.is_jpeg(payload):
-        try:
-            import numpy as np
+_PIXEL_STATS_SCHEMA = (
+    "doc_id bigint, width int, height int, channels int, "
+    "format string, pixel_checksum bigint"
+)
 
-            img = _PILImage.open(io.BytesIO(payload))
-            return np.asarray(img)
-        except Exception:  # noqa: BLE001 — fall through to our codec
-            pass
-    return _jpeg.decode(payload)
+
+def _pixel_stats(i, img, fmt: str) -> tuple:
+    h, w = img.shape[:2]
+    c = int(img.shape[2]) if img.ndim == 3 else 1
+    return i, w, h, c, fmt, int(np.sum(img, dtype=np.int64) % 10007)
 
 
 def decode_jpeg_pixel_stats(
@@ -324,47 +230,12 @@ def decode_jpeg_pixel_stats(
 ) -> DataFrame:
     """REAL-decode certificate for JPEG: payload → dims, channels,
     format, and the exact pixel checksum (Σ decoded bytes mod 10007).
-    Non-JPEG payloads raise by design — this certifies the codec.
-    Decode goes through the best-codec seam (``_decode_jpeg_pixels``)."""
+    Non-JPEG payloads raise by design — this certifies the codec."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, b):
+        yield _pixel_stats(i, _jpeg.decode(b), "jpeg")
 
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col].values, pdf[bin_col].values):
-                img = _decode_jpeg_pixels(bytes(b))
-                h, w = img.shape[:2]
-                c = int(img.shape[2]) if img.ndim == 3 else 1
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "width": w,
-                        "height": h,
-                        "channels": c,
-                        "format": "jpeg",
-                        "pixel_checksum": int(
-                            np.sum(img, dtype=np.int64) % 10007
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "format",
-                    "pixel_checksum",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches,
-        "doc_id bigint, width int, height int, channels int, "
-        "format string, pixel_checksum bigint",
-    )
+    return map_rows(df.select(id_col, bin_col), row, _PIXEL_STATS_SCHEMA)
 
 
 def decode_pixel_stats(
@@ -377,44 +248,10 @@ def decode_pixel_stats(
     non-PNG payload raises, by design — this operator certifies the
     codec, not the fallback)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, b):
+        yield _pixel_stats(i, _png.decode(b), "png")
 
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col].values, pdf[bin_col].values):
-                img = _png.decode(bytes(b))
-                h, w = img.shape[:2]
-                c = int(img.shape[2]) if img.ndim == 3 else 1
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "width": w,
-                        "height": h,
-                        "channels": c,
-                        "format": "png",
-                        "pixel_checksum": int(
-                            np.sum(img, dtype=np.int64) % 10007
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "width",
-                    "height",
-                    "channels",
-                    "format",
-                    "pixel_checksum",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches,
-        "doc_id bigint, width int, height int, channels int, "
-        "format string, pixel_checksum bigint",
-    )
+    return map_rows(df.select(id_col, bin_col), row, _PIXEL_STATS_SCHEMA)
 
 
 def fabricate_wav(
@@ -429,23 +266,13 @@ def fabricate_wav(
     RIFF container."""
     from ..functions import wavcodec as _wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, n):
+        cnt = n % 500 + 64
+        k = i % 127 + 1
+        s = (np.arange(cnt, dtype=np.int64) * k % 4001 - 2000).astype(np.int16)
+        yield i, _wav.encode(s)
 
-        for pdf in it:
-            pays = []
-            for i, n in zip(pdf[id_col].values, pdf[size_col].values):
-                cnt = int(n) % 500 + 64
-                k = int(i) % 127 + 1
-                s = (np.arange(cnt, dtype=np.int64) * k % 4001 - 2000).astype(
-                    np.int16
-                )
-                pays.append(_wav.encode(s))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": pays})
-
-    return df.select(id_col, size_col).mapInPandas(
-        batches, "doc_id bigint, payload binary"
-    )
+    return map_rows(df.select(id_col, size_col), row, "doc_id bigint, payload binary")
 
 
 def decode_audio_stats(
@@ -459,36 +286,21 @@ def decode_audio_stats(
     certifies the codec, not a fallback)."""
     from ..functions import wavcodec as _wav
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col].values, pdf[bin_col].values):
-                samples, _sr = _wav.decode(bytes(b))
-                en = _wav.frame_energies(samples, frame=256)
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        "n_samples": int(samples.shape[0]),
-                        "n_frames": int(len(en)),
-                        "total_energy": int(en.sum()),
-                        "energy_f0": int(en[0]) if len(en) else 0,
-                        "n_zero_cross": _wav.zero_crossings(samples),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "n_samples",
-                    "n_frames",
-                    "total_energy",
-                    "energy_f0",
-                    "n_zero_cross",
-                ],
-            )
+    def row(i, b):
+        samples, _sr = _wav.decode(b)
+        en = _wav.frame_energies(samples, frame=256)
+        yield (
+            i,
+            int(samples.shape[0]),
+            len(en),
+            int(en.sum()),
+            int(en[0]) if len(en) else 0,
+            _wav.zero_crossings(samples),
+        )
 
-    return df.select(id_col, bin_col).mapInPandas(
-        batches,
+    return map_rows(
+        df.select(id_col, bin_col),
+        row,
         "doc_id bigint, n_samples bigint, n_frames bigint, "
         "total_energy bigint, energy_f0 bigint, n_zero_cross bigint",
     )
@@ -503,23 +315,16 @@ def frame_sample_plan(
     probe so the text-fixture oracle (q_frame_sample) is unchanged.
     Full frame EXTRACTION + decode is ``frame_sample`` below."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col].values, pdf[bin_col].values):
-                raw = bytes(b)
-                if _avi.is_avi(raw):
-                    n_frames = _avi.probe(raw)["n_frames"]
-                else:
-                    n_frames = len(raw) % 300 + 1  # fake probe
-                rows.extend(
-                    {"doc_id": int(i), "frame_idx": f}
-                    for f in range(0, n_frames, every_n)
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx"])
+    def row(i, b):
+        if _avi.is_avi(b):
+            n_frames = _avi.probe(b)["n_frames"]
+        else:
+            n_frames = len(b) % 300 + 1  # fake probe
+        for f in range(0, n_frames, every_n):
+            yield i, f
 
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, "doc_id bigint, frame_idx bigint"
+    return map_rows(
+        df.select(id_col, bin_col), row, "doc_id bigint, frame_idx bigint"
     )
 
 
@@ -535,32 +340,22 @@ def fabricate_avi(
     frames' pixels are SQL-predictable (q_mjpeg_pipeline) while the
     wire bytes are a genuine RIFF container of Huffman-coded frames."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, n):
+        tw, th = n % 3 + 2, n % 2 + 2
+        t = np.arange(tw * th, dtype=np.int64).reshape(th, tw)
+        frames = [
+            _jpeg.encode(
+                np.kron(
+                    ((i * 7 + f * 11 + t * 13) % 128 * 2).astype(np.uint8),
+                    np.ones((8, 8), dtype=np.uint8),
+                ),
+                quality=50,
+            )
+            for f in range(n % 4 + 2)
+        ]
+        yield i, _avi.encode(frames, tw * 8, th * 8)
 
-        for pdf in it:
-            pays = []
-            for i, n in zip(pdf[id_col].values, pdf[size_col].values):
-                tw, th = int(n) % 3 + 2, int(n) % 2 + 2
-                nf = int(n) % 4 + 2
-                t = np.arange(tw * th, dtype=np.int64).reshape(th, tw)
-                frames = []
-                for f in range(nf):
-                    tiles = (
-                        (int(i) * 7 + f * 11 + t * 13) % 128 * 2
-                    ).astype(np.uint8)
-                    frames.append(
-                        _jpeg.encode(
-                            np.kron(tiles, np.ones((8, 8), dtype=np.uint8)),
-                            quality=50,
-                        )
-                    )
-                pays.append(_avi.encode(frames, tw * 8, th * 8))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": pays})
-
-    return df.select(id_col, size_col).mapInPandas(
-        batches, "doc_id bigint, payload binary"
-    )
+    return map_rows(df.select(id_col, size_col), row, "doc_id bigint, payload binary")
 
 
 def frame_sample(
@@ -570,47 +365,23 @@ def frame_sample(
     every_n: int = 2,
 ) -> DataFrame:
     """REAL video frame sampling: parse the AVI container, take every
-    ``every_n``-th frame, decode each sampled frame through the JPEG
-    best-codec seam, and emit dims + the exact decoded pixel checksum
-    per sampled frame. Non-AVI payloads raise by design — this
-    certifies the container walk + per-frame codec, not a fallback.
-    One Arrow pass, no shuffle; at 100 TB the per-file unit is a video
-    whose frames decode independently inside the batch."""
+    ``every_n``-th frame, decode each sampled frame through the stdlib
+    JPEG codec, and emit dims + the exact decoded pixel checksum per
+    sampled frame. Non-AVI payloads raise by design — this certifies
+    the container walk + per-frame codec, not a fallback. One Arrow
+    pass, no shuffle; at 100 TB the per-file unit is a video whose
+    frames decode independently inside the batch."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def row(i, b):
+        frames, _info = _avi.decode(b)
+        for f in range(0, len(frames), every_n):
+            img = _jpeg.decode(frames[f])
+            h, w = img.shape[:2]
+            yield i, f, w, h, int(np.sum(img, dtype=np.int64) % 10007)
 
-        for pdf in it:
-            rows = []
-            for i, b in zip(pdf[id_col].values, pdf[bin_col].values):
-                frames, info = _avi.decode(bytes(b))
-                for f in range(0, len(frames), every_n):
-                    img = _decode_jpeg_pixels(frames[f])
-                    h, w = img.shape[:2]
-                    rows.append(
-                        {
-                            "doc_id": int(i),
-                            "frame_idx": f,
-                            "width": w,
-                            "height": h,
-                            "pixel_checksum": int(
-                                np.sum(img, dtype=np.int64) % 10007
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "frame_idx",
-                    "width",
-                    "height",
-                    "pixel_checksum",
-                ],
-            )
-
-    return df.select(id_col, bin_col).mapInPandas(
-        batches,
+    return map_rows(
+        df.select(id_col, bin_col),
+        row,
         "doc_id bigint, frame_idx bigint, width int, height int, "
         "pixel_checksum bigint",
     )
@@ -627,40 +398,32 @@ def perceptual_hash(
     integer comparison ``byte_j * k > Σbytes`` so no division enters —
     bit-for-bit reproducible in any engine.
 
-    Scale posture: one Arrow ``mapInPandas`` pass, no shuffle; the
+    Scale posture: one Arrow row-kernel pass, no shuffle; the
     downstream bucket/band joins are the same keyed equi-joins every
     other dedup family uses (hash cardinality grows with the corpus).
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for b in pdf[bin_col].values:
-                raw = bytes(b)
-                if _png.is_png(raw):
-                    # REAL pixel path: aHash over the decoded 8×8
-                    # grayscale thumbnail (resolution-invariant — the
-                    # actual perceptual key). Text fixtures never take
-                    # this branch, so oracles are unchanged.
-                    try:
-                        out.append(_png.ahash64(_png.decode(raw)))
-                        continue
-                    except _png.PngError:
-                        pass
-                if _jpeg.is_jpeg(raw):
-                    # REAL JPEG pixel path via the best-codec seam
-                    # (PIL when present, stdlib baseline otherwise)
-                    try:
-                        out.append(_png.ahash64(_decode_jpeg_pixels(raw)))
-                        continue
-                    except _jpeg.JpegError:
-                        pass
-                step = max(1, len(raw) // 64)
-                sel = raw[::step][:64]
-                k, total = len(sel), sum(sel)
-                out.append("".join("1" if v * k > total else "0" for v in sel))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "phash": out})
+    def phash(raw: bytes) -> str:
+        if _png.is_png(raw):
+            # REAL pixel path: aHash over the decoded 8×8 grayscale
+            # thumbnail (resolution-invariant — the actual perceptual
+            # key). Text fixtures never take this branch, so oracles
+            # are unchanged.
+            try:
+                return _png.ahash64(_png.decode(raw))
+            except _png.PngError:
+                pass
+        if _jpeg.is_jpeg(raw):
+            # REAL JPEG pixel path via the stdlib codec
+            try:
+                return _png.ahash64(_jpeg.decode(raw))
+            except _jpeg.JpegError:
+                pass
+        sel = raw[:: max(1, len(raw) // 64)][:64]
+        k, total = len(sel), sum(sel)
+        return "".join("1" if v * k > total else "0" for v in sel)
 
-    return df.select(id_col, bin_col).mapInPandas(
-        batches, "doc_id bigint, phash string"
-    )
+    def row(i, b):
+        yield i, phash(b)
+
+    return map_rows(df.select(id_col, bin_col), row, "doc_id bigint, phash string")

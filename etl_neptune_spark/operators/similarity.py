@@ -4,7 +4,7 @@ No reference counterpart (BASELINE.json north star). Four operators:
 
 - **cosine_neardup_pairs** — exact all-pairs cosine ≥ τ via a BLOCKED
   matrix product: rows are hashed into B blocks, every unordered block
-  pair becomes one ``applyInPandas`` group, and each group scores its
+  pair becomes one ``applyInArrow`` group, and each group scores its
   pair of sub-matrices with one numpy matmul. Replication factor is B
   per row (the classical blocked all-pairs layout); at 100 TB pick B
   so a block fits executor memory, and the shuffle stays linear in
@@ -41,10 +41,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from ..boundary import spread
 
 
 def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
@@ -76,11 +77,6 @@ def norm(a: Column | str, dim: int | None = None) -> Column:
 
 def cosine(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def _matrix(col: pd.Series) -> np.ndarray:
-    """Stack a pandas Series of array<float> rows into (n, dim) float64."""
-    return np.vstack(col.to_numpy()).astype(np.float64)
 
 
 def _arrow_matrix(arr, dtype=np.float64) -> np.ndarray:
@@ -118,44 +114,9 @@ def _unit(m: np.ndarray) -> np.ndarray:
 
 
 def _key_py(v):
-    """Grouping-key element from applyInArrow → Python native (the key
-    arrives as pyarrow scalars; applyInPandas passed natives)."""
+    """Grouping-key element from applyInArrow (a pyarrow scalar) →
+    Python native."""
     return v.as_py() if hasattr(v, "as_py") else v
-
-
-# Below this estimated input size the pre-kernel repartition is pure
-# fixed cost: the kernel finishes faster than the shuffle's round-trip
-# (measured r11 — a repartition(32) of ~2k vectors costs ~0.3 s per
-# call and the ANN lifecycle certs call the assign kernel many times
-# per run, while the kernel itself is <50 ms at that size). 16 MB of
-# scan bytes ≈ several hundred thousand vectors — the size where the
-# r10 A/B first showed the per-row win.
-_SPREAD_MIN_BYTES = 16 * 1024 * 1024
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Hash-repartition to full parallelism before a CPU-heavy Arrow
-    kernel (assign/encode): a 2M-row embeddings parquet arrives as ~8
-    file splits locally, serializing the per-row numpy work onto a
-    fraction of the cores — and every cap-split round that re-reads the
-    lineage pays it again. Gated on BOTH the current partition count
-    and the optimizer's size estimate (VERDICT r10 task 3): a real
-    cluster scan that already yields enough splits skips the extra
-    shuffle, and a tiny input (where the kernel is cheaper than the
-    shuffle it would buy) skips it too — right insurance at scale,
-    dead weight at certificate scale."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — estimate unavailable: keep the insurance
-        est = None
-    if est is not None and est < _SPREAD_MIN_BYTES:
-        return df
-    return df.repartition(target)
 
 
 def cosine_neardup_pairs(
@@ -531,7 +492,7 @@ def refined_sign_buckets(
     fit or ``max_split_rounds`` is hit.
 
     This is what makes ``lsh_topk`` safe beyond test scale: a
-    ``groupBy().applyInPandas`` group must fit one worker's memory, and
+    ``groupBy().applyInArrow`` group must fit one worker's memory, and
     a fixed ``bits`` family cannot guarantee that as the corpus grows
     (VERDICT r2 #6 — 4096 buckets over 100 TB is millions of rows per
     group). Each refinement round costs one bucket-count aggregate and
@@ -543,15 +504,8 @@ def refined_sign_buckets(
     if max_bucket_rows is not None:
         # A narrow parquet scan (a handful of large files, as local
         # fixtures and small clusters produce) would serialize every
-        # per-round corpus pass below onto those few tasks. Widening is
-        # one round-robin shuffle of just (id, vec) and fires only when
-        # the scan is narrower than the session shuffle width — at
-        # cluster scale the scan is already wide and this is a no-op.
-        n_shuffle = int(
-            emb.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-        if emb.rdd.getNumPartitions() < n_shuffle:
-            emb = emb.repartition(n_shuffle)
+        # per-round corpus pass below onto those few tasks.
+        emb = spread(emb)
     bucketed = emb.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
@@ -635,7 +589,7 @@ def lsh_topk(
     one numpy matmul per bucket. No crossJoin, no quadratic shuffle;
     random (not axis-aligned) hyperplanes keep bucket sizes balanced on
     sign-correlated corpora, and ``refined_sign_buckets`` re-bands any
-    bucket over ``max_bucket_rows`` so no pandas group can exceed the
+    bucket over ``max_bucket_rows`` so no kernel group can exceed the
     cap (modulo exact-duplicate vectors)."""
     bucketed = refined_sign_buckets(
         emb, id_col, vec_col, bits, dim, seed, max_bucket_rows
@@ -1224,10 +1178,17 @@ def _assign_with_centroids(
     route paid one ndarray object per row inbound and a per-row
     list re-serialization outbound, which is what bound the 2M-vector
     certificates at scan parallelism. Only (id, vec) cross the
-    boundary (guide §4: project before an opaque kernel). ``_spread``
-    (r10) is gated on the scan's partition count: on an under-filed
-    input the whole assign → cap-split → checkpoint lineage would
-    otherwise serialize through one task."""
+    boundary (guide §4: project before an opaque kernel). The input is
+    ``spread`` (r10): on an under-filed input the whole assign →
+    cap-split → checkpoint lineage would otherwise serialize through
+    one task. Below a 16 MiB size estimate the spread is skipped: the
+    repartition is then pure fixed cost, since the kernel finishes
+    faster than the shuffle's round-trip (measured r11 — a
+    repartition(32) of ~2k vectors costs ~0.3 s per call, and the ANN
+    lifecycle certs call this kernel many times per run, while the
+    kernel itself is <50 ms at that size). 16 MiB of scan bytes is
+    several hundred thousand vectors, the size where the r10 A/B first
+    showed the per-row win."""
     import pyarrow as pa
 
     bc = emb.sparkSession.sparkContext.broadcast(cents)
@@ -1262,7 +1223,14 @@ def _assign_with_centroids(
         ["vid long", "vec array<float>", *(f"{n} {extra[1]}" for n in extra_names)]
         + [f"{n} string" for n in key_names]
     )
-    return _spread(emb.select(id_col, vec_col)).mapInArrow(assign, schema)
+    emb = emb.select(id_col, vec_col)
+    try:
+        est = int(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — estimate unavailable: keep the insurance
+        est = None
+    if est is None or est >= 16 * 1024 * 1024:
+        emb = spread(emb)
+    return emb.mapInArrow(assign, schema)
 
 
 def ivf_build(
@@ -1726,14 +1694,17 @@ def mmr_rerank(
     can replay it step by step.
 
     Scale shape: candidates arrive pre-bounded (the certified ANN
-    top-C path); the greedy runs per query in ONE applyInPandas group
-    whose cost is C²·dim — request-sized work, never corpus-sized.
+    top-C path); the greedy runs per query in ONE applyInArrow group
+    whose cost is C²·dim — request-sized work, never corpus-sized; the
+    group's code vectors ingest zero-copy (``_arrow_matrix``).
     The only shuffles are the candidate join to its code vectors and
     the per-query grouping.
 
     ``candidates``: (query_id, neighbor_id, rel). ``corpus_codes``:
     (id_col, codes_col) int8 code arrays. Returns (query_id,
     pick_rank, vec_id, score10)."""
+    import pyarrow as pa
+
     lam_rem = 10 - lam_num
     cand = candidates.join(
         corpus_codes.select(
@@ -1742,10 +1713,10 @@ def mmr_rerank(
         "neighbor_id",
     )
 
-    def greedy(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["neighbor_id"].to_numpy()
-        rel = pdf["rel"].to_numpy().astype(np.int64)
-        mat = _matrix(pdf["c"]).astype(np.int64)
+    def greedy(key, t):
+        ids = t.column("neighbor_id").to_numpy()
+        rel = t.column("rel").to_numpy().astype(np.int64)
+        mat = _arrow_matrix(t.column("c"), dtype=np.int64)
         sims = mat @ mat.T  # C×C integer similarity
         picked: list[int] = []
         scores: list[int] = []
@@ -1765,16 +1736,15 @@ def mmr_rerank(
             picked.append(j)
             scores.append(int(obj[j]))
             remaining[j] = False
-        qid = int(pdf["query_id"].iloc[0])
-        return pd.DataFrame(
+        return pa.table(
             {
-                "query_id": np.int64(qid),
+                "query_id": np.full(len(picked), _key_py(key[0]), dtype=np.int64),
                 "pick_rank": np.arange(1, len(picked) + 1, dtype=np.int64),
                 "vec_id": ids[picked].astype(np.int64),
                 "score10": np.array(scores, dtype=np.int64),
             }
         )
 
-    return cand.groupBy("query_id").applyInPandas(
+    return cand.groupBy("query_id").applyInArrow(
         greedy, schema="query_id long, pick_rank long, vec_id long, score10 long"
     )

@@ -12,40 +12,45 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
-
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..boundary import map_batches, pylists
+
+
+def _misra_gries_add(counters: dict[str, int], text: str, k: int) -> None:
+    """Fold one text's words into a ``k``-counter Misra-Gries summary."""
+    for w in text.lower().split(" "):
+        if not w:
+            continue
+        if w in counters:
+            counters[w] += 1
+        elif len(counters) < k:
+            counters[w] = 1
+        else:
+            # decrement-all step; drop zeroed counters
+            dead = []
+            for key in counters:
+                counters[key] -= 1
+                if counters[key] == 0:
+                    dead.append(key)
+            for key in dead:
+                del counters[key]
+
 
 def _misra_gries_partition(
-    batches: Iterator[pd.DataFrame], text_col: str, k: int
-) -> Iterator[pd.DataFrame]:
+    batches: Iterator[pa.RecordBatch], k: int
+) -> Iterator[list]:
     """One Misra-Gries summary per Spark PARTITION (state carried
     across the partition's Arrow batches): at most ``k`` counters;
     every item with partition-local frequency > n_p/k survives."""
     counters: dict[str, int] = {}
-    for pdf in batches:
-        for text in pdf[text_col]:
-            if text is None:
-                continue
-            for w in text.lower().split(" "):
-                if not w:
-                    continue
-                if w in counters:
-                    counters[w] += 1
-                elif len(counters) < k:
-                    counters[w] = 1
-                else:
-                    # decrement-all step; drop zeroed counters
-                    dead = []
-                    for key in counters:
-                        counters[key] -= 1
-                        if counters[key] == 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counters[key]
-    yield pd.DataFrame({"word": sorted(counters)})
+    for batch in batches:
+        for text in batch.column(0).to_pylist():
+            if text is not None:
+                _misra_gries_add(counters, text, k)
+    yield [sorted(counters)]
 
 
 def heavy_hitters(
@@ -74,8 +79,10 @@ def heavy_hitters(
 
     k = max(1, math.ceil(1.0 / phi))
     spark = docs.sparkSession
-    candidates = docs.select(text_col).mapInPandas(
-        lambda it: _misra_gries_partition(it, text_col, k), "word string"
+    candidates = map_batches(
+        docs.select(text_col),
+        lambda it: _misra_gries_partition(it, k),
+        "word string",
     ).distinct()
 
     words = docs.select(
@@ -98,38 +105,18 @@ def heavy_hitters(
 
 
 def _group_mg_partition(
-    batches: Iterator[pd.DataFrame], group_col: str, text_col: str, k: int
-) -> Iterator[pd.DataFrame]:
+    batches: Iterator[pa.RecordBatch], k: int
+) -> Iterator[list]:
     """Per-(partition, group) Misra-Gries summaries — one k-counter
     sketch per group value seen in the partition (the group domain is
     dimension-sized, so partition memory is O(groups · k))."""
     sketches: dict[str, dict[str, int]] = {}
-    for pdf in batches:
-        for g, text in zip(pdf[group_col], pdf[text_col]):
-            if text is None or g is None:
-                continue
-            counters = sketches.setdefault(g, {})
-            for w in text.lower().split(" "):
-                if not w:
-                    continue
-                if w in counters:
-                    counters[w] += 1
-                elif len(counters) < k:
-                    counters[w] = 1
-                else:
-                    dead = []
-                    for key in counters:
-                        counters[key] -= 1
-                        if counters[key] == 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counters[key]
-    groups, words = [], []
-    for g in sorted(sketches):
-        for w in sorted(sketches[g]):
-            groups.append(g)
-            words.append(w)
-    yield pd.DataFrame({group_col: groups, "word": words})
+    for batch in batches:
+        for g, text in zip(*pylists(batch)):
+            if text is not None and g is not None:
+                _misra_gries_add(sketches.setdefault(g, {}), text, k)
+    pairs = [(g, w) for g in sorted(sketches) for w in sorted(sketches[g])]
+    yield [[g for g, _ in pairs], [w for _, w in pairs]]
 
 
 def group_heavy_hitters(
@@ -153,14 +140,11 @@ def group_heavy_hitters(
     import math
 
     k = max(1, math.ceil(1.0 / phi))
-    candidates = (
-        docs.select(group_col, text_col)
-        .mapInPandas(
-            lambda it: _group_mg_partition(it, group_col, text_col, k),
-            f"{group_col} string, word string",
-        )
-        .distinct()
-    )
+    candidates = map_batches(
+        docs.select(group_col, text_col),
+        lambda it: _group_mg_partition(it, k),
+        f"{group_col} string, word string",
+    ).distinct()
     words = docs.select(
         group_col,
         F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("word"),
@@ -236,36 +220,33 @@ def bloom_build(
 
     def build(batches):
         bits = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
             pos = _bloom_positions(
-                pdf[key_col].to_numpy(dtype=np.int64), m_bits, n_hash
+                batch.column(0).to_numpy(zero_copy_only=False), m_bits, n_hash
             ).ravel()
             np.bitwise_or.at(
                 bits,
                 (pos >> np.uint64(3)).astype(np.int64),
                 (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)),
             )
-        yield pd.DataFrame({"bm": [bits.tobytes()]})
+        yield [[bits.tobytes()]]
 
     def combine(batches):
         acc = np.zeros(n_bytes, dtype=np.uint8)
-        for pdf in batches:
-            for b in pdf["bm"]:
+        for batch in batches:
+            for b in batch.column(0).to_pylist():
                 acc |= np.frombuffer(b, dtype=np.uint8)
-        yield pd.DataFrame({"bm": [acc.tobytes()]})
+        yield [[acc.tobytes()]]
 
     # Combine stage: caps what the driver folds at 8 blobs no matter
     # how wide the build scan was (1000 executor partitions × 8 MB
     # would otherwise land on the driver).
-    parts = (
-        keys_df.select(key_col)
-        .mapInPandas(build, schema="bm binary")
-        .repartition(8)
-        .mapInPandas(combine, schema="bm binary")
-        .collect()  # bounded: <= 8 bitmap blobs (repartition(8) above)
-    )
+    bitmaps = map_batches(keys_df.select(key_col), build, "bm binary")
+    parts = map_batches(
+        bitmaps.repartition(8), combine, "bm binary"
+    ).collect()  # bounded: <= 8 bitmap blobs (repartition(8) above)
     bits = np.zeros(n_bytes, dtype=np.uint8)
     for r in parts:
         bits |= np.frombuffer(r["bm"], dtype=np.uint8)
@@ -273,7 +254,7 @@ def bloom_build(
 
 
 def bloom_might_contain(spark, bitmap: bytes, n_hash: int = BLOOM_N_HASH):
-    """Vectorized membership probe: a pandas UDF over the broadcast
+    """Vectorized membership probe: an Arrow UDF over the broadcast
     packed bitmap, for use as ``df.filter(udf(F.xxhash64(...)))``."""
     import numpy as np
 
@@ -282,9 +263,9 @@ def bloom_might_contain(spark, bitmap: bytes, n_hash: int = BLOOM_N_HASH):
         np.frombuffer(bitmap, dtype=np.uint8)
     )
 
-    @F.pandas_udf("boolean")
-    def might_contain(k: pd.Series) -> pd.Series:
-        pos = _bloom_positions(k.to_numpy(dtype=np.int64), m_bits, n_hash)
+    @F.arrow_udf("boolean")
+    def might_contain(k: pa.Array) -> pa.Array:
+        pos = _bloom_positions(k.to_numpy(zero_copy_only=False), m_bits, n_hash)
         arr = bc.value
         ok = np.ones(pos.shape[1], dtype=bool)
         for i in range(n_hash):
@@ -293,6 +274,6 @@ def bloom_might_contain(spark, bitmap: bytes, n_hash: int = BLOOM_N_HASH):
                 arr[(p >> np.uint64(3)).astype(np.int64)]
                 >> (p & np.uint64(7)).astype(np.uint8)
             ) & np.uint8(1) == 1
-        return pd.Series(ok)
+        return pa.array(ok)
 
     return might_contain

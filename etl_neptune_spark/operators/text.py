@@ -347,7 +347,8 @@ def decontaminate(
     carries hit rows only (tiny under a clean corpus). Never joins
     corpus-to-corpus.
     """
-    from .dedup import _spread, word_shingles
+    from ..boundary import spread
+    from .dedup import word_shingles
 
     def shingled(df: DataFrame) -> DataFrame:
         return df.select(
@@ -357,7 +358,7 @@ def decontaminate(
 
     bench = shingled(eval_docs).select("shingle").distinct()
     return (
-        shingled(_spread(docs))
+        shingled(spread(docs))
         .join(F.broadcast(bench), "shingle")
         .groupBy(id_col)
         .agg(F.count_distinct("shingle").alias("n_hit_shingles"))

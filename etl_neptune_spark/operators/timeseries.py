@@ -33,8 +33,12 @@ implemented with Spark-native plans that stay linear at 100 TB:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..boundary import map_batches
 
 
 def asof_join(
@@ -273,6 +277,67 @@ def sessionize(
     )
 
 
+def _keyed_scan(
+    df: DataFrame,
+    key_col: str,
+    ts_col: str,
+    val_col: str,
+    id_col: str,
+    state_cols: tuple[str, ...],
+    seed,
+    step,
+) -> DataFrame:
+    """The keyed sequential-recurrence scan ``ewma`` and ``holt`` share:
+    ONE keyed repartition + in-partition (key, ts, id) sort, then a
+    streaming ``mapInArrow`` pass that carries (key, state) across
+    Arrow batch boundaries. ``seed(x)`` starts a key's state tuple at
+    its first value, ``step(state, x)`` folds in each later one; every
+    row emits its state. A null value folds in as NaN and every NaN
+    leaves as null."""
+
+    def kernel(batches):
+        # Rows arrive (key, ts, id)-sorted within the partition and a
+        # key never spans partitions, so the carry resets exactly at key
+        # boundaries. Keys compare as Python values (None == None), so a
+        # null-key run is one group, matching the grouped form this
+        # kernel replaced, instead of restarting every row.
+        started, ck, state = False, None, ()
+        for batch in batches:
+            keys, ids, vals = (
+                batch.column(c).to_pylist() for c in (key_col, id_col, val_col)
+            )
+            xs, cols = [], [[] for _ in state_cols]
+            for k, v in zip(keys, vals):
+                x = math.nan if v is None else float(v)
+                if started and k == ck:
+                    state = step(state, x)
+                else:
+                    started, ck, state = True, k, seed(x)
+                xs.append(x)
+                for col, sv in zip(cols, state):
+                    col.append(sv)
+            yield [keys, ids, xs, *cols]
+
+    ordered = (
+        df.select(key_col, ts_col, id_col, val_col)
+        .repartition(key_col)
+        # nulls LAST to match the pandas sort (na_position='last') of
+        # the grouped kernel this replaced — a null-ts row folds in
+        # after the real series, never as the seed
+        .sortWithinPartitions(
+            F.col(key_col).asc_nulls_last(),
+            F.col(ts_col).asc_nulls_last(),
+            F.col(id_col).asc_nulls_last(),
+        )
+    )
+    return map_batches(
+        ordered,
+        kernel,
+        f"{key_col} bigint, {id_col} bigint, {val_col} double, "
+        + ", ".join(f"{c} double" for c in state_cols),
+    )
+
+
 def ewma(
     df: DataFrame,
     key_col: str,
@@ -286,78 +351,32 @@ def ewma(
 
     A sequential recurrence has no shuffle-free SQL form (each row
     depends on ALL its predecessors), so this is the documented
-    Python-boundary case (SCALE.md §Python boundary policy): ONE keyed
-    repartition + in-partition sort, then a STREAMING ``mapInPandas``
-    scan that carries the last (key, ewma) across Arrow batch
-    boundaries. Versus the per-group ``applyInPandas`` form this
-    removes the per-key kernel-invocation overhead (one Python call
-    per Arrow batch, not per key — the difference is 10² – 10⁴× fewer
-    calls on real key cardinalities) and never materializes a whole
-    group: state is ONE scalar per in-flight key, so memory is bounded
-    by the batch size even if the hottest key holds a billion rows —
-    strictly better than group-at-a-time at 100 TB. The recurrence is
-    evaluated with the explicit op order ``alpha·x + (1−alpha)·y`` so
-    an oracle computing the identical IEEE doubles sequence (e.g. a
-    recursive CTE) matches bit-for-bit — pandas' own ``ewm`` is NOT
-    used because its kernel associates the update differently
-    (``y + alpha·(x−y)``), which rounds differently.
+    Python-boundary case (SCALE.md §Python boundary policy): the keyed
+    streaming ``mapInArrow`` scan of ``_keyed_scan``. Versus a per-group
+    ``applyInArrow`` form this removes the per-key kernel-invocation
+    overhead (one Python call per Arrow batch, not per key — the
+    difference is 10² – 10⁴× fewer calls on real key cardinalities)
+    and never materializes a whole group: state is ONE scalar per
+    in-flight key, so memory is bounded by the batch size even if the
+    hottest key holds a billion rows — strictly better than
+    group-at-a-time at 100 TB. The recurrence is evaluated with the
+    explicit op order ``alpha·x + (1−alpha)·y`` so an oracle computing
+    the identical IEEE doubles sequence (e.g. a recursive CTE) matches
+    bit-for-bit — pandas' own ``ewm`` is NOT used because its kernel
+    associates the update differently (``y + alpha·(x−y)``), which
+    rounds differently.
     """
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    out_fields = f"{key_col} bigint, {id_col} bigint, {val_col} double, ewma double"
     a = float(alpha)
     b = 1.0 - a
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # rows arrive (key, ts, id)-sorted within the partition; a key
-        # never spans partitions, so the carry resets exactly at key
-        # boundaries. Keys compare as OBJECTS (None == None holds), so
-        # a null-key run behaves as one group — matching the grouped
-        # form this kernel replaced — instead of NaN != NaN restarting
-        # the recurrence every row.
-        started = False
-        ck: object = None
-        ck_null = False
-        cy = 0.0
-        for pdf in batches:
-            keys = pdf[key_col].to_numpy(dtype=object)
-            knull = pdf[key_col].isna().to_numpy()
-            vals = pdf[val_col].to_numpy(dtype="float64")
-            out = np.empty_like(vals)
-            for i in range(len(vals)):
-                same = started and (
-                    (knull[i] and ck_null)
-                    or (not knull[i] and not ck_null and keys[i] == ck)
-                )
-                if same:
-                    cy = a * vals[i] + b * cy
-                else:
-                    started, ck, ck_null, cy = True, keys[i], bool(knull[i]), vals[i]
-                out[i] = cy
-            yield pd.DataFrame(
-                {
-                    key_col: keys,
-                    id_col: pdf[id_col].to_numpy(),
-                    val_col: vals,
-                    "ewma": out,
-                }
-            )
-
-    return (
-        df.select(key_col, ts_col, id_col, val_col)
-        .repartition(key_col)
-        # nulls LAST to match the pandas sort (na_position='last') of
-        # the grouped kernel this replaced — a null-ts row folds in
-        # after the real series, never as the seed
-        .sortWithinPartitions(
-            F.col(key_col).asc_nulls_last(),
-            F.col(ts_col).asc_nulls_last(),
-            F.col(id_col).asc_nulls_last(),
-        )
-        .mapInPandas(_kernel, out_fields)
+    return _keyed_scan(
+        df,
+        key_col,
+        ts_col,
+        val_col,
+        id_col,
+        ("ewma",),
+        lambda x: (x,),
+        lambda s, x: (a * x + b * s[0],),
     )
 
 
@@ -378,67 +397,27 @@ def holt(
         trend_t = β·(level_t − level_{t−1}) + (1−β)·trend_{t−1}
 
     Same Python-boundary posture as ``ewma`` (a two-state sequential
-    recurrence has no shuffle-free SQL form): ONE keyed repartition +
-    in-partition sort, then a streaming ``mapInPandas`` scan carrying
-    (key, level, trend) across Arrow batch boundaries — one Python
-    call per batch, state one pair of scalars per in-flight key. The
-    update is evaluated in the EXACT op order written above so a
-    recursive-CTE oracle computing the identical IEEE double sequence
-    matches bit-for-bit (the q_ewma certification recipe)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    out_fields = (
-        f"{key_col} bigint, {id_col} bigint, {val_col} double, "
-        "level double, trend double"
-    )
+    recurrence has no shuffle-free SQL form): the keyed streaming
+    ``mapInArrow`` scan of ``_keyed_scan``, carrying (key, level,
+    trend) across Arrow batch boundaries — one Python call per batch,
+    state one pair of scalars per in-flight key. The update is
+    evaluated in the EXACT op order written above so a recursive-CTE
+    oracle computing the identical IEEE double sequence matches
+    bit-for-bit (the q_ewma certification recipe)."""
     a, b = float(alpha), 1.0 - float(alpha)
     g, d = float(beta), 1.0 - float(beta)
 
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        started = False
-        ck: object = None
-        ck_null = False
-        clv = ctr = 0.0
-        for pdf in batches:
-            keys = pdf[key_col].to_numpy(dtype=object)
-            knull = pdf[key_col].isna().to_numpy()
-            vals = pdf[val_col].to_numpy(dtype="float64")
-            out_l = np.empty_like(vals)
-            out_t = np.empty_like(vals)
-            for i in range(len(vals)):
-                same = started and (
-                    (knull[i] and ck_null)
-                    or (not knull[i] and not ck_null and keys[i] == ck)
-                )
-                if same:
-                    prev = clv
-                    clv = a * vals[i] + b * (clv + ctr)
-                    ctr = g * (clv - prev) + d * ctr
-                else:
-                    started, ck, ck_null = True, keys[i], bool(knull[i])
-                    clv, ctr = vals[i], 0.0
-                out_l[i] = clv
-                out_t[i] = ctr
-            yield pd.DataFrame(
-                {
-                    key_col: keys,
-                    id_col: pdf[id_col].to_numpy(),
-                    val_col: vals,
-                    "level": out_l,
-                    "trend": out_t,
-                }
-            )
+    def step(s, x):
+        level = a * x + b * (s[0] + s[1])
+        return level, g * (level - s[0]) + d * s[1]
 
-    return (
-        df.select(key_col, ts_col, id_col, val_col)
-        .repartition(key_col)
-        .sortWithinPartitions(
-            F.col(key_col).asc_nulls_last(),
-            F.col(ts_col).asc_nulls_last(),
-            F.col(id_col).asc_nulls_last(),
-        )
-        .mapInPandas(_kernel, out_fields)
+    return _keyed_scan(
+        df,
+        key_col,
+        ts_col,
+        val_col,
+        id_col,
+        ("level", "trend"),
+        lambda x: (x, 0.0),
+        step,
     )

@@ -8,10 +8,10 @@ DuckDB-checkable SQL.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..boundary import spread
 from ..operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -36,25 +36,6 @@ from ..operators.text import (
 from ..sources import load_table
 from .registry import register
 
-
-def _spread_for_codec(
-    spark: SparkSession,
-    df: DataFrame,
-    cols: tuple[str, str] = ("doc_id", "n_chars"),
-) -> DataFrame:
-    """Spread a CPU-bound codec stage across every core.
-
-    The media-codec certificates are compute-bound Arrow passes; their
-    input parquet is tiny in BYTES, so Spark's split planner hands the
-    whole table to ONE partition and the codec runs serially (the
-    entire 29.5 s q_jpeg_pipeline sf1 cost — VERDICT r5). The
-    projection happens BEFORE the round-robin exchange so the shuffle
-    genuinely moves only the two small codec-input columns, never the
-    text column (ADVICE r6); at 100 TB real input splits provide this
-    parallelism for free and the repartition keys stay proportional to
-    executor count."""
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.select(*cols).repartition(n)
 
 # DuckDB fragment: distinct word-3-gram shingles of lower(text).
 _SH_SQL = """
@@ -408,7 +389,7 @@ register(
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary media column → typed metadata via mapInPandas (decode
+    """Binary media column → typed metadata via an Arrow row kernel (decode
     step is a deterministic stub; plumbing is real — see
     operators.multimodal)."""
     from ..operators.multimodal import decode_image_meta, with_payload
@@ -446,7 +427,11 @@ def q_png_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle."""
     from ..operators.multimodal import decode_pixel_stats, fabricate_png
 
-    docs = _spread_for_codec(spark, load_table(spark, sf_dir, "documents"))
+    # The input is tiny in bytes, so it lands in one split and the codec
+    # would run serially: spread the two codec-input columns (projected
+    # first, never the text) across every core. q_jpeg_pipeline,
+    # q_mjpeg_pipeline and q_wav_pipeline read the same input.
+    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     return decode_pixel_stats(fabricate_png(docs))
 
 
@@ -493,7 +478,7 @@ def q_jpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow passes, zero shuffle."""
     from ..operators.multimodal import decode_jpeg_pixel_stats, fabricate_jpeg
 
-    docs = _spread_for_codec(spark, load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     return decode_jpeg_pixel_stats(fabricate_jpeg(docs))
 
 
@@ -538,7 +523,7 @@ def q_mjpeg_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode end to end. Two chained Arrow passes, zero shuffle."""
     from ..operators.multimodal import fabricate_avi, frame_sample
 
-    docs = _spread_for_codec(spark, load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     return frame_sample(fabricate_avi(docs), every_n=2)
 
 
@@ -1889,7 +1874,7 @@ def q_wav_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode bit-exactly. Two chained Arrow passes, zero shuffle."""
     from ..operators.multimodal import decode_audio_stats, fabricate_wav
 
-    docs = _spread_for_codec(spark, load_table(spark, sf_dir, "documents"))
+    docs = spread(load_table(spark, sf_dir, "documents").select("doc_id", "n_chars"))
     return decode_audio_stats(fabricate_wav(docs))
 
 

@@ -2548,7 +2548,7 @@ def q_sql_surface4(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared ``floor(x/100.0)`` step), so the certificate is value-exact
     with no float tolerance. The depth cap bounds the iterative
     executor's rounds; on an unbounded-depth production recurrence the
-    keyed ``mapInPandas`` EWMA kernel (operators.timeseries.ewma) is
+    keyed ``mapInArrow`` EWMA kernel (operators.timeseries.ewma) is
     the 100 TB path, and this surface is the cross-engine semantics
     pin for it."""
     from ..sources import register_views
@@ -2947,7 +2947,7 @@ register(
 
 def q_pandas_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-aggregate pandas UDF (the UDAF surface, SURVEY §2.9's
-    third Python API beside scalar pandas_udf and the UDTF): a numpy
+    third Python API beside the scalar Arrow UDF and the UDTF): a numpy
     median over exact integer cents per group — Arrow ships each
     group's column once, the kernel is one vectorized reduction, and
     the statistic is EXACTLY certifiable (a median of BIGINTs is x.0

@@ -1128,7 +1128,7 @@ EWMA_ALPHA = 0.5
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA of event values (α = 0.5, seeded at the first
     observation) — the sequential-recurrence operator
-    (operators.timeseries.ewma): one keyed Arrow ``applyInPandas``,
+    (operators.timeseries.ewma): one keyed streaming ``mapInArrow`` scan,
     certified bit-exact against a recursive-CTE oracle that evaluates
     the identical IEEE double sequence."""
     return ewma(

@@ -22,7 +22,7 @@ fetching, and the join-back are all declarative plan steps:
   (they fan OUT to the fact-sized metric values), so the single
   ranking window over the catalog is bounded.
 - The FETCH is a seam: any ``DataFrame → DataFrame`` that appends a
-  ``value`` column — a real connector would mapInPandas each batch
+  ``value`` column — a real connector would mapInArrow each batch
   partition into client calls (one task per 500-query batch, the
   API's own unit of parallelism). ``deterministic_fetch`` is the
   offline stand-in: values derived arithmetically from the query row
@@ -123,7 +123,7 @@ def deterministic_fetch(
     (reproducible in any engine, which is how the oracle certifies the
     adapter end-to-end). Rows matching ``missing`` get NULL — the
     "no datapoints in the window" case the reference maps to ``-1.0``.
-    A real connector replaces only this function: mapInPandas over
+    A real connector replaces only this function: mapInArrow over
     ``batch_id`` partitions, one client call per batch.
     """
     value = (

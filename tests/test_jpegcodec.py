@@ -108,13 +108,13 @@ def test_phash_over_real_jpeg_bytes(spark):
 
 
 def test_pil_parity_on_fabricated_corpus():
-    """Best-codec seam certification (VERDICT r5 task 5): on the
-    fabricated corpus every block is DC-only with a quantizer-divisible
-    DC, so ANY conforming JPEG decoder must recover the exact pixels —
-    PIL (libjpeg) and the stdlib baseline codec are therefore
-    bit-identical there, which is what lets _decode_jpeg_pixels pick
-    PIL when present while the gate certifies either. Skips where PIL
-    is not installed (this container); runs green wherever it is."""
+    """Cross-decoder check of the stdlib codec (VERDICT r5 task 5): on
+    the fabricated corpus every block is DC-only with a
+    quantizer-divisible DC, so ANY conforming JPEG decoder must recover
+    the exact pixels. PIL (libjpeg) and the stdlib baseline codec must
+    therefore be bit-identical there. The engine itself always decodes
+    with the stdlib codec; this test compares the two codecs directly.
+    Skips where PIL is not installed."""
     pytest.importorskip("PIL")
     import io
 
@@ -297,8 +297,9 @@ def test_real_baseline_jpeg_golden_pil_parity():
     blocks); the AC block must sit within the ISO 10918-2 decoder
     conformance bound (±1/pixel) of the spec-math golden — libjpeg's
     fixed-point islow IDCT is allowed that much, so demanding bit
-    parity on AC pixels would over-claim what the spec promises.
-    Skips where PIL is absent (this container); green either way."""
+    parity on AC pixels would over-claim what the spec promises. The
+    engine never decodes with PIL; this compares the codecs directly.
+    Skips where PIL is not installed."""
     pytest.importorskip("PIL")
     import io
 

@@ -69,3 +69,34 @@ def test_driver_collect_sites_carry_stated_bounds():
         "driver collect without a stated `# bounded:` marker — state the "
         f"bound or distribute the step: {offenders}"
     )
+
+
+# The only pandas crossings the package keeps: each certifies the
+# pandas API itself (SCALE.md §Python boundary policy). Every other
+# Python kernel crosses as Arrow (``etl_neptune_spark.boundary``).
+PANDAS_CROSSINGS_ALLOWED = {
+    ("etl_neptune_spark/streaming/stateful.py", "applyInPandasWithState"): 1,
+    ("etl_neptune_spark/plans/relational.py", "pandas_udf"): 2,
+}
+
+
+def test_python_boundary_is_arrow():
+    """Scan the package for ``mapInPandas`` / ``applyInPandas`` (and
+    its ``WithState`` form) / ``pandas_udf`` uses, as calls, decorators
+    or attribute reads: only the two certified sites above may remain."""
+    names = ("mapInPandas", "applyInPandas", "applyInPandasWithState", "pandas_udf")
+    found: dict[tuple[str, str], int] = {}
+    for path in glob.glob(
+        os.path.join(REPO, "etl_neptune_spark", "**", "*.py"), recursive=True
+    ):
+        rel = os.path.relpath(path, REPO)
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.Name):
+                name = node.id
+            else:
+                continue
+            if name in names:
+                found[(rel, name)] = found.get((rel, name), 0) + 1
+    assert found == PANDAS_CROSSINGS_ALLOWED

@@ -271,7 +271,7 @@ def test_cdc_and_linkage_plan_shapes(plans):
     assert "CartesianProduct" not in pe
     assert "BroadcastNestedLoopJoin" not in pe
     # span dedup: digest-keyed agg + join-back; no row-at-a-time Python
-    # (the kernel is Arrow mapInPandas), no cartesian.
+    # (the kernel is an Arrow mapInArrow row kernel), no cartesian.
     ps = plans("q_span_dedup")
     assert "BatchEvalPython" not in ps
     assert "CartesianProduct" not in ps

@@ -7,8 +7,9 @@ scale anti-patterns the 100 TB posture forbids:
   quadratic join slipped past the equi-join design (the one sanctioned
   BNLJ is q_join_theta's ≤8-row literal build side).
 - ``SinglePartition`` windows — a global window serializes the stage.
-- ``BatchEvalPython`` — row-at-a-time Python in a hot path (Arrow
-  ``ArrowEvalPython``/``mapInPandas`` are the sanctioned Python paths).
+- ``BatchEvalPython`` — row-at-a-time Python in a hot path (the Arrow
+  nodes ``ArrowEvalPython``/``MapInArrow``/``FlatMapGroupsInArrow`` are
+  the sanctioned Python paths).
 - Scans with no pushed filters on queries that filter (informational).
 
 Usage: ``python tools/audit_plans.py [sf_dir]`` → prints a per-query
@@ -32,7 +33,7 @@ ALLOW = {
     # Python UDTFs evaluate via BatchEvalPythonUDTF by design — this is
     # the engine's DOCUMENTED slow-path exception (recursive JSON walk,
     # SURVEY §2.9), demonstrating the table-function API surface; the
-    # production-volume form of the same walk is the Arrow pandas UDF
+    # production-volume form of the same walk is the Arrow UDF
     # (q_json_refs, ArrowEvalPython).
     "q_json_refs_udtf": {"BatchEvalPython"},
     # driver-cap union-find path materializes a local result: no
