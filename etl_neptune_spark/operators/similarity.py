@@ -1435,10 +1435,12 @@ def ivf_query_persisted(
         r["cell"] for r in probe_q.select("cell").distinct().collect()  # bounded: <= n_clusters + split cells
     )
     corpus = store.read(spark, "codes")
-    # Partition type inference reads an all-numeric cell column back
-    # as int (string once any split cell like '3|0110' exists); filter
-    # on the RAW column type — a cast under the filter would defeat
-    # partition pruning — then normalize to string for the cogroup.
+    # A snapshot with a recorded schema reads the cell column back as
+    # the string it was written as; one without (older stores) goes
+    # through partition type inference, which reads an all-numeric
+    # cell column as int. Filter on the RAW column type — a cast under
+    # the filter would defeat partition pruning — then normalize to
+    # string for the cogroup.
     if prune and isinstance(corpus.schema["cell"].dataType, StringType):
         corpus = corpus.filter(F.col("cell").isin(probed))
     elif prune:

@@ -12,12 +12,15 @@ Every step is a certified operator (merge_keyed, gc_keep, tag
 precedence coalesce, join-update, reset-then-degrade); this module
 only sequences them — like the reference's ``run_etl``, which is pure
 step order. All steps are single declarative plans; the only driver
-action is the final store write per table.
+action is the final store write per table. The per-run ``stats`` are
+counted by ``Observation``s on those writes, as the reference
+accumulates them from the upserts it is already doing (etl_aws:1410,
+2060-2064) — the graph is never queried a second time to count.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.gc import gc_keep
@@ -37,8 +40,9 @@ def run_aws_snapshot_etl(
 ) -> dict[str, int]:
     """One full snapshot run: upserts → enrichment → metrics →
     GC → health. Returns per-step counts (the reference's ``stats``
-    accumulation, §2.4 A16). Idempotent: a second identical run leaves
-    the store byte-identical."""
+    accumulation, §2.4 A16), observed during the writes. Idempotent: a
+    second identical run leaves the store byte-identical, also when it
+    republishes the same ``version`` its own plan reads."""
     region = load_table(spark, sf_dir, "region")
     nation = load_table(spark, sf_dir, "nation")
     customer = load_table(spark, sf_dir, "customer")
@@ -167,12 +171,20 @@ def run_aws_snapshot_etl(
     )
 
     edges = contains.unionByName(located_in)
-    store.write(final, "nodes", version)
-    store.write(edges, "infra_edges", version)
-
-    return {
-        "nodes": final.count(),
-        "edges": edges.count(),
-        "degraded": final.filter(F.col("health_status") == "degraded").count(),
-        "with_metrics": final.filter(F.col("order_count").isNotNull()).count(),
-    }
+    node_stats, edge_stats = Observation(), Observation()
+    store.write(
+        final.observe(
+            node_stats,
+            F.count(F.lit(1)).alias("nodes"),
+            F.count_if(F.col("health_status") == "degraded").alias("degraded"),
+            F.count("order_count").alias("with_metrics"),
+        ),
+        "nodes",
+        version,
+    )
+    store.write(
+        edges.observe(edge_stats, F.count(F.lit(1)).alias("edges")),
+        "infra_edges",
+        version,
+    )
+    return {**node_stats.get, **edge_stats.get}

@@ -10,7 +10,7 @@ physical-id dimension → MERGE edges.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.json_refs import extract_json_refs
@@ -53,7 +53,9 @@ def run_cfn_etl(
 ) -> int:
     """Extract declared edges and MERGE them into the store keyed
     (src, dst, label) — get-or-create, evidence last-write-wins
-    (upsert_cfn_edge, neptune_etl_cfn.py:140-165)."""
+    (upsert_cfn_edge, neptune_etl_cfn.py:140-165). Returns the stored
+    edge count, observed during the write, so re-running the same
+    ``version`` never re-reads the snapshot the publish replaced."""
     incoming = extract_declared_deps(templates, physical_ids)
     existing = store.read(spark, "cfn_edges")
     if existing is None:
@@ -64,5 +66,8 @@ def run_cfn_etl(
         keys=["src_stack", "dst_physical_id", "edge_label"],
         update_cols=["evidence"],
     )
-    store.write(merged, "cfn_edges", version)
-    return merged.count()
+    stats = Observation()
+    store.write(
+        merged.observe(stats, F.count(F.lit(1)).alias("edges")), "cfn_edges", version
+    )
+    return stats.get["edges"]

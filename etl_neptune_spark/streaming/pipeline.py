@@ -202,14 +202,45 @@ def _edge_agg(flows: DataFrame) -> DataFrame:
 
 
 def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
-    """The ``foreachBatch`` body: MERGE nodes, MERGE edges (ST3/ST5),
-    TTL-GC stale nodes (ST4), commit one store version per batch id."""
+    """The ``foreachBatch`` body: MERGE edges (ST3/ST5) and publish
+    them, then MERGE nodes, TTL-GC stale ones (ST4), join-update their
+    degree metrics and publish them — one store version per batch id.
+
+    Publish order is edges then nodes, and the degrees are computed
+    from the just-published edges snapshot (the reference's order too:
+    it queries the upserted graph for degrees, neptune_etl_deepflow.py
+    :536-617), so the nodes write does not re-run the edge merge. A
+    replay after a crash between the two publishes re-merges the batch
+    into its own published edges, which last-write-wins makes a no-op.
+    """
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
+        # One pass over the batch for both the emptiness test and the
+        # TTL horizon.
+        rows, horizon = batch.agg(F.count(F.lit(1)), F.max("ts")).first()
+        if rows == 0:
             return
         spark = batch.sparkSession
         edges_inc = _edge_agg(batch).withColumn("active", F.lit(True))
+        empty_edges = spark.createDataFrame([], edges_inc.schema)
+        edges_cur = store.read(spark, "edges") or empty_edges
+        edges_merged = merge_keyed(
+            edges_cur,
+            edges_inc,
+            keys=["src", "dst", "protocol"],
+            update_cols=[
+                "calls",
+                "avg_duration_ms",
+                "error_count",
+                "last_seen",
+                "active",
+            ],
+        )
+        # ST5: edges in this batch carry active=true via the merge;
+        # absent edges keep their previous active + last_seen stamp
+        # (implicit decay — the reference has no edge GC, downstream
+        # consumers filter on last_seen).
+        store.write(edges_merged, "edges", batch_id)
 
         nodes_inc = (
             batch.select(F.col("src").cast("string").alias("name"), "ts")
@@ -241,36 +272,17 @@ def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
         # ST4: retention — OWN label only (per-writer GC, like the
         # reference's per-label anti-joins): Microservice nodes unseen
         # past the TTL are dropped; other writers' labels pass through.
-        horizon = batch.agg(F.max("ts")).first()[0]
         nodes_final = nodes_merged.filter(
             (F.col("label") != "Microservice")
             | (F.col("last_seen") >= F.lit(horizon) - F.expr(f"INTERVAL {NODE_TTL}"))
         )
 
-        empty_edges = spark.createDataFrame([], edges_inc.schema)
-        edges_cur = store.read(spark, "edges") or empty_edges
-        edges_merged = merge_keyed(
-            edges_cur,
-            edges_inc,
-            keys=["src", "dst", "protocol"],
-            update_cols=[
-                "calls",
-                "avg_duration_ms",
-                "error_count",
-                "last_seen",
-                "active",
-            ],
-        )
-        # ST5: edges in this batch carry active=true via the merge;
-        # absent edges keep their previous active + last_seen stamp
-        # (implicit decay — the reference has no edge GC, downstream
-        # consumers filter on last_seen).
-
         # §3.1 step 8: per-service degree metrics join-updated onto the
         # nodes (the reference's batch_fetch_dependency_and_update,
-        # neptune_etl_deepflow.py:536-617) — computed from the MERGED
-        # edge state so decayed-but-alive edges still count.
-        degrees = degree_metrics(edges_merged, weight="calls").select(
+        # neptune_etl_deepflow.py:536-617) — computed from the published
+        # MERGED edge state so decayed-but-alive edges still count.
+        edges_pub = store.read_version(spark, "edges", batch_id)
+        degrees = degree_metrics(edges_pub, weight="calls").select(
             F.col("node").cast("string").alias("name"),
             "out_degree",
             "in_degree",
@@ -290,9 +302,7 @@ def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
             nodes_final.filter(F.col("label") != "Microservice"),
             allowMissingColumns=True,
         )
-
         store.write(nodes_deg, "nodes", batch_id)
-        store.write(edges_merged, "edges", batch_id)
 
     return apply
 

@@ -21,6 +21,14 @@ pointer file via atomic rename. Properties:
   write-version / prune) is what a ``MERGE INTO``-backed impl would
   keep.
 
+- **Schema recorded with the snapshot**: every published directory
+  (``v=N`` and ``delta=N``) carries a ``_schema.json`` — the Spark
+  schema its writer had, written into the staging dir before the
+  rename, so it is atomic with the version. Readers pass it to
+  ``spark.read.schema(...)`` and launch no parquet schema-inference
+  job; Spark's file listing skips ``_``-prefixed files. A directory
+  without the file (written before it existed) is read by inference.
+
 At 100 TB the same layout holds with the table partitioned by
 ``label`` (+ bucketed by key for shuffle-free merges); old versions
 are pruned after each flip.
@@ -28,10 +36,60 @@ are pruned after each flip.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+SCHEMA_FILE = "_schema.json"
+
+
+def _record_schema(path: str, schema: T.StructType) -> None:
+    """Write ``schema`` next to the parquet files in ``path``. Spark
+    itself moves partition columns last and makes every field nullable
+    on read, so the writer's schema is recorded as is."""
+    with open(os.path.join(path, SCHEMA_FILE), "w") as f:
+        f.write(schema.json())
+
+
+def _read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Read published directories with their recorded schema when they
+    all carry the same one; otherwise let Spark infer it."""
+    recorded = set()
+    for p in paths:
+        try:
+            with open(os.path.join(p, SCHEMA_FILE)) as f:
+                recorded.add(f.read())
+        except FileNotFoundError:
+            recorded.add(None)
+    reader = spark.read
+    if len(recorded) == 1 and None not in recorded:
+        reader = reader.schema(T.StructType.fromJson(json.loads(recorded.pop())))
+    return reader.parquet(*paths)
+
+
+def _arrow_to_spark(t) -> T.DataType | None:
+    """The Spark type parquet inference gives a pyarrow-written column
+    of type ``t``, for the plain types whose mapping is one-to-one;
+    None for any other (timestamps, unsigned, dictionaries, …)."""
+    import pyarrow as pa
+
+    if pa.types.is_list(t):
+        inner = _arrow_to_spark(t.value_type)
+        return None if inner is None else T.ArrayType(inner)
+    return {
+        pa.int8(): T.ByteType(),
+        pa.int16(): T.ShortType(),
+        pa.int32(): T.IntegerType(),
+        pa.int64(): T.LongType(),
+        pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(),
+        pa.bool_(): T.BooleanType(),
+        pa.string(): T.StringType(),
+        pa.binary(): T.BinaryType(),
+    }.get(t)
 
 
 class GraphStore:
@@ -91,8 +149,8 @@ class GraphStore:
         ]
         if not deltas:
             return base
-        ddf = spark.read.parquet(
-            *[os.path.join(self._table_dir(table), f"delta={d}") for d in deltas]
+        ddf = _read_parquet(
+            spark, [os.path.join(self._table_dir(table), f"delta={d}") for d in deltas]
         )
         return ddf if base is None else base.unionByName(ddf)
 
@@ -101,7 +159,13 @@ class GraphStore:
     ) -> DataFrame | None:
         """Time travel: read one retained snapshot version (None if it
         was pruned or never written) — the Delta/Iceberg `VERSION AS OF`
-        surface for this store. ``keep_versions`` bounds how far back."""
+        surface for this store. ``keep_versions`` bounds how far back.
+
+        The version's ``_schema.json`` supplies the schema, so the read
+        launches no inference job. A partition column then reads back
+        with the type it was written with (a string ``cell`` stays
+        string even when every value is numeric); a directory without
+        the file falls back to inference, where it would read as int."""
         path = os.path.join(self._table_dir(table), f"v={version}")
         if not os.path.isdir(path):
             # Crash-window fallback (VERDICT r8 task 4): a kill between
@@ -114,7 +178,7 @@ class GraphStore:
             if not os.path.isdir(retired):
                 return None
             path = retired
-        return spark.read.parquet(path)
+        return _read_parquet(spark, [path])
 
     def versions(self, table: str) -> list[int]:
         """Retained snapshot versions, oldest first. A crash-window
@@ -167,6 +231,7 @@ class GraphStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
+        _record_schema(staging, df.schema)
         self._publish_staged(table, version, staging, partition_by)
 
     def write_arrow(self, tbl, table: str, version: int) -> None:
@@ -180,7 +245,9 @@ class GraphStore:
         job per table otherwise (~0.5 s each, ×3 per index build).
         Callers pass a ``pyarrow.Table`` whose schema matches what the
         Spark reader expects; ``spark.read.parquet`` sees the same
-        types it would from a Spark-written snapshot."""
+        types it would from a Spark-written snapshot. The schema is
+        recorded only when every column has a one-to-one Arrow→Spark
+        mapping (``_arrow_to_spark``); otherwise reads infer it."""
         import pyarrow.parquet as pq
 
         tdir = self._table_dir(table)
@@ -188,6 +255,10 @@ class GraphStore:
         shutil.rmtree(staging, ignore_errors=True)
         os.makedirs(staging)
         pq.write_table(tbl, os.path.join(staging, "part-00000.parquet"))
+        types = [_arrow_to_spark(f.type) for f in tbl.schema]
+        if None not in types:
+            fields = [T.StructField(f.name, t) for f, t in zip(tbl.schema, types)]
+            _record_schema(staging, T.StructType(fields))
         self._publish_staged(table, version, staging, ())
 
     def _publish_staged(
@@ -252,6 +323,7 @@ class GraphStore:
         staging = os.path.join(tdir, f".staging-delta={version}")
         shutil.rmtree(staging, ignore_errors=True)
         df.write.mode("overwrite").parquet(staging)
+        _record_schema(staging, df.schema)
         # Same crash-safe publish order as ``write``: the retired copy
         # survives until the staged dir lands (a replayed batch rewrites
         # this delta anyway, but the ordering keeps every cut readable).

@@ -85,7 +85,7 @@ def test_aws_pipeline_gc_drops_ghosts(spark, sf_dir, tmp_path):
     )
 
 
-def test_cfn_pipeline_extracts_and_merges(spark, tmp_path):
+def _cfn_inputs(spark):
     tpl = {
         "Resources": {
             "Fn": {
@@ -108,6 +108,11 @@ def test_cfn_pipeline_extracts_and_merges(spark, tmp_path):
         ],
         "logical_id string, physical_id string, target_label string",
     )
+    return templates, dims
+
+
+def test_cfn_pipeline_extracts_and_merges(spark, tmp_path):
+    templates, dims = _cfn_inputs(spark)
     store = GraphStore(str(tmp_path / "store"))
     n = run_cfn_etl(spark, templates, dims, store, version=0)
     edges = {tuple(r) for r in store.read(spark, "cfn_edges").collect()}
@@ -119,6 +124,31 @@ def test_cfn_pipeline_extracts_and_merges(spark, tmp_path):
 
     # idempotent re-run
     assert run_cfn_etl(spark, templates, dims, store, version=1) == 2
+
+
+def test_aws_same_version_replay_keeps_stats_and_rows(spark, sf_dir, tmp_path):
+    """Re-running a pipeline at the version it already published (a
+    retried run): its merge READS that version while the publish
+    replaces it, so the returned counts must come from the write
+    itself — a count after the publish would re-read files the publish
+    just deleted. Same stats, same stored rows."""
+    store = GraphStore(str(tmp_path / "store"))
+    stats = run_aws_snapshot_etl(spark, sf_dir, store, version=0)
+    nodes = _snapshot(spark, store, "nodes")
+    edges = _snapshot(spark, store, "infra_edges")
+    assert run_aws_snapshot_etl(spark, sf_dir, store, version=0) == stats
+    assert _snapshot(spark, store, "nodes") == nodes
+    assert _snapshot(spark, store, "infra_edges") == edges
+
+
+def test_cfn_same_version_replay_keeps_count_and_rows(spark, tmp_path):
+    """The cfn form of the same-version replay above."""
+    templates, dims = _cfn_inputs(spark)
+    store = GraphStore(str(tmp_path / "store"))
+    assert run_cfn_etl(spark, templates, dims, store, version=0) == 2
+    edges = _snapshot(spark, store, "cfn_edges")
+    assert run_cfn_etl(spark, templates, dims, store, version=0) == 2
+    assert _snapshot(spark, store, "cfn_edges") == edges
 
 
 def test_multi_writer_convergence_st6(spark, sf_dir, tmp_path):

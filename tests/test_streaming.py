@@ -1225,3 +1225,113 @@ def test_compact_crash_before_delta_removal_rereads_and_reruns(spark, tmp_path):
     store.compact(spark, "codes", version=3)
     assert store.delta_versions("codes") == []
     assert {(r.k, r.val) for r in store.read(spark, "codes").collect()} == merged
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _schema_frame(spark, rows):
+    import datetime as dt
+
+    ts = dt.datetime(2024, 1, 1, 12, 0)
+    return spark.createDataFrame(
+        [(k, lab, k * 1.5, ts, [float(k)], k % 2 == 0) for k, lab in rows],
+        "k long, label string, w double, seen timestamp, vec array<double>, even boolean",
+    )
+
+
+def _assert_recorded_read(spark, store, table, path, read=None):
+    """The store's read of ``path`` carries a recorded schema, launches
+    no job, and equals Spark's own inferred read of the directory in
+    names, types, column order and rows."""
+    assert os.path.isfile(os.path.join(path, "_schema.json")), path
+    start = _next_job(spark)
+    got = read() if read is not None else store.read(spark, table)
+    assert _next_job(spark) == start
+    inferred = spark.read.parquet(path)
+    assert got.schema == inferred.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, inferred.collect()))
+
+
+@pytest.mark.parametrize("partition_by", [(), ("label",)])
+def test_store_write_reads_with_recorded_schema(spark, tmp_path, partition_by):
+    store = GraphStore(str(tmp_path / "store"))
+    df = _schema_frame(spark, [(1, "A"), (2, "B"), (3, "A")])
+    store.write(df, "nodes", 0, partition_by=partition_by)
+    vdir = os.path.join(store.root, "nodes", "v=0")
+    _assert_recorded_read(spark, store, "nodes", vdir)
+    _assert_recorded_read(
+        spark, store, "nodes", vdir, lambda: store.read_version(spark, "nodes", 0)
+    )
+
+
+def test_store_deltas_and_compaction_read_with_recorded_schema(spark, tmp_path):
+    """append_delta + read (base and deltas, each with its recorded
+    schema) and compact (layout-preserving rewrite) launch no inference
+    job and read back what inference would."""
+    store = GraphStore(str(tmp_path / "store"))
+    store.write(_schema_frame(spark, [(1, "A")]), "t", 0, partition_by=("label",))
+    store.append_delta(_schema_frame(spark, [(2, "B")]), "t", 1)
+    store.append_delta(_schema_frame(spark, [(3, "A")]), "t", 2)
+    tdir = os.path.join(store.root, "t")
+
+    start = _next_job(spark)
+    got = store.read(spark, "t")
+    assert _next_job(spark) == start
+    inferred = spark.read.parquet(os.path.join(tdir, "v=0")).unionByName(
+        spark.read.parquet(*[os.path.join(tdir, f"delta={d}") for d in (1, 2)])
+    )
+    assert got.schema == inferred.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, inferred.collect()))
+
+    store.compact(spark, "t", 2)
+    assert store.delta_versions("t") == []
+    _assert_recorded_read(spark, store, "t", os.path.join(tdir, "v=2"))
+
+
+def test_store_write_arrow_records_schema_only_when_exact(spark, tmp_path):
+    """write_arrow records the Arrow→Spark schema for plain types (the
+    IVF state tables' int32 / list<float32> / string) and leaves
+    anything else, such as a timestamp, to inference."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    store = GraphStore(str(tmp_path / "store"))
+    tbl = pa.table(
+        {
+            "cell": pa.array([0, 1], pa.int32()),
+            "centroid": pa.array([[0.5, 1.0], [2.0, 3.0]], pa.list_(pa.float32())),
+            "tag": pa.array(["a", None], pa.string()),
+            "n": pa.array([1, 2], pa.int64()),
+        }
+    )
+    store.write_arrow(tbl, "centroids", 0)
+    _assert_recorded_read(
+        spark, store, "centroids", os.path.join(store.root, "centroids", "v=0")
+    )
+
+    stamped = pa.table({"ts": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us"))})
+    store.write_arrow(stamped, "stamped", 0)
+    vdir = os.path.join(store.root, "stamped", "v=0")
+    assert not os.path.exists(os.path.join(vdir, "_schema.json"))
+    assert store.read(spark, "stamped").schema == spark.read.parquet(vdir).schema
+
+
+def test_store_reads_versions_without_recorded_schema(spark, tmp_path):
+    """Directories published before schemas were recorded (no
+    ``_schema.json``) still read, by inference — a store on disk
+    outlives the code that wrote it. Mixed deltas fall back too."""
+    store = GraphStore(str(tmp_path / "store"))
+    store.write(_schema_frame(spark, [(1, "A"), (2, "B")]), "t", 0, partition_by=("label",))
+    store.append_delta(_schema_frame(spark, [(3, "A")]), "t", 1)
+    store.append_delta(_schema_frame(spark, [(4, "B")]), "t", 2)
+    tdir = os.path.join(store.root, "t")
+    for d in ("v=0", "delta=1"):
+        os.remove(os.path.join(tdir, d, "_schema.json"))
+
+    base = store.read_version(spark, "t", 0)
+    assert base.schema == spark.read.parquet(os.path.join(tdir, "v=0")).schema
+    assert sorted(r.k for r in base.collect()) == [1, 2]
+    assert sorted(r.k for r in store.read(spark, "t").collect()) == [1, 2, 3, 4]
