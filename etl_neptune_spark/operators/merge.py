@@ -127,3 +127,21 @@ def merge_keyed(
     out += [F.coalesce(f"__ex_{c}", f"__inc_{c}").alias(c) for c in create_only_cols]
     out += [F.col(f"__ex_{c}").alias(c) for c in preserve_cols]
     return joined.select(*out)
+
+
+def reset_then_degrade(nodes: DataFrame, alarms: DataFrame) -> DataFrame:
+    """ST7 health join-update (neptune_etl_aws.py:2068-2111): every node
+    resets to ``healthy``, then the nodes keyed by an ``(label, name)``
+    alarm row flip to ``degraded`` — two sequential join-updates, the
+    reference's Step-16 shape. Shared by the aws snapshot run and the
+    streaming batch apply (``streaming.pipeline.apply_health_alarms``)."""
+    flagged = alarms.select("label", "name").distinct().withColumn("_alarm", F.lit(True))
+    return (
+        nodes.withColumn("health_status", F.lit("healthy"))
+        .join(flagged, ["label", "name"], "left")
+        .withColumn(
+            "health_status",
+            F.when(F.col("_alarm"), F.lit("degraded")).otherwise(F.col("health_status")),
+        )
+        .drop("_alarm")
+    )

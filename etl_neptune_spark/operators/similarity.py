@@ -21,6 +21,12 @@ No reference counterpart (BASELINE.json north star). Four operators:
   on a bounded driver-side sample (the FAISS recipe), distributed cell
   assignment, nprobe-cell exact re-ranking.
 
+Each vector mechanism has one copy, shared by the operators here:
+``_block_pairs`` (the blocked all-pairs layout and scorer),
+``_topk_kernel`` (the in-group cosine top-k; IVF-PQ's ADC scan is a
+different distance and keeps its own), ``with_sign_bucket`` (the
+engine's sign keying pass) and ``_cap_split`` (the cap-split loop).
+
 Why numpy and not SQL expressions: a 64-term unrolled dot product in a
 join condition or filter lands in one generated-code method past
 HotSpot's JIT size threshold — measured ~3 µs/pair, interpreted — and
@@ -41,9 +47,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..boundary import spread
 
@@ -87,8 +95,6 @@ def _arrow_matrix(arr, dtype=np.float64) -> np.ndarray:
     ndarray object per row before ``np.vstack`` copies each — that
     per-row conversion is what bound the ANN certificates' sf100 walls
     at scan parallelism (>40 min at 2M vectors, SCALING.md)."""
-    import pyarrow as pa
-
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
@@ -119,47 +125,35 @@ def _key_py(v):
     return v.as_py() if hasattr(v, "as_py") else v
 
 
-def cosine_neardup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    min_cosine: float = 0.4,
-    dim: int | None = None,
-    n_blocks: int = 8,
+def _block_pairs(
+    rows: DataFrame,
+    n_blocks: int,
+    min_cosine: float,
+    emit,
+    schema: str,
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
-    """All pairs with cosine ≥ threshold (id_a < id_b, rounded 4 dp).
-
-    Exact. Blocked all-pairs: each row is replicated to the ``n_blocks``
-    unordered block pairs it participates in; one numpy matmul scores
-    each group. ``dim`` is unused here (numpy infers it) but kept for
-    signature parity with the SQL helpers."""
-    nb = n_blocks
+    """The one blocked all-pairs layout and scorer, shared by
+    ``cosine_neardup_pairs`` and ``semantic_dedup``. ``rows`` carry
+    (vid, vec) plus the ``by`` columns; each row is hashed into one of
+    ``n_blocks`` blocks and replicated to the ``n_blocks`` unordered
+    block pairs it takes part in, and one ``applyInArrow`` group per
+    (``by``, block pair) scores its two sub-matrices with one numpy
+    matmul: float64 cosines rounded half-even to 4 dp, unordered pairs,
+    each raw slice normalized once. ``emit(lo, hi, cos)`` turns a
+    group's pairs at cosine ≥ ``min_cosine`` (``lo < hi`` ids) into the
+    caller's output table, typed by ``schema``."""
     keyed = (
-        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        .withColumn("blk", F.pmod(F.hash(F.col("vid")), F.lit(nb)))
-        .withColumn("other", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
+        rows.withColumn("blk", F.pmod(F.hash(F.col("vid")), F.lit(n_blocks)))
+        .withColumn("other", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
         .withColumn("g1", F.least("blk", "other"))
         .withColumn("g2", F.greatest("blk", "other"))
         # keep one copy per unordered block pair (blk==other appears once)
         .filter((F.col("blk") != F.col("other")) | (F.col("other") == F.col("g2")))
     )
 
-    import pyarrow as parrow
-
-    empty = parrow.table(
-        {
-            "id_a": parrow.array([], parrow.int64()),
-            "id_b": parrow.array([], parrow.int64()),
-            "cos": parrow.array([], parrow.float64()),
-        }
-    )
-
     def score(key, t):
-        # applyInArrow (r10): zero-copy vector ingest; same rounded
-        # float64 scores and the same unordered-pair semantics (the
-        # raw matrix is sliced BEFORE the single _unit pass, exactly
-        # as the pandas form normalized each slice).
-        g1, g2 = (_key_py(key[0]), _key_py(key[1]))
+        g1, g2 = _key_py(key[-2]), _key_py(key[-1])
         ids = t.column("vid").to_numpy()
         m = _arrow_matrix(t.column("vec"))
         if g1 == g2:
@@ -171,24 +165,41 @@ def cosine_neardup_pairs(
             blk = t.column("blk").to_numpy()
             ma, mb = blk == g1, blk == g2
             if not ma.any() or not mb.any():
-                return empty
+                none = np.empty(0, np.int64)
+                return emit(none, none, np.empty(0))
             ia, ib = ids[ma], ids[mb]
             c = np.round(_unit(m[ma]) @ _unit(m[mb]).T, 4)
             ii, jj = np.where(c >= min_cosine)
             a_ids, b_ids = ia[ii], ib[jj]
-        cos = c[ii, jj]
-        lo = np.minimum(a_ids, b_ids).astype(np.int64)
-        hi = np.maximum(a_ids, b_ids).astype(np.int64)
-        return parrow.table(
-            {
-                "id_a": parrow.array(lo),
-                "id_b": parrow.array(hi),
-                "cos": parrow.array(cos),
-            }
+        return emit(
+            np.minimum(a_ids, b_ids).astype(np.int64),
+            np.maximum(a_ids, b_ids).astype(np.int64),
+            c[ii, jj],
         )
 
-    return keyed.groupBy("g1", "g2").applyInArrow(
-        score, schema="id_a long, id_b long, cos double"
+    return keyed.groupBy(*by, "g1", "g2").applyInArrow(score, schema=schema)
+
+
+def cosine_neardup_pairs(
+    emb: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    min_cosine: float = 0.4,
+    dim: int | None = None,
+    n_blocks: int = 8,
+) -> DataFrame:
+    """All pairs with cosine ≥ threshold (id_a < id_b, rounded 4 dp).
+
+    Exact. Blocked all-pairs (``_block_pairs``): each row is replicated
+    to the ``n_blocks`` unordered block pairs it participates in; one
+    numpy matmul scores each group. ``dim`` is unused here (numpy
+    infers it) but kept for signature parity with the SQL helpers."""
+    return _block_pairs(
+        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+        n_blocks,
+        min_cosine,
+        lambda lo, hi, cos: pa.table({"id_a": lo, "id_b": hi, "cos": cos}),
+        "id_a long, id_b long, cos double",
     )
 
 
@@ -213,58 +224,23 @@ def semantic_dedup(
 
     Scale: cost is Σ_c |c|²/blocks — the cluster count grows with the
     corpus so |c| stays bounded; each (cluster, block-pair) group is one
-    Arrow-batched numpy matmul, and the verdict needs one distinct on
-    the (small) dropped-id set plus one hash anti-join back. No
-    corpus×corpus stage exists.
+    Arrow-batched numpy matmul (``_block_pairs``), and the verdict
+    needs one distinct on the (small) dropped-id set plus one hash
+    anti-join back. No corpus×corpus stage exists.
     """
-    nb = n_blocks
-    keyed = (
+    drops = _block_pairs(
         emb.select(
             F.col(cluster_col).alias("grp"),
             F.col(id_col).alias("vid"),
             F.col(vec_col).alias("vec"),
-        )
-        .withColumn("blk", F.pmod(F.hash(F.col("vid")), F.lit(nb)))
-        .withColumn("other", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
-        .withColumn("g1", F.least("blk", "other"))
-        .withColumn("g2", F.greatest("blk", "other"))
-        .filter((F.col("blk") != F.col("other")) | (F.col("other") == F.col("g2")))
-    )
-
-    import pyarrow as parrow
-
-    _empty_vid = parrow.table({"vid": parrow.array([], parrow.int64())})
-
-    def dropped(key, t):
-        # applyInArrow (r10): zero-copy vector ingest, same rounded
-        # float64 scores, same keep-first verdict.
-        g1, g2 = _key_py(key[1]), _key_py(key[2])
-        ids = t.column("vid").to_numpy()
-        m = _arrow_matrix(t.column("vec"))
-        if g1 == g2:
-            u = _unit(m)
-            c = np.round(u @ u.T, 4)
-            ii, jj = np.where(np.triu(c >= min_cosine, k=1))
-            a_ids, b_ids = ids[ii], ids[jj]
-        else:
-            blk = t.column("blk").to_numpy()
-            ma, mb = blk == g1, blk == g2
-            if not ma.any() or not mb.any():
-                return _empty_vid
-            ia, ib = ids[ma], ids[mb]
-            c = np.round(_unit(m[ma]) @ _unit(m[mb]).T, 4)
-            ii, jj = np.where(c >= min_cosine)
-            a_ids, b_ids = ia[ii], ib[jj]
+        ),
+        n_blocks,
+        min_cosine,
         # id_a < id_b and the LARGER id is the one dropped (keep-first).
-        return parrow.table(
-            {"vid": parrow.array(np.maximum(a_ids, b_ids).astype(np.int64))}
-        )
-
-    drops = (
-        keyed.groupBy("grp", "g1", "g2")
-        .applyInArrow(dropped, schema="vid long")
-        .dropDuplicates(["vid"])
-    )
+        lambda lo, hi, cos: pa.table({"vid": hi}),
+        "vid long",
+        by=("grp",),
+    ).dropDuplicates(["vid"])
     return (
         emb.select(id_col, cluster_col)
         .join(drops, emb[id_col] == drops["vid"], "left")
@@ -276,71 +252,114 @@ def semantic_dedup(
     )
 
 
-def _masked_topk_kernel(k: int, with_label: bool):
-    """Arrow-batch scorer shared by ``brute_force_topk`` and
-    ``lsh_hard_negatives``: one numpy matmul scores a query block
-    against a candidate block, self-pairs are masked, same-label pairs
-    are masked when ``with_label`` (SQL three-valued ``!=`` semantics:
-    a NULL on EITHER side drops the pair), and each query keeps its
-    block-local top-k by (cos desc, neighbor_id asc) on the rounded
-    score — a superset of the global top-k, so the ranking window
-    above it is exact."""
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cos double"
 
-    import pyarrow as pa
 
-    empty = pa.table(
-        {
-            "query_id": pa.array([], pa.int64()),
-            "neighbor_id": pa.array([], pa.int64()),
-            "cos": pa.array([], pa.float64()),
-        }
-    )
+def _topk_table(qs: list, ns: list, cs: list, rs: list | None = None):
+    """A top-k kernel's output from per-query numpy slices (empty when
+    no query kept a candidate); ``rs`` adds the ``rank`` column."""
+    cols = {
+        "query_id": np.concatenate(qs or [np.empty(0, np.int64)]),
+        "neighbor_id": np.concatenate(ns or [np.empty(0, np.int64)]),
+        "cos": np.concatenate(cs or [np.empty(0)]),
+    }
+    if rs is not None:
+        cols["rank"] = np.concatenate(rs or [np.empty(0, np.int32)])
+    return pa.table(cols)
+
+
+def _topk_kernel(
+    k: int,
+    query: tuple[str, str] = ("vid", "vec"),
+    label: bool = False,
+    ranked: bool = False,
+):
+    """The one exact in-group cosine top-k: an ``applyInArrow`` cogroup
+    kernel ``(key, queries, candidates)`` shared by ``brute_force_topk``,
+    ``lsh_hard_negatives``, ``lsh_topk`` (its bucket is both sides),
+    ``ivf_topk`` and ``ivf_query_persisted``. ``query`` names the query
+    side's id and vector columns; candidates are (vid, vec).
+
+    One numpy matmul scores the group's queries against its candidates
+    (float64, rounded half-even to 4 dp). Identical ids are masked (the
+    self-query convention); with ``label``, so is every pair whose
+    ``lbl`` is equal or NULL on EITHER side — SQL's three-valued
+    ``q.label != c.label``, not numpy equality (which only excludes
+    both-NULL pairs). Each query keeps its top-k by (cos desc,
+    neighbor_id asc) on the rounded score. Where a group is one block
+    or probed cell of the candidates, that is a superset of the global
+    top-k and ``_cogroup_topk``'s window makes it exact; ``ranked``
+    emits the 1-based position as ``rank`` instead, for a group that
+    holds each query's whole candidate set.
+
+    Vectors of both sides ingest zero-copy (``_arrow_matrix``) and the
+    output assembles from concatenated numpy slices, with no per-row
+    Python objects."""
+    qid, qvec = query
 
     def score(key, qt, ct):
-        # applyInArrow (r10, VERDICT r9 task 1): zero-copy vector
-        # ingest + numpy-slice output assembly — same rounded float64
-        # scores, same masks, same (cos desc, id asc) lexsort.
         if qt.num_rows == 0 or ct.num_rows == 0:
-            return empty
-        qi, ci = qt.column("vid").to_numpy(), ct.column("vid").to_numpy()
-        c = np.round(
-            _unit(_arrow_matrix(qt.column("vec")))
-            @ _unit(_arrow_matrix(ct.column("vec"))).T,
-            4,
-        )
+            return _topk_table([], [], [], [] if ranked else None)
+        qi, ci = qt.column(qid).to_numpy(), ct.column("vid").to_numpy()
+        qu = _unit(_arrow_matrix(qt.column(qvec)))
+        # A bucket passed as both sides (lsh_topk) normalizes once, and
+        # numpy takes its symmetric-product path for u @ u.T.
+        cu =qu if ct is qt else _unit(_arrow_matrix(ct.column("vec")))
+        c = np.round(qu @ cu.T, 4)
         c[qi[:, None] == ci[None, :]] = -np.inf  # exclude self
-        if with_label:
+        if label:
             qlc, clc = qt.column("lbl"), ct.column("lbl")
             ql = qlc.to_numpy(zero_copy_only=False)
             cl = clc.to_numpy(zero_copy_only=False)
             c[ql[:, None] == cl[None, :]] = -np.inf  # exclude same class
-            # SQL three-valued "q.label != c.label" also drops any pair
-            # where EITHER label is NULL — match that, not numpy equality
-            # (which only excludes both-NULL pairs).
             qn = qlc.is_null().to_numpy(zero_copy_only=False)
             cn = clc.is_null().to_numpy(zero_copy_only=False)
             c[qn[:, None] | cn[None, :]] = -np.inf
         kk = min(k, c.shape[1])
-        out_q, out_n, out_c = [], [], []
+        out_q, out_n, out_c, out_r = [], [], [], []
         for r in range(c.shape[0]):
-            # top-k by (cos desc, neighbor_id asc) on the ROUNDED score
             order = np.lexsort((ci, -c[r]))[:kk]
             sel = order[np.isfinite(c[r, order])]
             if len(sel):
                 out_q.append(np.full(len(sel), qi[r], dtype=np.int64))
                 out_n.append(ci[sel].astype(np.int64))
                 out_c.append(c[r, sel])
-        if not out_q:
-            return empty
-        return pa.table(
-            {
-                "query_id": pa.array(np.concatenate(out_q)),
-                "neighbor_id": pa.array(np.concatenate(out_n)),
-                "cos": pa.array(np.concatenate(out_c)),
-            }
-        )
+                out_r.append(np.arange(1, len(sel) + 1, dtype=np.int32))
+        return _topk_table(out_q, out_n, out_c, out_r if ranked else None)
 
     return score
+
+
+def _cogroup_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    by: list[str],
+    k: int,
+    scorer,
+    dedup: bool = False,
+) -> DataFrame:
+    """Cogroup queries with corpus on ``by``, score each group with
+    ``scorer`` (a kernel emitting (query_id, neighbor_id, cos)), and
+    rank the survivors globally by (cos desc, neighbor_id asc). The
+    group-local top-k of every block or probed cell is a superset of
+    the global top-k over them, so the window pass is exact. ``dedup``
+    drops repeated (query, neighbor) pairs first, for query sides that
+    can reach one candidate through two groups (IVF probes)."""
+    from pyspark.sql import Window
+
+    candidates = (
+        queries.groupBy(*by)
+        .cogroup(corpus.groupBy(*by))
+        .applyInArrow(scorer, schema=_TOPK_SCHEMA)
+    )
+    if dedup:
+        candidates = candidates.dropDuplicates(["query_id", "neighbor_id"])
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        candidates.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos", "rank")
+    )
 
 
 def brute_force_topk(
@@ -366,8 +385,6 @@ def brute_force_topk(
     contrastive training (per anchor, the most similar vectors of a
     DIFFERENT class); the masking happens inside the same matmul
     kernel, so the cost is unchanged."""
-    from pyspark.sql import Window
-
     nb = n_blocks
     lbl = [F.col(exclude_label_col).alias("lbl")] if exclude_label_col else []
     c_blocks = corpus.select(
@@ -379,19 +396,12 @@ def brute_force_topk(
     q_rep = queries.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), *lbl
     ).withColumn("blk", F.explode(F.sequence(F.lit(0), F.lit(nb - 1))))
-
-    score = _masked_topk_kernel(k, with_label=exclude_label_col is not None)
-
-    candidates = (
-        q_rep.groupBy("blk")
-        .cogroup(c_blocks.groupBy("blk"))
-        .applyInArrow(score, schema="query_id long, neighbor_id long, cos double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _cogroup_topk(
+        q_rep,
+        c_blocks,
+        ["blk"],
+        k,
+        _topk_kernel(k, label=exclude_label_col is not None),
     )
 
 
@@ -409,7 +419,7 @@ def sign_bucket_expr(
     vec_name: str, bits: int, dim: int, seed: int = 7, one_based: bool = False
 ) -> str:
     """SQL string for the random-hyperplane sign bucket of an
-    array column.
+    array column — the oracle's form of the engine's ``_sign_bits``.
 
     Each bit is ``sign(Σ_i ±vec[i])`` with seeded Rademacher signs —
     every dimension participates in every bit, so per-dimension sign
@@ -417,9 +427,10 @@ def sign_bucket_expr(
     axis-aligned sketch into one mega-bucket → one quadratic group)
     spreads across 2^bits buckets. The emitted arithmetic is the same
     left-fold of doubles in Spark (0-based arrays) and DuckDB
-    (``one_based=True``), so buckets match bit-identically across
-    engines; ``_sign_bits`` is the same fold in numpy for the IVF
-    kernels."""
+    (``one_based=True``) as ``_sign_bits`` runs in numpy, so buckets
+    match bit-identically across engines. Only registered oracle SQL
+    and tests evaluate it; every engine bucket goes through
+    ``with_sign_bucket``."""
     signs = rademacher_signs(bits, dim, seed)
     base = 1 if one_based else 0
     parts = []
@@ -432,10 +443,69 @@ def sign_bucket_expr(
     return "concat(" + ", ".join(parts) + ")"
 
 
-def sign_bucket(vec_name: str, bits: int = 12, dim: int = 64, seed: int = 7) -> Column:
-    """Random-hyperplane sketch of an embedding column as a bit string;
-    see ``sign_bucket_expr`` for the projection family."""
-    return F.expr(sign_bucket_expr(vec_name, bits, dim, seed))
+def _sign_bits(vec, signs: np.ndarray):
+    """``sign_bucket_expr`` evaluated on an Arrow ``list<float>`` column,
+    bit for bit: each bit is a float64 left fold from 0.0 over the
+    dimensions in order, one ``+``/``-`` per term (a matmul or pairwise
+    sum would reorder the additions and change low bits). The SQL
+    CASE's edge cases carry over: a NaN sum reads '1' (Spark orders NaN
+    above every number), and a null row or a row holding a null element
+    reads '0' (its comparison is null)."""
+    acc = np.zeros((len(vec), len(signs)))
+    null = np.zeros(len(vec), dtype=bool)
+    for i in range(signs.shape[1]):
+        x = pc.list_element(vec, i)
+        null |= x.is_null().to_numpy(zero_copy_only=False)
+        x = x.to_numpy(zero_copy_only=False).astype(np.float64)
+        acc = acc + x[:, None] * signs[:, i]
+    on = ((acc >= 0) | np.isnan(acc)) & ~null[:, None]
+    return pc.binary_join_element_wise(
+        *[pa.array(np.where(bit, "1", "0")) for bit in on.T], ""
+    )
+
+
+def _spread_large(df: DataFrame) -> DataFrame:
+    """The input gate of the Arrow keying passes (the IVF assign kernel
+    and ``with_sign_bucket``): ``spread`` the input, unless its size
+    estimate is under 16 MiB. On an under-filed input the keying pass
+    and everything downstream of it would otherwise serialize through
+    one task. Below the gate the repartition is pure fixed cost, since
+    the kernel finishes faster than the shuffle's round-trip (measured
+    r11 — a repartition(32) of ~2k vectors costs ~0.3 s per call, while
+    the kernel itself is <50 ms at that size). 16 MiB of scan bytes is
+    several hundred thousand vectors, the size where the r10 A/B first
+    showed the per-row win."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # noqa: BLE001 — estimate unavailable: keep the insurance
+        est = None
+    if est is None or est >= 16 * 1024 * 1024:
+        df = spread(df)
+    return df
+
+
+def with_sign_bucket(
+    df: DataFrame, vec_col: str, bits: int, dim: int, seed: int = 7
+) -> DataFrame:
+    """``df`` plus a string column ``bucket``: the random-hyperplane sign
+    bucket of ``vec_col`` under the seeded ``bits`` × ``dim`` Rademacher
+    family (``_sign_bits``, bit-identical to ``sign_bucket_expr``). One
+    Arrow pass behind the ``_spread_large`` gate, every other column
+    passed through. Every engine bucket starts here, and split suffixes
+    come from the same fold (``_split_keys``). Project ``df`` to the
+    columns the caller needs first: all of them cross."""
+    signs = rademacher_signs(bits, dim, seed)
+    names = [*df.columns, "bucket"]
+    vi = df.columns.index(vec_col)
+
+    def key(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_arrays(
+                [*batch.columns, _sign_bits(batch.column(vi), signs)], names=names
+            )
+
+    schema = StructType([*df.schema.fields, StructField("bucket", StringType(), False)])
+    return _spread_large(df).mapInArrow(key, schema)
 
 
 # Widest sign family the adaptive sizing may pick. The seeded Rademacher
@@ -495,82 +565,32 @@ def refined_sign_buckets(
     ``groupBy().applyInArrow`` group must fit one worker's memory, and
     a fixed ``bits`` family cannot guarantee that as the corpus grows
     (VERDICT r2 #6 — 4096 buckets over 100 TB is millions of rows per
-    group). Each refinement round costs one bucket-count aggregate and
-    one broadcast join against the (tiny, ≤ corpus/cap keys) oversized
-    bucket list — the skew-salting recipe, but deterministic so batch
-    and oracle agree. Exact-duplicate vectors can never be separated by
-    hyperplanes; ``max_split_rounds`` bounds the loop and leaves such
-    residual buckets to the scorer (documented approximation floor)."""
-    if max_bucket_rows is not None:
-        # A narrow parquet scan (a handful of large files, as local
-        # fixtures and small clusters produce) would serialize every
-        # per-round corpus pass below onto those few tasks.
-        emb = spread(emb)
-    bucketed = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        sign_bucket(vec_col, bits, dim, seed).alias("bucket"),
+    group). The initial bucket is one ``with_sign_bucket`` pass; the
+    refinement is ``_cap_split``, the active-set loop ``cap_ivf_cells``
+    runs on IVF cells (round r's seed is ``seed + 37·(r+1)``), so each
+    round re-keys and checkpoints only the rows of oversized buckets.
+    Exact-duplicate vectors can never be separated by hyperplanes;
+    ``max_split_rounds`` bounds the loop and leaves such residual
+    buckets to the scorer (documented approximation floor)."""
+    bucketed = with_sign_bucket(
+        emb.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec")),
+        "vec",
+        bits,
+        dim,
+        seed,
     )
     if max_bucket_rows is None:
         return bucketed
-    # Materialize between rounds: each round's count would otherwise
-    # re-evaluate the whole lineage — the bits·dim-term sign expression
-    # over the full corpus plus every prior round's join — making R
-    # rounds cost O(R²) corpus passes (the sf100 probe measured this:
-    # 17.6× on a 10× step). localCheckpoint bounds each round to one
-    # corpus pass; on a real cluster this is the iterative-refinement
-    # checkpoint, same as the connected-components loop.
-    bucketed = bucketed.localCheckpoint(eager=False)
-    prev: tuple[int, int] | None = None  # (oversized rows, max bucket)
-    for round_no in range(max_split_rounds):
-        over_stats = (
-            bucketed.groupBy("bucket")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_bucket_rows)
-        )
-        tot = over_stats.agg(
-            F.count("*").alias("b"),
-            F.coalesce(F.sum("__n"), F.lit(0)).alias("r"),
-            F.coalesce(F.max("__n"), F.lit(0)).alias("mx"),
-        ).collect()[0]  # bounded: single global-agg row
-        if tot["b"] == 0:
-            break
-        if (
-            prev is not None
-            and tot["r"] >= prev[0]
-            and tot["mx"] >= prev[1]
-        ):
-            # No progress on EITHER axis: total oversized rows did not
-            # shrink AND the worst bucket did not shrink. (Rows alone
-            # is the wrong signal — a round that splits one oversized
-            # bucket into smaller still-oversized children, e.g. 8192
-            # -> 2×4096+ with cap 4096, keeps the row total constant
-            # while making real progress toward the cap; ADVICE r7.)
-            # The survivors are (near-)duplicate clusters no hyperplane
-            # family can separate — further rounds would only burn
-            # corpus passes. Leave them to the scorer (the documented
-            # approximation floor); max_split_rounds stays the hard
-            # bound either way.
-            break
-        prev = (tot["r"], tot["mx"])
-        extra = sign_bucket("vec", split_bits, dim, seed + 37 * (round_no + 1))
-        bucketed = (
-            bucketed.join(
-                F.broadcast(over_stats.select("bucket").withColumn(
-                    "__over", F.lit(True)
-                )),
-                "bucket",
-                "left",
-            )
-            .withColumn(
-                "bucket",
-                F.when(
-                    F.col("__over"), F.concat(F.col("bucket"), F.lit("|"), extra)
-                ).otherwise(F.col("bucket")),
-            )
-            .drop("__over")
-            .localCheckpoint(eager=False)
-        )
+    bucketed, _ = _cap_split(
+        bucketed,
+        "bucket",
+        max_bucket_rows,
+        dim,
+        seed,
+        37,
+        split_bits,
+        max_split_rounds,
+    )
     return bucketed
 
 
@@ -590,56 +610,15 @@ def lsh_topk(
     random (not axis-aligned) hyperplanes keep bucket sizes balanced on
     sign-correlated corpora, and ``refined_sign_buckets`` re-bands any
     bucket over ``max_bucket_rows`` so no kernel group can exceed the
-    cap (modulo exact-duplicate vectors)."""
+    cap (modulo exact-duplicate vectors). The bucket is each query's
+    whole candidate set, so the kernel's own positions are the ranks
+    and the one exchange is the bucket grouping."""
     bucketed = refined_sign_buckets(
         emb, id_col, vec_col, bits, dim, seed, max_bucket_rows
     )
-
-    import pyarrow as parrow
-
-    empty = parrow.table(
-        {
-            "query_id": parrow.array([], parrow.int64()),
-            "neighbor_id": parrow.array([], parrow.int64()),
-            "cos": parrow.array([], parrow.float64()),
-            "rank": parrow.array([], parrow.int32()),
-        }
-    )
-
-    def score(key, t):
-        # applyInArrow (r10): zero-copy vector ingest + numpy-slice
-        # output. Rank semantics preserved exactly: the sort puts every
-        # -inf (self-mask) after all finite scores, so the finite
-        # prefix's 1-based positions are what enumerate emitted.
-        if t.num_rows < 2:
-            return empty
-        ids = t.column("vid").to_numpy()
-        u = _unit(_arrow_matrix(t.column("vec")))
-        c = np.round(u @ u.T, 4)
-        np.fill_diagonal(c, -np.inf)
-        kk = min(k, len(ids) - 1)
-        out_q, out_n, out_c, out_r = [], [], [], []
-        for r in range(len(ids)):
-            order = np.lexsort((ids, -c[r]))[:kk]
-            sel = order[np.isfinite(c[r, order])]
-            if len(sel):
-                out_q.append(np.full(len(sel), ids[r], dtype=np.int64))
-                out_n.append(sel_ids := ids[sel].astype(np.int64))
-                out_c.append(c[r, sel])
-                out_r.append(np.arange(1, len(sel_ids) + 1, dtype=np.int32))
-        if not out_q:
-            return empty
-        return parrow.table(
-            {
-                "query_id": parrow.array(np.concatenate(out_q)),
-                "neighbor_id": parrow.array(np.concatenate(out_n)),
-                "cos": parrow.array(np.concatenate(out_c)),
-                "rank": parrow.array(np.concatenate(out_r)),
-            }
-        )
-
+    score = _topk_kernel(k, ranked=True)
     return bucketed.groupBy("bucket").applyInArrow(
-        score, schema="query_id long, neighbor_id long, cos double, rank int"
+        lambda key, t: score(key, t, t), schema=f"{_TOPK_SCHEMA}, rank int"
     )
 
 
@@ -672,32 +651,24 @@ def lsh_hard_negatives(
     masked matmul kernel and the exact ranking window over the ≤
     blocks·k block-local survivors are shared with the exact miner —
     swapping exact↔bucketed changes ONLY the candidate generator."""
-    from pyspark.sql import Window
-
-    b = emb.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        F.col(label_col).alias("lbl"),
-        sign_bucket(vec_col, bits, dim, seed).alias("bucket"),
-        anchor_pred.alias("is_anchor"),
+    b = with_sign_bucket(
+        emb.select(
+            F.col(id_col).alias("vid"),
+            F.col(vec_col).alias("vec"),
+            F.col(label_col).alias("lbl"),
+            anchor_pred.alias("is_anchor"),
+        ),
+        "vec",
+        bits,
+        dim,
+        seed,
     )
     cand = b.withColumn("blk", F.pmod(F.hash("vid"), F.lit(n_blocks)))
     anch = b.filter("is_anchor").withColumn(
         "blk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
     )
-    candidates = (
-        anch.groupBy("bucket", "blk")
-        .cogroup(cand.groupBy("bucket", "blk"))
-        .applyInArrow(
-            _masked_topk_kernel(k, with_label=True),
-            schema="query_id long, neighbor_id long, cos double",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+    return _cogroup_topk(
+        anch, cand, ["bucket", "blk"], k, _topk_kernel(k, label=True)
     )
 
 
@@ -727,36 +698,10 @@ def _kmeans(sample: np.ndarray, k: int, iters: int = 10, seed: int = 42) -> np.n
     return cents
 
 
-def _sign_bits(vec, signs: np.ndarray):
-    """``sign_bucket_expr`` evaluated on an Arrow ``list<float>`` column,
-    bit for bit: each bit is a float64 left fold from 0.0 over the
-    dimensions in order, one ``+``/``-`` per term (a matmul or pairwise
-    sum would reorder the additions and change low bits). The SQL
-    CASE's edge cases carry over: a NaN sum reads '1' (Spark orders NaN
-    above every number), and a null row or a row holding a null element
-    reads '0' (its comparison is null)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    acc = np.zeros((len(vec), len(signs)))
-    null = np.zeros(len(vec), dtype=bool)
-    for i in range(signs.shape[1]):
-        x = pc.list_element(vec, i)
-        null |= x.is_null().to_numpy(zero_copy_only=False)
-        x = x.to_numpy(zero_copy_only=False).astype(np.float64)
-        acc = acc + x[:, None] * signs[:, i]
-    on = ((acc >= 0) | np.isnan(acc)) & ~null[:, None]
-    return pc.binary_join_element_wise(
-        *[pa.array(np.where(bit, "1", "0")) for bit in on.T], ""
-    )
-
-
 def _split_rounds(history, split_bits: int, dim: int) -> list:
     """A recorded split history ``[(sfx_seed, [oversized cells])]`` in
     the form ``_split_keys`` consumes: per round, the oversized cells as
     an Arrow value set and that round's seeded hyperplanes."""
-    import pyarrow as pa
-
     return [
         (pa.array(cells, pa.string()), rademacher_signs(split_bits, dim, sfx_seed))
         for sfx_seed, cells in history
@@ -764,16 +709,14 @@ def _split_rounds(history, split_bits: int, dim: int) -> list:
 
 
 def _split_keys(keys: list, vec, rounds: list) -> list:
-    """Replay a cap-split history on Arrow string cell keys — the one
-    place an IVF sub-cell key is computed. In round order, every key in
-    that round's oversized list gains ``|<bits>``, the sign bits of its
-    row's vector under the round's hyperplanes (``_sign_bits``), so a
-    corpus row, an appended vector and a probe of the same vector all
-    land in the same sub-cell. ``keys`` are key columns over the rows of
-    ``vec`` (a cell and its probe columns); ``rounds`` comes from
-    ``_split_rounds``."""
-    import pyarrow.compute as pc
-
+    """Replay a cap-split history on Arrow string keys — the one place
+    a split key (an IVF sub-cell or a refined LSH bucket) is computed.
+    In round order, every key in that round's oversized list gains
+    ``|<bits>``, the sign bits of its row's vector under the round's
+    hyperplanes (``_sign_bits``), so a corpus row, an appended vector
+    and a probe of the same vector all land in the same sub-cell.
+    ``keys`` are key columns over the rows of ``vec`` (a cell and its
+    probe columns); ``rounds`` comes from ``_split_rounds``."""
     for cells, signs in rounds:
         hits = [pc.is_in(key, value_set=cells) for key in keys]
         if not any(pc.any(hit).as_py() for hit in hits):
@@ -787,17 +730,20 @@ def _split_keys(keys: list, vec, rounds: list) -> list:
 
 
 def _resplit_cells(
-    df: DataFrame, vcol: str, history: list, split_bits: int, dim: int
+    df: DataFrame,
+    vcol: str,
+    history: list,
+    split_bits: int,
+    dim: int,
+    key: str = "cell",
 ) -> DataFrame:
-    """Apply a split history to the string ``cell`` column of a frame
-    that is already keyed (``cap_ivf_cells``' corpus rounds and its
-    query side): the assign kernel's ``_split_keys`` step as one Arrow
-    pass, every other column passed through."""
-    import pyarrow as pa
-
+    """Apply a split history to the string ``key`` column of a frame
+    that is already keyed (``_cap_split``'s rounds and
+    ``cap_ivf_cells``' query side): the assign kernel's ``_split_keys``
+    step as one Arrow pass, every other column passed through."""
     rounds = _split_rounds(history, split_bits, dim)
     names = df.columns
-    ci, vi = names.index("cell"), names.index(vcol)
+    ci, vi = names.index(key), names.index(vcol)
 
     def resplit(batches):
         for batch in batches:
@@ -806,6 +752,88 @@ def _resplit_cells(
             yield pa.RecordBatch.from_arrays(cols, names=names)
 
     return df.mapInArrow(resplit, df.schema)
+
+
+def _cap_split(
+    frame: DataFrame,
+    key: str,
+    cap: int,
+    dim: int,
+    seed: int,
+    seed_step: int,
+    split_bits: int,
+    max_rounds: int,
+) -> tuple[DataFrame, list]:
+    """The one cap-split loop, for IVF cells (``cap_ivf_cells``) and
+    LSH buckets (``refined_sign_buckets``): re-key ``frame``'s string
+    ``key`` column (its vectors are ``vec``) until no key holds more
+    than ``cap`` rows. Round r appends ``|<split_bits sign bits>`` under
+    the seed ``seed + seed_step·(r+1)`` to every oversized key. Returns
+    the capped frame and the split history ``[(sfx_seed, [oversized
+    keys])]``.
+
+    Stop rule: the loop ends when no key is over the cap, or after
+    ``max_rounds`` rounds. Rows no hyperplane separates (exact or near
+    duplicates) keep their oversized key; each extra round spends only
+    an aggregate and a re-key over those rows.
+
+    Loop shape (r10, guide §8 "move heavy bytes once"): only rows whose
+    CURRENT key is oversized can change key in a round, so the loop
+    carries just that shrinking "active" set — under-cap rows freeze
+    into lazily-filtered "done" views of the previous round's blocks.
+    Re-checkpointing the FULL frame every round (the r9 form)
+    materialized the vector payload rounds× over into deserialized
+    block storage — at 2M×64f that cache churn, not the split math,
+    was the sf100 wall (driver thread dumps: 29/32 executor threads in
+    MemoryStore.putIteratorAsValues). Oversized detection over the
+    active set is equivalent to detection over the full frame: a key's
+    whole population moves between active/done together (keys extend
+    only currently-oversized keys), so a frozen key can never grow.
+
+    Determinism assumption (ADVICE r10): round-0 frozen rows keep their
+    lineage rooted at the UNCACHED input frame, so a caller that runs
+    several actions re-executes that upstream scan and keying pass for
+    them — correctness then rests on the upstream lineage being
+    deterministic across re-evaluations. That holds for every in-repo
+    caller (the keying kernels are seeded, parquet scans are stable,
+    and both ``ivf_build`` and ``ivf_topk`` checkpoint the assignment
+    before calling in), and callers composing new pipelines must either
+    keep that property or checkpoint their frame first."""
+    from pyspark.storagelevel import StorageLevel
+
+    history: list[tuple[int, list[str]]] = []
+    done: list[DataFrame] = []
+    active = frame
+    for round_no in range(max_rounds):
+        over = sorted(
+            r[key]
+            for r in active.groupBy(key)
+            .agg(F.count("*").alias("__n"))
+            .filter(F.col("__n") > cap)
+            .select(key)
+            .collect()  # bounded: oversized keys <= rows / cap
+        )
+        if not over:
+            break
+        history.append((seed + seed_step * (round_no + 1), over))
+        hit = F.coalesce(F.col(key).isin(over), F.lit(False))
+        # Under-cap rows freeze: a lazy view over the PREVIOUS round's
+        # checkpoint blocks (no new materialization, no re-keying).
+        done.append(active.filter(~hit))
+        # Only the oversized remainder is re-keyed and checkpointed —
+        # serialized storage: compact bytes instead of per-row objects
+        # (the MemoryStore/SizeEstimator churn measured above).
+        active = _resplit_cells(
+            active.filter(hit), "vec", history[-1:], split_bits, dim, key
+        ).localCheckpoint(
+            # MEMORY_AND_DISK is the SERIALIZED level in the Python
+            # API (MEMORY_AND_DISK_DESER is the DataFrame default).
+            eager=False,
+            storageLevel=StorageLevel.MEMORY_AND_DISK,
+        )
+    for d in done:
+        active = active.unionByName(d)
+    return active, history
 
 
 def cap_ivf_cells(
@@ -822,13 +850,13 @@ def cap_ivf_cells(
     exceed ``cell_cap`` corpus rows. Oversized cells get a seeded
     sign-hyperplane suffix computed from the VECTOR itself (corpus rows
     from ``vec``, probe rows from ``qvec``), so both roles land in the
-    same sub-cell without any coordination — the ``refined_sign_buckets``
-    recipe applied to IVF cells. Each round costs one cell-size
-    aggregate plus one Arrow re-keying pass over the rows of the
-    oversized cells (``_split_keys``, the assign kernel's split step);
-    ``max_rounds`` bounds the loop, with exact-duplicate /
-    near-identical vectors as the documented residual floor (hyperplanes
-    cannot separate them).
+    same sub-cell without any coordination. The corpus runs
+    ``_cap_split``, the loop ``refined_sign_buckets`` runs on LSH
+    buckets (round r's seed is ``seed + 101·(r+1)``); each round costs
+    one cell-size aggregate plus one Arrow re-keying pass over the rows
+    of the oversized cells. The query side leaves the loop entirely:
+    its final keys are one Arrow pass that replays the recorded
+    history, so it pays zero checkpoints.
 
     ``corpus`` must have (vid, vec, cell); ``queries`` (qid, qvec, cell).
     Returns both with string-typed, capped cell keys.
@@ -838,79 +866,23 @@ def cap_ivf_cells(
     persisted index needs so later probes/appends can replay the exact
     same sub-cell keys (``ivf_build``/``ivf_query_persisted``). The
     oversized-cell list is tiny by construction (cells already over the
-    cap), so the extra collect is a bounded driver action.
-
-    Loop shape (r10, guide §8 "move heavy bytes once"): only rows whose
-    CURRENT cell is oversized can change key in a round, so the loop
-    carries just that shrinking "active" set — under-cap rows freeze
-    into lazily-filtered "done" views of the previous round's blocks.
-    The r9 form re-checkpointed the FULL corpus AND the (nprobe×
-    exploded) query frame every round, materializing the vector payload
-    rounds× over into deserialized block storage — at 2M×64f that cache
-    churn, not the split math, was the sf100 wall (driver thread dumps:
-    29/32 executor threads in MemoryStore.putIteratorAsValues). The
-    query side leaves the loop entirely: its final keys are one Arrow
-    pass that replays the recorded history, so it pays zero
-    checkpoints. Oversized detection over the active set is
-    equivalent to detection over the full corpus: a cell's whole
-    population moves between active/done together (keys extend only
-    currently-oversized keys), so a frozen cell can never grow.
-    Answers are bit-identical — same seeds, same per-round oversized
-    lists, same suffix function, only WHERE rows are cached changes.
-
-    Determinism assumption (ADVICE r10): round-0 frozen rows keep their
-    lineage rooted at the UNCACHED input frame, so a caller that runs
-    several actions re-executes that upstream scan/assign for them —
-    correctness then rests on the upstream lineage being deterministic
-    across re-evaluations. That holds for every in-repo caller (the
-    assign kernels are seeded, parquet scans are stable, and both
-    ``ivf_build`` and ``ivf_topk`` checkpoint the assignment before
-    calling in), and callers composing new pipelines must either keep
-    that property or checkpoint their corpus first.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    corpus = corpus.withColumn("cell", F.col("cell").cast("string"))
-    queries = queries.withColumn("cell", F.col("cell").cast("string"))
-    history: list[tuple[int, list[str]]] = []
-    done: list[DataFrame] = []
-    active = corpus
-    for round_no in range(max_rounds):
-        cells = sorted(
-            r["cell"]
-            for r in active.groupBy("cell")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > cell_cap)
-            .select("cell")
-            .collect()  # bounded: oversized-cell ids <= n_cells
-        )
-        if not cells:
-            break
-        sfx_seed = seed + 101 * (round_no + 1)
-        history.append((sfx_seed, cells))
-        over = F.coalesce(F.col("cell").isin(cells), F.lit(False))
-        # Under-cap rows freeze: a lazy view over the PREVIOUS round's
-        # checkpoint blocks (no new materialization, no re-keying).
-        done.append(active.filter(~over))
-        # Only the oversized remainder is re-keyed and checkpointed —
-        # serialized storage: compact bytes instead of per-row objects
-        # (the MemoryStore/SizeEstimator churn measured above).
-        active = _resplit_cells(
-            active.filter(over), "vec", history[-1:], split_bits, dim
-        ).localCheckpoint(
-            # MEMORY_AND_DISK is the SERIALIZED level in the Python
-            # API (MEMORY_AND_DISK_DESER is the DataFrame default).
-            eager=False,
-            storageLevel=StorageLevel.MEMORY_AND_DISK,
-        )
+    cap), so the extra collect is a bounded driver action."""
+    corpus, history = _cap_split(
+        corpus.withColumn("cell", F.col("cell").cast("string")),
+        "cell",
+        cell_cap,
+        dim,
+        seed,
+        101,
+        split_bits,
+        max_rounds,
+    )
     if record is not None:
         record.extend(history)
-    out_c = active
-    for d in done:
-        out_c = out_c.unionByName(d)
+    queries = queries.withColumn("cell", F.col("cell").cast("string"))
     if history:
         queries = _resplit_cells(queries, "qvec", history, split_bits, dim)
-    return out_c, queries
+    return corpus, queries
 
 
 def _train_sample(
@@ -952,84 +924,6 @@ def _train_sample(
     if not len(m):
         raise ValueError("IVF training: empty corpus")
     return m, n_clusters
-
-
-def _topk_table(qs: list, ns: list, cs: list):
-    """A cell scorer's output from per-query numpy slices (empty when
-    no query kept a candidate)."""
-    import pyarrow as pa
-
-    return pa.table(
-        {
-            "query_id": np.concatenate(qs or [np.empty(0, np.int64)]),
-            "neighbor_id": np.concatenate(ns or [np.empty(0, np.int64)]),
-            "cos": np.concatenate(cs or [np.empty(0)]),
-        }
-    )
-
-
-def _make_cell_scorer(k: int):
-    """Per-cell exact cosine top-k cogroup kernel shared by the ad-hoc
-    (``ivf_topk``) and persisted (``ivf_query_persisted``) IVF paths.
-    Queries arrive as (qid, qvec, cell), corpus as (vid, vec, cell);
-    identical ids are self-masked (the self-query convention).
-
-    applyInArrow form (r10, VERDICT r9 task 1): the vector columns of
-    BOTH cogroup sides ingest zero-copy (``_arrow_matrix``) and the
-    top-k output assembles from concatenated numpy slices — the pandas
-    form materialized one ndarray object per input row plus one Python
-    tuple per emitted pair, which is the conversion cost that bound the
-    self-query certificates' sf100 walls (SCALING.md). Ranking math is
-    unchanged: same rounded float64 scores, same (cos desc, id asc)
-    lexsort, same self-mask."""
-
-    def score(key, qt, ct):
-        if qt.num_rows == 0 or ct.num_rows == 0:
-            return _topk_table([], [], [])
-        qi = qt.column("qid").to_numpy()
-        ci = ct.column("vid").to_numpy()
-        c = np.round(
-            _unit(_arrow_matrix(qt.column("qvec")))
-            @ _unit(_arrow_matrix(ct.column("vec"))).T,
-            4,
-        )
-        c[qi[:, None] == ci[None, :]] = -np.inf
-        kk = min(k, c.shape[1])
-        out_q, out_n, out_c = [], [], []
-        for r in range(c.shape[0]):
-            order = np.lexsort((ci, -c[r]))[:kk]
-            sel = order[np.isfinite(c[r, order])]
-            if len(sel):
-                out_q.append(np.full(len(sel), qi[r], dtype=np.int64))
-                out_n.append(ci[sel].astype(np.int64))
-                out_c.append(c[r, sel])
-        return _topk_table(out_q, out_n, out_c)
-
-    return score
-
-
-def _rank_cell_candidates(
-    queries: DataFrame, corpus: DataFrame, k: int, scorer
-) -> DataFrame:
-    """Cogroup-score probed cells with ``scorer`` (an applyInArrow
-    kernel emitting (query_id, neighbor_id, cos)) and rank the
-    survivors globally — block-local top-k per probed cell is a
-    superset of the global top-k over the probed cells, so the window
-    pass is exact."""
-    from pyspark.sql import Window
-
-    candidates = (
-        queries.groupBy("cell")
-        .cogroup(corpus.groupBy("cell"))
-        .applyInArrow(scorer, schema="query_id long, neighbor_id long, cos double")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        candidates.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
 
 
 def _probe_rows(assigned: DataFrame, nprobe: int) -> DataFrame:
@@ -1114,7 +1008,9 @@ def ivf_topk(
     corpus, queries = _capped_roles(
         assigned, ["vid", "vec", "cell"], nprobe, cell_cap, sample.shape[1], seed
     )
-    return _rank_cell_candidates(queries, corpus, k, _make_cell_scorer(k))
+    return _cogroup_topk(
+        queries, corpus, ["cell"], k, _topk_kernel(k, ("qid", "qvec")), dedup=True
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1178,19 +1074,12 @@ def _assign_with_centroids(
     route paid one ndarray object per row inbound and a per-row
     list re-serialization outbound, which is what bound the 2M-vector
     certificates at scan parallelism. Only (id, vec) cross the
-    boundary (guide §4: project before an opaque kernel). The input is
-    ``spread`` (r10): on an under-filed input the whole assign →
-    cap-split → checkpoint lineage would otherwise serialize through
-    one task. Below a 16 MiB size estimate the spread is skipped: the
-    repartition is then pure fixed cost, since the kernel finishes
-    faster than the shuffle's round-trip (measured r11 — a
-    repartition(32) of ~2k vectors costs ~0.3 s per call, and the ANN
-    lifecycle certs call this kernel many times per run, while the
-    kernel itself is <50 ms at that size). 16 MiB of scan bytes is
-    several hundred thousand vectors, the size where the r10 A/B first
-    showed the per-row win."""
-    import pyarrow as pa
-
+    boundary (guide §4: project before an opaque kernel). The input
+    passes the ``_spread_large`` gate (r10/r11): on an under-filed
+    input the whole assign → cap-split → checkpoint lineage would
+    otherwise serialize through one task, and the ANN lifecycle certs
+    call this kernel many times per run at sizes where the spread is
+    pure fixed cost."""
     bc = emb.sparkSession.sparkContext.broadcast(cents)
     rounds = _split_rounds(history, split_bits, cents.shape[1])
     key_names = ["cell", *(f"probe{p}" for p in range(nprobe))]
@@ -1223,14 +1112,7 @@ def _assign_with_centroids(
         ["vid long", "vec array<float>", *(f"{n} {extra[1]}" for n in extra_names)]
         + [f"{n} string" for n in key_names]
     )
-    emb = emb.select(id_col, vec_col)
-    try:
-        est = int(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — estimate unavailable: keep the insurance
-        est = None
-    if est is None or est >= 16 * 1024 * 1024:
-        emb = spread(emb)
-    return emb.mapInArrow(assign, schema)
+    return _spread_large(emb.select(id_col, vec_col)).mapInArrow(assign, schema)
 
 
 def ivf_build(
@@ -1284,8 +1166,6 @@ def ivf_build(
     # flip and crash-safe rename sequence, minus three fixed-size Spark
     # write jobs per build (r10; the schema matches what createDataFrame
     # produced, pinned by the persisted-index tests).
-    import pyarrow as pa
-
     cents_tbl = pa.table(
         {
             "cell": pa.array(range(len(cents)), pa.int32()),
@@ -1448,7 +1328,9 @@ def ivf_query_persisted(
             F.col("cell").isin(sorted({int(c) for c in probed}))
         )
     corpus = corpus.withColumn("cell", F.col("cell").cast("string"))
-    return _rank_cell_candidates(probe_q, corpus, k, _make_cell_scorer(k))
+    return _cogroup_topk(
+        probe_q, corpus, ["cell"], k, _topk_kernel(k, ("qid", "qvec")), dedup=True
+    )
 
 
 def label_centroids(
@@ -1538,8 +1420,6 @@ def ivfpq_topk(
     per-cell ADC scan quadratic in corpus density (probes × candidates
     inside one cell) at the 200k-vector fixture. ``n_clusters=None``
     applies the same ~√N FAISS sizing as ``ivf_topk``."""
-    import pyarrow as pa
-
     spark = emb.sparkSession
     n = emb.count() if (n_clusters is None or refine is None) else None
     if refine is None:
@@ -1631,7 +1511,7 @@ def ivfpq_topk(
             out_c.append(exact[order])
         return _topk_table(out_q, out_n, out_c)
 
-    return _rank_cell_candidates(queries, corpus, k, score)
+    return _cogroup_topk(queries, corpus, ["cell"], k, score, dedup=True)
 
 
 def rrf_fuse(
@@ -1705,8 +1585,6 @@ def mmr_rerank(
     ``candidates``: (query_id, neighbor_id, rel). ``corpus_codes``:
     (id_col, codes_col) int8 code arrays. Returns (query_id,
     pick_rank, vec_id, score10)."""
-    import pyarrow as pa
-
     lam_rem = 10 - lam_num
     cand = candidates.join(
         corpus_codes.select(

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.gc import gc_keep
-from ..operators.merge import merge_keyed
+from ..operators.merge import merge_keyed, reset_then_degrade
 from ..sources import load_table
 from ..streaming.store import GraphStore
 
@@ -90,18 +90,12 @@ def run_aws_snapshot_etl(
     services = _nodes(supplier, "Microservice", F.col("s_name"))
 
     # Assemble incoming node set; one MERGE into the store.
-    incoming = resources.unionByName(
-        regions.withColumn("tier", F.lit(None).cast("string"))
-        .withColumn("segment", F.lit(None).cast("string")),
-        allowMissingColumns=True,
-    ).unionByName(
-        azs.withColumn("tier", F.lit(None).cast("string"))
-        .withColumn("segment", F.lit(None).cast("string")),
-        allowMissingColumns=True,
-    ).unionByName(
-        services.withColumn("tier", F.lit(None).cast("string"))
-        .withColumn("segment", F.lit(None).cast("string")),
-        allowMissingColumns=True,
+    # Region/AZ/service rows carry no tier or segment: the union pads
+    # them with typed nulls.
+    incoming = (
+        resources.unionByName(regions, allowMissingColumns=True)
+        .unionByName(azs, allowMissingColumns=True)
+        .unionByName(services, allowMissingColumns=True)
     )
 
     existing = store.read(spark, "nodes")
@@ -157,18 +151,8 @@ def run_aws_snapshot_etl(
         orders.filter((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "O"))
         .join(customer.select("c_custkey", "c_name"), F.col("o_custkey") == F.col("c_custkey"))
         .select(F.lit("EC2Instance").alias("label"), F.col("c_name").alias("name"))
-        .distinct()
-        .withColumn("_alarm", F.lit(True))
     )
-    final = (
-        gced.withColumn("health_status", F.lit("healthy"))
-        .join(alarms, ["label", "name"], "left")
-        .withColumn(
-            "health_status",
-            F.when(F.col("_alarm"), "degraded").otherwise(F.col("health_status")),
-        )
-        .drop("_alarm")
-    )
+    final = reset_then_degrade(gced, alarms)
 
     edges = contains.unionByName(located_in)
     node_stats, edge_stats = Observation(), Observation()

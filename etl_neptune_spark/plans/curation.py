@@ -111,17 +111,11 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the same count-derived width (the Rademacher stream fills
     row-major, so narrow families are prefixes of wide ones), and the
     full keep-first verdict set stays strict-certifiable."""
-    from ..operators.similarity import (
-        adaptive_sign_bits,
-        semantic_dedup,
-        sign_bucket_expr,
-    )
+    from ..operators.similarity import adaptive_sign_bits, with_sign_bucket
 
-    emb = load_table(spark, sf_dir, "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     bits = adaptive_sign_bits(emb.count(), SEMDEDUP_TARGET)
-    emb = emb.withColumn(
-        "bucket", F.expr(sign_bucket_expr("embedding", bits=bits, dim=64))
-    )
+    emb = with_sign_bucket(emb, "embedding", bits=bits, dim=64)
     return semantic_dedup(
         emb, cluster_col="bucket", min_cosine=SEMDEDUP_MIN_COS
     )

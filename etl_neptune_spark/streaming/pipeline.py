@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 
 from ..functions import dec_avg, dec_sum
 from ..operators.degrees import degree_metrics
-from ..operators.merge import merge_keyed
+from ..operators.merge import merge_keyed, reset_then_degrade
 from .store import GraphStore
 
 # Schema of the driver's events table after timestamp restoration
@@ -310,26 +310,13 @@ def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
 def apply_health_alarms(
     spark: SparkSession, store: GraphStore, alarms: DataFrame, version: int
 ) -> DataFrame:
-    """ST7 reset-then-degrade: set every node ``healthy``, then flip
-    nodes matched by an (label, name) alarm row to ``degraded`` — two
-    sequential join-updates inside one batch apply, exactly the
-    reference's Step-16 shape (neptune_etl_aws.py:2068-2111)."""
+    """ST7 reset-then-degrade (``operators.merge.reset_then_degrade``)
+    over the latest nodes snapshot, published as ``version`` — the
+    aws run's Step 16 as one batch apply."""
     nodes = store.read(spark, "nodes")
     if nodes is None:
         raise ValueError("no nodes snapshot to apply alarms to")
-    reset = nodes.withColumn("health_status", F.lit("healthy"))
-    flagged = (
-        reset.join(
-            alarms.select("label", "name").distinct().withColumn("_alarm", F.lit(True)),
-            ["label", "name"],
-            "left",
-        )
-        .withColumn(
-            "health_status",
-            F.when(F.col("_alarm"), F.lit("degraded")).otherwise(F.col("health_status")),
-        )
-        .drop("_alarm")
-    )
+    flagged = reset_then_degrade(nodes, alarms)
     store.write(flagged, "nodes", version)
     return flagged
 

@@ -71,7 +71,7 @@ def test_lsh_hard_negatives_matches_bucketed_reference(spark, sf_dir):
 
     from etl_neptune_spark.operators.similarity import (
         lsh_hard_negatives,
-        sign_bucket,
+        sign_bucket_expr,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -83,7 +83,10 @@ def test_lsh_hard_negatives_matches_bucketed_reference(spark, sf_dir):
         .reset_index(drop=True)
     )
     base = emb.select(
-        "vec_id", "label", "embedding", sign_bucket("embedding", 4, 64).alias("bucket")
+        "vec_id",
+        "label",
+        "embedding",
+        F.expr(sign_bucket_expr("embedding", 4, 64)).alias("bucket"),
     ).toPandas()
     rows = []
     for _, grp in base.groupby("bucket"):

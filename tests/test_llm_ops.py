@@ -144,7 +144,7 @@ def test_lsh_buckets_balanced_on_sign_correlated_vectors(spark):
     # spread such a corpus over many buckets.
     import numpy as np
 
-    from etl_neptune_spark.operators.similarity import sign_bucket
+    from etl_neptune_spark.operators.similarity import sign_bucket_expr
 
     rng = np.random.default_rng(0)
     rows = [
@@ -152,7 +152,7 @@ def test_lsh_buckets_balanced_on_sign_correlated_vectors(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     sizes = (
-        emb.select(sign_bucket("embedding", bits=6, dim=64).alias("bucket"))
+        emb.select(F.expr(sign_bucket_expr("embedding", 6, 64)).alias("bucket"))
         .groupBy("bucket")
         .count()
         .collect()
@@ -495,7 +495,7 @@ def test_cap_ivf_cells_matches_r9_reference_loop(spark):
 
     from etl_neptune_spark.operators.similarity import (
         cap_ivf_cells,
-        sign_bucket,
+        sign_bucket_expr,
     )
 
     rng = np.random.default_rng(11)
@@ -550,7 +550,9 @@ def test_cap_ivf_cells_matches_r9_reference_loop(spark):
                             F.concat(
                                 F.col("cell"),
                                 F.lit("|"),
-                                sign_bucket(vcol, split_bits, dim, sfx_seed),
+                                F.expr(sign_bucket_expr(
+                                    vcol, split_bits, dim, sfx_seed
+                                )),
                             ),
                         ).otherwise(F.col("cell")),
                     )
@@ -761,6 +763,103 @@ def test_lsh_refinement_survives_constant_row_rounds(spark):
     sizes = [r["count"] for r in bucketed.groupBy("bucket").count().collect()]
     assert max(sizes) <= cap, f"bucket of {max(sizes)} exceeds cap {cap}"
     assert sum(sizes) == 1200
+
+
+@pytest.mark.parametrize(
+    "corpus",
+    ["skewed", "constant_row_rounds"],
+)
+def test_refined_sign_buckets_match_full_frame_reference_loop(spark, corpus):
+    """Active-set rewrite pin for the LSH cap split: on the corpora of
+    ``test_lsh_bucket_cap_enforced_on_skewed_corpus`` and
+    ``test_lsh_refinement_survives_constant_row_rounds``,
+    ``refined_sign_buckets`` must give every row the same bucket, in
+    the same number of split rounds, as the full-frame reference loop
+    below (the SQL sign bucket, a broadcast join and a full-frame
+    checkpoint every round, and the (rows, max) no-progress break)."""
+    import numpy as np
+
+    from etl_neptune_spark.operators.similarity import (
+        refined_sign_buckets,
+        sign_bucket_expr,
+    )
+
+    if corpus == "skewed":
+        rng = np.random.default_rng(3)
+        base = rng.uniform(0.5, 1.0, size=16)
+        vecs = [base + rng.normal(0, 0.35, size=16) for _ in range(1200)]
+        bits, cap, split_bits, max_rounds = 2, 200, 3, 8
+    else:
+        rng = np.random.default_rng(11)
+        vecs = [rng.uniform(-1.0, 1.0, size=16) for _ in range(1200)]
+        bits, cap, split_bits, max_rounds = 1, 150, 1, 12
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    dim, seed = 16, 7
+
+    def reference_loop():
+        """The full-frame refined_sign_buckets loop, verbatim semantics."""
+        b = emb.select(
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("vec"),
+            F.expr(sign_bucket_expr("embedding", bits, dim, seed)).alias("bucket"),
+        ).localCheckpoint(eager=False)
+        prev, rounds = None, 0
+        for round_no in range(max_rounds):
+            over_stats = (
+                b.groupBy("bucket")
+                .agg(F.count("*").alias("__n"))
+                .filter(F.col("__n") > cap)
+            )
+            tot = over_stats.agg(
+                F.count("*").alias("b"),
+                F.coalesce(F.sum("__n"), F.lit(0)).alias("r"),
+                F.coalesce(F.max("__n"), F.lit(0)).alias("mx"),
+            ).collect()[0]
+            if tot["b"] == 0:
+                break
+            if prev is not None and tot["r"] >= prev[0] and tot["mx"] >= prev[1]:
+                break
+            prev = (tot["r"], tot["mx"])
+            extra = F.expr(
+                sign_bucket_expr("vec", split_bits, dim, seed + 37 * (round_no + 1))
+            )
+            b = (
+                b.join(
+                    F.broadcast(
+                        over_stats.select("bucket").withColumn("__over", F.lit(True))
+                    ),
+                    "bucket",
+                    "left",
+                )
+                .withColumn(
+                    "bucket",
+                    F.when(
+                        F.col("__over"), F.concat(F.col("bucket"), F.lit("|"), extra)
+                    ).otherwise(F.col("bucket")),
+                )
+                .drop("__over")
+                .localCheckpoint(eager=False)
+            )
+            rounds += 1
+        return {r["vid"]: r["bucket"] for r in b.collect()}, rounds
+
+    ref_map, ref_rounds = reference_loop()
+    got = refined_sign_buckets(
+        emb,
+        bits=bits,
+        dim=dim,
+        seed=seed,
+        max_bucket_rows=cap,
+        split_bits=split_bits,
+        max_split_rounds=max_rounds,
+    )
+    got_map = {r["vid"]: r["bucket"] for r in got.collect()}
+    assert got_map == ref_map, "bucket keys diverged"
+    # Round r extends exactly the keys still oversized after round r-1,
+    # so the deepest key carries one '|' per round the loop ran.
+    assert max(b.count("|") for b in got_map.values()) == ref_rounds
+    assert ref_rounds >= 2, "fixture must force a multi-round split"
 
 
 def test_bloom_filter_distributed_build_fp_rate_and_exactness(spark):
@@ -1073,7 +1172,7 @@ def test_replay_chunked_matches_unchunked(spark):
     from etl_neptune_spark.operators.similarity import (
         _assign_with_centroids,
         _resplit_cells,
-        sign_bucket,
+        sign_bucket_expr,
     )
 
     rng = np.random.default_rng(7)
@@ -1124,7 +1223,7 @@ def test_replay_chunked_matches_unchunked(spark):
                     F.concat(
                         F.col("cell"),
                         F.lit("|"),
-                        sign_bucket("qvec", split_bits, dim, sfx_seed),
+                        F.expr(sign_bucket_expr("qvec", split_bits, dim, sfx_seed)),
                     ),
                 ).otherwise(F.col("cell")),
             )

@@ -100,3 +100,37 @@ def test_python_boundary_is_arrow():
             if name in names:
                 found[(rel, name)] = found.get((rel, name), 0) + 1
     assert found == PANDAS_CROSSINGS_ALLOWED
+
+
+def test_sign_bucket_sql_only_in_oracle_sql():
+    """Every engine sign bucket is the numpy fold (``_sign_bits``
+    through ``with_sign_bucket`` or the split replay); the SQL string
+    ``sign_bucket_expr`` builds is the DuckDB oracle's form. So every
+    ``sign_bucket_expr(...)`` call in the package must sit inside the
+    arguments of a ``register(...)`` call, where it writes oracle SQL."""
+    offenders = []
+    for path in glob.glob(
+        os.path.join(REPO, "etl_neptune_spark", "**", "*.py"), recursive=True
+    ):
+        tree = ast.parse(open(path).read())
+        in_register = {
+            id(inner)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "register"
+            for arg in [*node.args, *(kw.value for kw in node.keywords)]
+            for inner in ast.walk(arg)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Name)
+                and node.func.id == "sign_bucket_expr"
+                and id(node) not in in_register
+            ):
+                offenders.append(f"{os.path.relpath(path, REPO)}:{node.lineno}")
+    assert not offenders, (
+        "sign_bucket_expr evaluated outside registered oracle SQL — compute "
+        f"engine buckets with with_sign_bucket: {offenders}"
+    )

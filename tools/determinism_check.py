@@ -9,25 +9,19 @@ but they CAN be checked against themselves — any nondeterminism
 bug, unstable tie-breaks) shows as a hash mismatch between two runs of
 the same plan on the same data.
 
+The hash is ``tools/sf10_probe.dist_hash``: computed engine-side,
+with an O(1) result, so no run ships its rows to the driver.
+
 Usage: python tools/determinism_check.py [sf_dir] [q ...]
 """
 
 from __future__ import annotations
 
-import hashlib
 import sys
 
 sys.path.insert(0, ".")
 
-
-def result_hash(df) -> tuple[int, str]:
-    pdf = df.toPandas()
-    pdf = pdf.reindex(sorted(pdf.columns), axis=1)
-    for c in pdf.columns:
-        pdf[c] = pdf[c].astype(str)
-    pdf = pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
-    payload = pdf.to_csv(index=False).encode()
-    return len(pdf), hashlib.md5(payload).hexdigest()
+from tools.sf10_probe import dist_hash  # noqa: E402
 
 
 def main() -> None:
@@ -42,8 +36,8 @@ def main() -> None:
     failed = 0
     for name in names:
         try:
-            n1, h1 = result_hash(qs[name](spark, sf_dir))
-            n2, h2 = result_hash(qs[name](spark, sf_dir))
+            n1, h1 = dist_hash(qs[name](spark, sf_dir))
+            n2, h2 = dist_hash(qs[name](spark, sf_dir))
         except Exception as exc:  # noqa: BLE001
             print(f"ERROR {name}: {type(exc).__name__}: {exc}"[:300])
             failed += 1
