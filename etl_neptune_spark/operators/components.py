@@ -1,44 +1,163 @@
-"""Connected components over a pair/edge frame — duplicate-cluster
-resolution for dedup pipelines.
+"""Iterative graph operators: PageRank, triangles, k-core, connected
+components (the transitive closure that turns near-dup PAIRS into
+duplicate GROUPS), BFS and closeness, time-respecting reachability,
+label propagation, hop-bounded shortest paths and HITS.
 
-Near-duplicate detection (MinHash LSH, n-gram Jaccard, embedding
-cosine) emits PAIRS; keeping one survivor per duplicate GROUP requires
-the transitive closure of those pairs — i.e. connected components.
-This is the canonical follow-on stage of a 100 TB dedup pass (the
-pair graph is tiny relative to the corpus: only near-dup docs appear).
+Each algorithm is a step function plus, where its graph fits, a
+driver-side kernel. Three shared pieces carry the rest:
 
-Implementation: alternating **large-star / small-star** rounds (the
-MapReduce connected-components algorithm of Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) rather than plain
-min-label propagation. Propagation needs O(diameter) rounds — fine for
-shallow dup clusters, pathological on chain-shaped graphs; star
-contraction REWIRES the graph each round (large-star hangs every
-larger neighbor off the local minimum, small-star contracts the rest),
-which provably converges in O(log d) alternations on any graph. Each
-half-round is one keyed aggregate + one equi-join on the vertex — the
-same shuffle shape as propagation, just fewer rounds. The driver holds
-only the loop counter and a per-round fixpoint digest (one bounded
-action per round), no graph data.
+- ``_small_graph(edges, cap)``, the one bounded-driver gate. At most
+  ``driver_cap`` distinct edges ship to the driver in one job, and a
+  Python kernel replaces O(rounds) whole-cluster job launches; above the
+  cap the driver receives one row. ``driver_cap=0`` forces the
+  distributed path.
+- ``_fixpoint(state, step, rounds, until)``, the one round loop. It owns
+  the lineage cut (``_cut``) and the optional exit test: the
+  ``_Settled`` digest of the label-correcting loops, an empty BFS
+  frontier, or none for the fixed-round algorithms.
+- ``_bfs_rounds``, one source-keyed frontier BFS for ``bfs_hops`` (one
+  source) and ``msbfs_closeness`` (every vertex).
 
-No SQL oracle can express the fixpoint directly, but DuckDB's
-recursive CTE computes the same closure exactly, which is how
-``q_dup_clusters`` is value-certified.
+No operator leaves a cache entry behind (``_cut``, ``_held``): a leaked
+one would be substituted into every later query with the same plan.
 """
 
 from __future__ import annotations
+
+import bisect
+import contextlib
+import datetime
+import heapq
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _cut(df: DataFrame) -> DataFrame:
+    """The module's one lineage cut, also its materialization of what
+    the returned plan reads: a lazy localCheckpoint, filled by the first
+    action that reads it (a round's exit test or the caller's own action)
+    and freed with the frame that references it. Swapping in
+    ``checkpoint(eager=False)`` (with ``spark.checkpoint.dir`` set) is the
+    one-line change that makes every iterative operator survive executor
+    loss."""
+    return df.localCheckpoint(eager=False)
+
+
+@contextlib.contextmanager
+def _held(df: DataFrame):
+    """Persist ``df``, an edge set that only the rounds read, for the
+    ``with`` block and release it at exit. Unlike a cut, a filled cache
+    reports its real size, so a small edge set broadcasts in the later
+    rounds. The returned plan must not read ``df``: at exit every round
+    is a cut whose shuffles adaptive execution has already run."""
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
+
+
+def _small_graph(edges: DataFrame, cap: int) -> list | None:
+    """The rows of ``edges`` when there are at most ``cap`` of them, else
+    None. One job: the partitions stream through one task that stops
+    after cap+1 rows, and the driver receives ONE row that carries the
+    rows only when they fit. ``cap=0`` answers None without a job."""
+    if not cap:
+        return None
+    return (
+        edges.coalesce(1)
+        .limit(cap + 1)
+        .agg(
+            F.count("*").alias("n"),
+            F.collect_list(F.struct(*edges.columns)).alias("rows"),
+        )
+        .select(F.when(F.col("n") <= cap, F.col("rows")).alias("rows"))
+        .first()["rows"]
+    )
+
+
+def _digest(df: DataFrame) -> tuple:
+    """Order-insensitive fingerprint of a distinct frame: (rows, XOR of
+    xxhash64 over every column, by name — a USING join reorders them).
+    XOR never overflows (a sum of longs would trip ANSI mode) and is
+    exact on a set; a collision faking a fixpoint needs 2^-64-scale luck
+    AND an equal count."""
+    cols = sorted(df.columns)
+    row = df.agg(F.count("*"), F.bit_xor(F.xxhash64(*cols))).first()
+    return row[0], row[1]
+
+
+class _Settled:
+    """Exit test of the label-correcting loops: true once a round leaves
+    the state's digest unchanged, or its row count at most ``small``.
+    Primed with the input's digest; each call is one single-row action.
+    ``n`` is the latest row count."""
+
+    def __init__(self, df: DataFrame, small: int = 0):
+        self.small = small
+        self.n, self.h = _digest(df)
+
+    def __call__(self, state: DataFrame, _round: int) -> bool:
+        prev = (self.n, self.h)
+        self.n, self.h = _digest(state)
+        return (self.n, self.h) == prev or self.n <= self.small
+
+
+def _fixpoint(state: DataFrame, step, rounds: int, until=None, every: int = 1):
+    """The one round loop: ``state = step(state, round)`` for at most
+    ``rounds`` rounds, cut every ``every`` rounds (uncut, the star
+    rounds' lineage grows geometrically until the analyzer OOMs).
+    ``until(state, round)`` is the optional exit test, one bounded action
+    per round; without one no round launches an action. Returns
+    (state, stopped): whether ``until`` fired (True without one)."""
+    for i in range(rounds):
+        state = step(state, i)
+        if (i + 1) % every == 0:
+            state = _cut(state)
+        if until is not None and until(state, i):
+            return state, True
+    return state, until is None
+
+
+def _endpoints(e: DataFrame, name: str) -> DataFrame:
+    """Distinct vertices named by the first two columns of ``e``."""
+    a, b = e.columns[:2]
+    return (
+        e.select(F.col(a).alias(name))
+        .unionByName(e.select(F.col(b).alias(name)))
+        .distinct()
+    )
+
+
+def _directed(edges: DataFrame, src: str, dst: str, *extra, loops=True) -> DataFrame:
+    """(u, v, *extra) with null endpoints (and, unless ``loops``, self
+    loops) dropped."""
+    keep = F.col("u").isNotNull() & F.col("v").isNotNull()
+    if not loops:
+        keep &= F.col("u") != F.col("v")
+    uv = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), *extra)
+    return uv.filter(keep)
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Distinct canonical (a < b) edges, self loops dropped."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
 def _large_star(e: DataFrame) -> DataFrame:
     """Large-star: for every vertex u, connect each STRICTLY LARGER
-    neighbor v to m = min(N(u) ∪ {u}). Keeps every component connected
-    (each emitted edge stays within the component) while hanging deep
-    branches directly off local minima.
-
-    The per-vertex minimum is a window aggregate over the symmetrized
-    edges — ONE shuffle on the vertex, no groupBy+join round trip."""
+    neighbor v to m = min(N(u) ∪ {u}), hanging deep branches directly
+    off local minima. The per-vertex minimum is a window aggregate over
+    the symmetrized edges — one shuffle on the vertex."""
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     m = F.least(F.min("b").over(Window.partitionBy("a")), F.col("a"))
     return (
@@ -52,10 +171,9 @@ def _large_star(e: DataFrame) -> DataFrame:
 
 def _small_star(e: DataFrame) -> DataFrame:
     """Small-star: orient every edge (larger → smaller); for every
-    vertex u, connect u and all its (smaller) neighbors to
-    m = min(N(u) ∪ {u}) = min(N(u)). Contracts the shallow fringe that
-    large-star leaves behind. Same one-window-shuffle shape as
-    large-star."""
+    vertex u, connect u and all its smaller neighbors to m = min(N(u)),
+    contracting the fringe large-star leaves behind. Same one-window
+    shuffle."""
     d = (
         e.select(
             F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
@@ -82,48 +200,28 @@ def pagerank(
     reset: float = 0.15,
 ) -> DataFrame:
     """(vertex, rank) after a FIXED number of power iterations of the
-    GraphX-style PageRank recurrence (reset-probability formulation, no
-    dangling-mass redistribution):
+    GraphX-style recurrence (no dangling-mass redistribution):
 
         rank_0(v) = 1.0
         rank_{t+1}(v) = reset + (1-reset) · Σ_{(u,v)∈E} rank_t(u)/outdeg(u)
 
-    Fixed ``iters`` (not convergence-tested) keeps the result exactly
-    reproducible in any engine — the DuckDB recursive-CTE oracle runs
-    the same recurrence (q_pagerank certifies values to 4 dp).
-
-    Plan: the weighted edge list (w = 1/outdeg, plus zero-weight self
-    edges so rank-source-only vertices persist through the join+agg) is
-    checkpointed ONCE; each iteration is one equi-join of the rank
-    frame into it plus one keyed sum — the canonical Pregel shuffle
-    shape, linear per iteration, skew handled by AQE. Rank frames stay
-    O(|V|); nothing collects to the driver.
-    """
-    raw = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = raw.groupBy("u").agg(F.count("*").alias("d"))
-    verts = (
-        raw.select(F.col("u").alias("x"))
-        .unionByName(raw.select(F.col("v").alias("x")))
-        .distinct()
-    )
-    weighted = raw.join(deg, "u").select(
-        "u", "v", (F.lit(1.0) / F.col("d")).alias("w")
-    )
+    Fixed ``iters`` keeps the result reproducible in any engine
+    (q_pagerank's DuckDB recursive CTE certifies 4 dp). Each iteration
+    is one equi-join of the O(|V|) rank frame into the materialized
+    weighted edges plus one keyed sum; the linear rank lineage is cut
+    every 10 iterations only."""
+    raw = _cut(_directed(edges, src, dst).distinct())
+    verts = _endpoints(raw, "x")
+    weighted = raw.join(raw.groupBy("u").agg((F.lit(1.0) / F.count("*")).alias("w")), "u")
     # Zero-weight self edges keep every vertex present in each
     # iteration's aggregate (its sum contribution is 0 → rank = reset
     # when it has no real in-edges).
-    e2 = weighted.unionByName(
+    e2 = _cut(weighted.unionByName(
         verts.select(F.col("x").alias("u"), F.col("x").alias("v"), F.lit(0.0).alias("w"))
-    ).localCheckpoint()
+    ))
 
-    ranks = verts.select(F.col("x").alias("u"), F.lit(1.0).alias("r"))
-    for i in range(iters):
-        ranks = (
+    def step(ranks, _):
+        return (
             e2.join(ranks, "u")
             .groupBy("v")
             .agg(
@@ -131,11 +229,9 @@ def pagerank(
             )
             .select(F.col("v").alias("u"), "r")
         )
-        # Rank lineage grows one join+agg per iteration (linear, unlike
-        # the star-contraction loop's geometric growth) — still truncate
-        # periodically so deep iteration counts keep bounded plans.
-        if (i + 1) % 10 == 0:
-            ranks = ranks.localCheckpoint()
+
+    ranks = verts.select(F.col("x").alias("u"), F.lit(1.0).alias("r"))
+    ranks, _ = _fixpoint(ranks, step, iters, every=10)
     return ranks.select(F.col("u").alias("vertex"), F.round("r", 4).alias("rank"))
 
 
@@ -148,25 +244,11 @@ def triangle_counts(
     The classical ordered-wedge plan: canonicalize every edge to
     ``a < b``, build wedges ``a < b < c`` by joining on the middle
     vertex, close each wedge against the edge list with one more
-    equi-join — every triangle is found exactly once (its vertices in
-    sorted order), and the join work is bounded by Σ deg²(v) over the
-    ORDERED graph, the standard mitigation that keeps hub vertices from
-    exploding the wedge count (a hub's wedges split across its larger
-    neighbors). All three joins are equi-joins on vertex keys — shuffle
-    + hash join, never all-pairs."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    # Materialize before the fan-out: five branches read `e` inside one
-    # action, and a lazily-persisted frame is recomputed by each
-    # concurrently-launched stage before the cache fills.
-    e.count()
+    equi-join — every triangle is found exactly once, and the join work
+    is bounded by Σ deg²(v) over the ORDERED graph, which keeps hubs from
+    exploding the wedge count. The edge set is materialized once for the
+    five branches that read it."""
+    e = _cut(_undirected(edges, src, dst))
     ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
     wedges = ab.join(bc, "y")  # x < y < z by construction
@@ -181,12 +263,7 @@ def triangle_counts(
         .agg(F.count("*").alias("triangles"))
     )
     # Vertices in no triangle still appear, with 0.
-    verts = (
-        e.select(F.col("a").alias("vertex"))
-        .unionByName(e.select(F.col("b").alias("vertex")))
-        .distinct()
-    )
-    return verts.join(per_vertex, "vertex", "left").select(
+    return _endpoints(e, "vertex").join(per_vertex, "vertex", "left").select(
         "vertex", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
     )
 
@@ -194,30 +271,13 @@ def triangle_counts(
 def kcore(
     edges: DataFrame, k: int, src: str = "src", dst: str = "dst", rounds: int = 12
 ) -> DataFrame:
-    """Vertices of the k-core: iteratively peel vertices with degree
-    < k (within the remaining subgraph) until the fixpoint. Runs a
-    FIXED ``rounds`` iterations — peeling is monotone, so once the
-    fixpoint is reached further rounds are no-ops, and a fixed count
-    makes the result reproducible by an unrolled-SQL oracle
-    (q_kcore generates the same rounds as CTE stages). ``rounds`` must
-    exceed the peel depth; each round is one degree aggregate + two
-    semi-joins on the vertex key, lineage truncated per round."""
-    e = (
-        edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
-                     F.greatest(F.col(src), F.col(dst)).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    """Vertices of the k-core: peel vertices of degree < k for at most
+    ``rounds`` rounds (each a degree aggregate + two semi-joins), exiting
+    at the peel fixpoint (an edge-set digest). Peeling is monotone, so this
+    equals q_kcore's fixed-round unrolled-SQL oracle; ``rounds`` must
+    exceed the peel depth."""
 
-    def digest(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"), F.expr("bit_xor(xxhash64(a, b))").alias("h")
-        ).first()
-        return (row["n"], row["h"])
-
-    prev = digest(e)
-    for _ in range(rounds):
+    def peel(e, _):
         deg = (
             e.select(F.col("a").alias("v"))
             .unionByName(e.select(F.col("b").alias("v")))
@@ -225,29 +285,19 @@ def kcore(
             .agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("v")
-        e = (
+        return (
             e.join(keep.select(F.col("v").alias("a")), "a", "left_semi")
             .join(keep.select(F.col("v").alias("b")), "b", "left_semi")
-            .localCheckpoint(eager=False)
         )
-        # Early exit at the peel fixpoint: the remaining rounds are
-        # no-ops, so stopping matches the fixed-round oracle exactly
-        # while paying only peel-depth rounds of work (one tiny digest
-        # action per round, same recipe as connected_components).
-        cur = digest(e)
-        if cur == prev:
-            break
-        prev = cur
-    return (
-        e.select(F.col("a").alias("vertex"))
-        .unionByName(e.select(F.col("b").alias("vertex")))
-        .distinct()
-    )
+
+    e = _cut(_undirected(edges, src, dst))
+    e, _ = _fixpoint(e, peel, rounds, _Settled(e))
+    return _endpoints(e, "vertex")
 
 
-def _union_find(edge_rows, vert_rows) -> list[tuple]:
-    """Driver-side union-find with path compression — the finishing
-    move once the (contracted) graph fits the driver cap."""
+def _union_find(rows) -> list[tuple]:
+    """(vertex, min vertex of its component) for every endpoint of the
+    (a, b) ``rows`` — driver-side union-find with path compression."""
     parent: dict = {}
 
     def find(x):
@@ -258,13 +308,13 @@ def _union_find(edge_rows, vert_rows) -> list[tuple]:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in edge_rows:
+    for a, b in rows:
         ra, rb = find(a), find(b)
         if ra != rb:
             # union by min so the component label is the min vertex id
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return [(v, find(v)) for v in vert_rows]
+    return [(v, find(v)) for v in sorted({x for ab in rows for x in ab})]
 
 
 def connected_components(
@@ -277,123 +327,99 @@ def connected_components(
     """(vertex, component) for every vertex incident to an edge, where
     ``component`` is the minimum vertex id in its connected component.
 
-    Two regimes:
+    - **Above ``driver_cap`` distinct edges**: large-star / small-star
+      rounds (Kiveris et al., SoCC'14) until an edge-set digest shows a
+      star forest; O(log d) rounds on any shape, including the chains
+      that take label propagation O(diameter). Raises if
+      ``max_iter`` rounds do not converge. Contraction keeps every
+      component, vertex and minimum, so once a round shrinks the edges
+      under the cap they finish on the driver.
+    - **At or below the cap**: one driver-side union-find pass over ≤ cap
+      short rows (a near-dup pair graph is tiny relative to its corpus).
+      ``driver_cap=0`` forces the distributed path.
 
-    - **Above ``driver_cap`` edges**: alternating large-star/small-star
-      contraction until the edge set is a star forest (fixpoint —
-      detected by an order-insensitive edge-set digest, one tiny action
-      per round); raises if ``max_iter`` rounds do not converge.
-      O(log d) rounds on any graph shape, including the chain graphs
-      that defeat plain propagation.
-    - **At or below the cap**: one driver-side union-find pass. A
-      near-dup pair graph is tiny relative to its corpus, and each
-      contraction round shrinks the edge set monotonically, so this is
-      a BOUNDED driver action (≤ cap short rows — the same posture as
-      the k-means training sample in operators.similarity), not a
-      collect-the-data anti-pattern; it replaces several whole-cluster
-      job launches with microseconds of driver work. Set
-      ``driver_cap=0`` to force the fully distributed path.
+    Both regimes give the same labels. Self loops count toward the cap
+    and make a self-loop-only vertex its own component, but leave the
+    contraction input. DuckDB's recursive CTE certifies q_dup_clusters.
     """
-    # Persist the canonicalized input: the edge frame's lineage is often
-    # expensive (a similarity join) and both regimes read it (the probe
-    # below fills the cache for whatever it scans; the distributed
-    # digest completes the fill over the same reused shuffle). Self
-    # loops are kept in `raw` (a self-loop-only vertex is still incident
-    # to an edge) and dropped from the contraction input below.
     spark = edges.sparkSession
-    raw = (
+    raw = _cut(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
             F.least(F.col(src), F.col(dst)).alias("b"),
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
     vt = raw.schema[0].dataType.simpleString()
-
-    # Probe-and-collect in ONE action (r11, guide §1.2 "fewer passes"):
-    # limit(cap+1).collect() returns the WHOLE distinct edge set when it
-    # fits (a limit above the row count is the identity — content is a
-    # set, order irrelevant to union-find) and at most cap+1 short rows
-    # when it does not, so the common tiny-pair-graph case pays one
-    # driver action instead of the previous digest-then-collect two.
-    # The distinct's shuffle runs once either way. Regime choice keys on
-    # the distinct row count INCLUDING self loops (previously:
-    # excluding) — both regimes compute the exact same components, so
-    # the answer is unaffected by where the boundary falls (pinned by
-    # test_cc_regime_boundary_answers_match).
-    # bounded: at most driver_cap + 1 rows by the limit
-    probe_rows = raw.limit(driver_cap + 1).collect() if driver_cap else []
-    if driver_cap and len(probe_rows) <= driver_cap:
-        raw.unpersist()
-        rows = [(r["a"], r["b"]) for r in probe_rows]
-        vert_rows = sorted({x for ab in rows for x in ab})
-        edge_rows = [ab for ab in rows if ab[0] != ab[1]]
-        return spark.createDataFrame(
-            _union_find(edge_rows, vert_rows),
-            schema=f"vertex {vt}, component {vt}",
-        )
+    schema = f"vertex {vt}, component {vt}"
+    rows = _small_graph(raw, driver_cap)
+    if rows is not None:
+        return spark.createDataFrame(_union_find(rows), schema=schema)
 
     e = raw.filter(F.col("a") != F.col("b"))
-
-    def digest(df: DataFrame):
-        # Order-insensitive fixpoint fingerprint: (n, XOR xxhash64(a,b))
-        # — xor never overflows (sum of longs would trip ANSI mode) and
-        # is exact on a distinct edge set. At the star-forest fixpoint
-        # both halves leave the set invariant; a collision faking
-        # convergence early would need 2^-64-scale luck AND equal count.
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    prev = digest(e)
-
-    verts = (
-        raw.select(F.col("a").alias("vertex"))
-        .unionByName(raw.select(F.col("b").alias("vertex")))
-        .distinct()
+    settled = _Settled(e, driver_cap)
+    e, stopped = _fixpoint(
+        e, lambda e, _: _small_star(_large_star(e)), max_iter, settled
     )
-    # Each star round references `e` several times (symmetrize + the
-    # window), so lineage grows GEOMETRICALLY round over round — without
-    # truncation the analyzer itself OOMs after ~10 rounds. Lazy
-    # localCheckpoint cuts the plan at every round boundary and is
-    # materialized BY the digest action, one job per round (the standard
-    # iterative-graph recipe; a production cluster would use a reliable
-    # checkpoint dir to also survive executor loss).
-    converged = False
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = digest(e)  # this action materializes the checkpoint
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-        if cur[0] <= driver_cap:
-            # Contraction shrank the graph under the cap: finish on the
-            # driver (verts must come from the ORIGINAL graph — the
-            # contracted edge set no longer names every vertex).
-            edge_rows = [(r["a"], r["b"]) for r in e.collect()]  # bounded: <= driver_cap (cur[0] guard)
-            vert_rows = [r["vertex"] for r in verts.collect()]  # bounded: vertex set of the <=cap graph
-            return spark.createDataFrame(
-                _union_find(edge_rows, vert_rows),
-                schema=f"vertex {vt}, component {vt}",
-            )
-    if not converged:
+    if not stopped:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
-
-    # Star forest: every non-root has exactly one edge (v → root); the
-    # root itself has none → component = self.
-    return verts.join(
-        e.select(F.col("a").alias("vertex"), F.col("b").alias("component")),
-        "vertex",
-        "left",
-    ).select(
+    rows = _small_graph(e, driver_cap) if settled.n <= driver_cap else None
+    if rows is not None:
+        labels = spark.createDataFrame(_union_find(rows), schema=schema)
+    else:
+        # Star forest: every non-root has exactly one edge (v → root).
+        labels = e.select(F.col("a").alias("vertex"), F.col("b").alias("component"))
+    # Vertices the contracted edges no longer name (self-loop-only ones,
+    # and the roots of a star forest) label themselves.
+    return _endpoints(raw, "vertex").join(labels, "vertex", "left").select(
         "vertex", F.coalesce("component", F.col("vertex")).alias("component")
     )
+
+
+def _adjacency(rows) -> dict:
+    adj: dict = {}
+    for u, v in rows:
+        adj.setdefault(u, []).append(v)
+    return adj
+
+
+def _bfs(adj: dict, source, max_hops: int) -> dict:
+    """Driver BFS kernel: {vertex: hops} within ``max_hops`` of ``source``."""
+    hops = {source: 0}
+    frontier = [source]
+    for h in range(1, max_hops + 1):
+        frontier = dict.fromkeys(
+            v for u in frontier for v in adj.get(u, ()) if v not in hops
+        )
+        if not frontier:
+            break
+        hops.update(dict.fromkeys(frontier, h))
+    return hops
+
+
+def _bfs_rounds(
+    e: DataFrame, seeds: DataFrame, max_hops: int, until_empty: bool
+) -> DataFrame:
+    """Distributed source-keyed BFS from the settled table ``seeds``
+    (s, v, d=0): each round joins the latest level to the (u, v) edges
+    and keeps the minimum d per (s, v), so only newly reached pairs get
+    d=round+1. With ``until_empty`` it stops at the first empty level
+    (one count per round); otherwise it runs all ``max_hops`` rounds
+    without an action."""
+    nbr = e.select(F.col("u").alias("v"), F.col("v").alias("w"))
+
+    def grow(st, i):
+        level = st.filter(F.col("d") == i).join(nbr, "v").select(
+            "s", F.col("w").alias("v"), F.lit(i + 1).alias("d")
+        )
+        return st.unionByName(level).groupBy("s", "v").agg(F.min("d").alias("d"))
+
+    def frontier_empty(st, i):
+        return st.filter(F.col("d") == i + 1).count() == 0
+
+    st, _ = _fixpoint(seeds, grow, max_hops, frontier_empty if until_empty else None)
+    return st
 
 
 def bfs_hops(
@@ -405,72 +431,24 @@ def bfs_hops(
     driver_cap: int = 100_000,
 ) -> DataFrame:
     """(vertex, hops): minimum number of directed edges from ``source``
-    to every vertex reachable within ``max_hops`` — classic frontier
-    BFS as fixed-point iteration.
-
-    Each round is ONE equi-join of the current frontier against the
-    (cached, pre-distinct'd) edge set plus an anti-join against the
-    settled distance table — the same per-round shuffle shape as
-    ``pagerank``, with work proportional to the frontier, not the
-    graph. The per-round early-exit action is a bounded ``count`` on
-    the frontier (frontier empty → every reachable vertex is settled);
-    ``localCheckpoint`` truncates the growing lineage exactly as the
-    star-contraction loop does. Rounds are bounded by the graph's
-    eccentricity from ``source``, O(diameter) — at 100 TB this is the
-    standard Pregel-style BFS schedule."""
+    to every vertex reachable within ``max_hops`` — ``msbfs_closeness``'s
+    BFS with one source. Under ``driver_cap`` distinct edges the driver
+    kernel runs; above it the distributed frontier loop, which exits at
+    the first empty frontier (O(eccentricity) rounds, the Pregel BFS
+    schedule)."""
     spark = edges.sparkSession
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    vt = e.schema[0].dataType.simpleString()
-    # Bounded-driver fast path, same posture (and same cap semantics)
-    # as connected_components: the DISTINCT pair set of an
-    # id-compressed interaction graph is metadata-scale relative to the
-    # event log that produced it, and a Python BFS over ≤ cap edges
-    # replaces O(diameter) whole-cluster job launches with microseconds
-    # of driver work. ``driver_cap=0`` forces the distributed loop.
-    if driver_cap and e.count() <= driver_cap:
-        adj: dict = {}
-        for r in e.collect():  # bounded: <= driver_cap (count guard above)
-            adj.setdefault(r["u"], []).append(r["v"])
-        e.unpersist()
-        hops = {source: 0}
-        frontier_py = [source]
-        for h in range(1, max_hops + 1):
-            nxt = []
-            for u in frontier_py:
-                for v in adj.get(u, ()):
-                    if v not in hops:
-                        hops[v] = h
-                        nxt.append(v)
-            if not nxt:
-                break
-            frontier_py = nxt
-        return spark.createDataFrame(
-            sorted(hops.items()), schema=f"vertex {vt}, hops int"
+    with _held(_directed(edges, src, dst, loops=False).distinct()) as e:
+        vt = e.schema[0].dataType.simpleString()
+        rows = _small_graph(e, driver_cap)
+        if rows is not None:
+            return spark.createDataFrame(
+                sorted(_bfs(_adjacency(rows), source, max_hops).items()),
+                schema=f"vertex {vt}, hops int",
+            )
+        seeds = spark.createDataFrame([(source, source, 0)], f"s {vt}, v {vt}, d int")
+        return _bfs_rounds(e, seeds, max_hops, until_empty=True).select(
+            F.col("v").alias("vertex"), F.col("d").alias("hops")
         )
-    dist = spark.createDataFrame([(source, 0)], schema=f"vertex {vt}, hops int")
-    frontier = dist.select("vertex")
-    for h in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["vertex"] == e["u"])
-            .select(F.col("v").alias("vertex"))
-            .distinct()
-            .join(dist.select("vertex"), "vertex", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if nxt.count() == 0:
-            break
-        dist = dist.unionByName(
-            nxt.withColumn("hops", F.lit(h))
-        ).localCheckpoint(eager=False)
-        frontier = nxt
-    e.unpersist()
-    return dist
 
 
 def temporal_reach(
@@ -484,103 +462,59 @@ def temporal_reach(
 ) -> DataFrame:
     """(vertex, t): earliest TIME-RESPECTING arrival from ``source`` —
     a path may only continue along edges whose timestamp is ≥ the
-    arrival time at their tail (the causal-reachability semantic for
-    event/telemetry graphs: "what could this incident have touched,
+    arrival time at their tail ("what could this incident have touched,
     respecting time order").
 
-    Label-correcting fixpoint: each round relaxes every settled arrival
-    through the (cached) edge set and folds with a keyed ``min`` — one
-    join + one hash agg per round, the Pregel shape. Convergence is
-    detected by an order-insensitive digest (count + XOR of
-    (vertex, μs)); rounds are bounded by the longest IMPROVING chain,
-    which on temporal graphs is short (each improvement must strictly
-    decrease an arrival time along a time-ordered path). Raises if
-    ``max_rounds`` does not converge — a silently unconverged
-    reachability set is worse than an error."""
+    Distributed: a label-correcting fixpoint — relax every arrival
+    through the edges, fold with a keyed ``min``, until nothing changes;
+    raises if ``max_rounds`` does not converge (an unconverged
+    reachability set is worse than an error). Under ``driver_cap``
+    distinct (u, v, ts) edges: earliest-arrival Dijkstra on the driver
+    (Wu et al., VLDB 2014), which needs no round guard, so it returns the
+    exact fixpoint even of a chain that would trip ``max_rounds``.
+    """
     spark = edges.sparkSession
-    e = (
-        edges.select(
-            F.col(src).alias("u"), F.col(dst).alias("v"), F.col(ts_col).alias("ets")
-        )
-        .filter(
-            F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col("u") != F.col("v"))
-        )
-        # a null timestamp can never satisfy the ets >= t admissibility
-        # predicate — drop it here so both execution paths agree
-        .filter(F.col("ets").isNotNull())
-        .distinct()
-        .persist()
-    )
-    vt = e.schema[0].dataType.simpleString()
-    # Bounded-driver fast path (connected_components posture): when the
-    # DISTINCT (u, v, ts) edge set fits under the cap, earliest-arrival
-    # Dijkstra on the driver is exact — arrival times are monotone
-    # along admissible paths (each hop's timestamp ≥ the tail's
-    # arrival), so settling vertices in arrival order is the classic
-    # time-respecting-path algorithm (Wu et al., VLDB 2014). Replaces
-    # O(rounds) whole-cluster job launches; ``driver_cap=0`` forces the
-    # distributed fixpoint (the 100 TB path). Contract note:
-    # ``max_rounds`` is the DISTRIBUTED strategy's convergence guard
-    # (it raises rather than return an unconverged set), not a path
-    # bound — Dijkstra needs no such guard, so a deep improving chain
-    # that would trip the guard distributed still returns its exact
-    # fixpoint here.
-    if driver_cap and e.count() <= driver_cap:
-        import bisect
-        import datetime
-        import heapq
+    # A null timestamp can never satisfy the ets >= t admissibility
+    # predicate; dropping it here makes both execution paths agree.
+    timed = _directed(edges, src, dst, F.col(ts_col).alias("ets"), loops=False)
+    with _held(timed.filter(F.col("ets").isNotNull()).distinct()) as e:
+        vt = e.schema[0].dataType.simpleString()
+        rows = _small_graph(e, driver_cap)
+        if rows is not None:
+            adj: dict = {}
+            for u, v, ts in sorted(rows, key=lambda r: r[2]):
+                adj.setdefault(u, []).append((ts, v))
+            t0 = datetime.datetime(1970, 1, 1)
+            best, heap = {source: t0}, [(t0, source)]
+            while heap:
+                t, u = heapq.heappop(heap)
+                if t > best[u]:
+                    continue
+                out = adj.get(u, [])
+                for ts, v in out[bisect.bisect_left(out, (t,)):]:
+                    if v not in best or ts < best[v]:
+                        best[v] = ts
+                        heapq.heappush(heap, (ts, v))
+            return spark.createDataFrame(sorted(best.items()), f"vertex {vt}, t timestamp")
 
-        adj: dict = {}
-        for r in e.collect():  # bounded: <= driver_cap (count guard above)
-            adj.setdefault(r["u"], {}).setdefault(r["v"], []).append(r["ets"])
-        e.unpersist()
-        for nbrs in adj.values():
-            for tss in nbrs.values():
-                tss.sort()
-        t0 = datetime.datetime(1970, 1, 1)
-        best = {source: t0}
-        heap = [(t0, source)]
-        while heap:
-            t, u = heapq.heappop(heap)
-            if t > best.get(u, t):
-                continue
-            for v, tss in adj.get(u, {}).items():
-                i = bisect.bisect_left(tss, t)
-                if i < len(tss) and (v not in best or tss[i] < best[v]):
-                    best[v] = tss[i]
-                    heapq.heappush(heap, (tss[i], v))
-        return spark.createDataFrame(
-            sorted(best.items()), schema=f"vertex {vt}, t timestamp"
-        )
-    arrival = spark.createDataFrame(
-        [(source, "1970-01-01 00:00:00")], schema=f"vertex {vt}, t string"
-    ).select("vertex", F.col("t").cast("timestamp").alias("t"))
+        def relax(arrival, _):
+            hop = arrival.join(e.withColumnRenamed("u", "vertex"), "vertex")
+            return (
+                arrival.unionByName(
+                    hop.filter(F.col("ets") >= F.col("t"))
+                    .select(F.col("v").alias("vertex"), F.col("ets").alias("t"))
+                )
+                .groupBy("vertex")
+                .agg(F.min("t").alias("t"))
+            )
 
-    def digest(df: DataFrame):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr("bit_xor(xxhash64(vertex, unix_micros(t)))").alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    prev = digest(arrival)
-    for _ in range(max_rounds):
-        relax = (
-            arrival.join(e, (arrival["vertex"] == e["u"]) & (e["ets"] >= arrival["t"]))
-            .select(F.col("v").alias("vertex"), F.col("ets").alias("t"))
-        )
-        arrival = (
-            arrival.unionByName(relax)
-            .groupBy("vertex")
-            .agg(F.min("t").alias("t"))
-            .localCheckpoint(eager=False)
-        )
-        cur = digest(arrival)
-        if cur == prev:
-            e.unpersist()
-            return arrival
-        prev = cur
-    raise RuntimeError(f"temporal_reach did not converge in {max_rounds} rounds")
+        arrival = spark.createDataFrame(
+            [(source, "1970-01-01 00:00:00")], schema=f"vertex {vt}, t string"
+        ).select("vertex", F.col("t").cast("timestamp").alias("t"))
+        arrival, stopped = _fixpoint(arrival, relax, max_rounds, _Settled(arrival))
+    if not stopped:
+        raise RuntimeError(f"temporal_reach did not converge in {max_rounds} rounds")
+    return arrival
 
 
 def label_propagation(
@@ -589,51 +523,36 @@ def label_propagation(
     """(vertex, community) after ``rounds`` SYNCHRONOUS label-propagation
     steps over the undirected graph: every vertex starts labeled with
     its own id and each round adopts the most frequent label among its
-    neighbors (ties → smallest label). Unlike ``connected_components``
-    (min-label to convergence), a small fixed round count localizes
-    labels to dense neighborhoods — the classic cheap community
-    detector (Raghavan et al. 2007), deterministic here because the
-    update is synchronous with a total tie order, so it is
-    oracle-checkable round for round.
-
-    Scale posture: each round is one join of the label table onto the
-    edge list (both keyed on vertex — co-partitioned after round 1)
-    and two keyed hash aggregates (neighbor-label counts, then a
-    ``min_by`` argmax per vertex); no windows over unbounded
-    partitions, no driver-side state. Rounds are constant (not
-    data-dependent), so lineage stays shallow without checkpointing.
+    neighbors (ties → smallest label). A small fixed round count
+    localizes labels to dense neighborhoods — the classic cheap
+    community detector (Raghavan et al. 2007), deterministic here
+    because the update is synchronous with a total tie order, so it is
+    oracle-checkable round for round. Each round joins the ≤|V|-row
+    label table onto the materialized symmetric edges, then two keyed
+    aggregates (neighbor-label counts, a ``min_by`` argmax).
     """
-    # persist: the symmetrized edge set is scanned by every round (and
-    # by the vertex derivation); without it each round re-runs the
-    # distinct shuffle. Each round's ≤|V|-row label table is lazily
-    # checkpointed so the chained lineage materializes once per round
-    # inside the one final action.
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("a").alias("vertex")).distinct()
-        .select("vertex", F.col("vertex").alias("community"))
-    )
-    for _ in range(rounds):
+    def step(labels, _):
         cnt = (
-            sym.join(labels, sym["b"] == labels["vertex"])
+            sym.join(labels.withColumnRenamed("vertex", "b"), "b")
             .groupBy(F.col("a").alias("vertex"), "community")
             .agg(F.count("*").alias("c"))
         )
-        labels = cnt.groupBy("vertex").agg(
+        return cnt.groupBy("vertex").agg(
             F.min_by(
                 "community",
                 F.struct((-F.col("c")).alias("nc"), F.col("community").alias("l")),
             ).alias("community")
-        ).localCheckpoint(eager=False)
-    return labels
+        )
+
+    with _held(
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    ) as sym:
+        labels = sym.select(F.col("a").alias("vertex")).distinct()
+        labels = labels.select("vertex", F.col("vertex").alias("community"))
+        return _fixpoint(labels, step, rounds)[0]
 
 
 def sssp_bounded(
@@ -648,71 +567,38 @@ def sssp_bounded(
     """(vertex, dist): minimum path weight from ``source`` over paths
     of AT MOST ``max_hops`` edges (directed; integer weights) — the
     hop-bounded Bellman-Ford. The hop bound makes the semantics exact
-    and total regardless of negative weights or cycles (no
-    convergence/negative-cycle caveat), which is also what makes it
-    certifiable round-for-round against a recursive-CTE oracle.
-
-    Scale posture: each round joins the ≤|V|-row frontier (exactly-k
-    hop minima) to the edge list on the vertex key and re-minimizes —
-    one keyed shuffle per round, rounds constant; the accumulated
-    union stays O(rounds·|V|) and collapses in one final min
-    aggregate. Lineage is linear in rounds (no geometric growth), so
-    no checkpoint is needed.
+    and total regardless of negative weights or cycles, which is also
+    what makes it certifiable against a recursive-CTE oracle. Under
+    ``driver_cap`` per-pair min-weight edges Bellman-Ford runs on the
+    driver; above, each round joins the ≤|V|-row distance table to the
+    edges and re-minimizes, one keyed shuffle per round.
     """
-    # persist: the edge aggregate is referenced by every round; the
-    # frontier checkpoints stop each round's ≤|V|-row result from being
-    # re-derived by later rounds AND by the accumulated union (without
-    # them the one final action replays round k inside rounds k+1..K —
-    # O(K²) joins; lazy localCheckpoint materializes each round exactly
-    # once inside that action, same recipe as connected_components).
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w_col).alias("w"))
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-        .persist()
-    )
     spark = edges.sparkSession
-    vt = e.schema[0].dataType.simpleString()
-    # Bounded-driver fast path (connected_components posture): the
-    # per-pair min-weight edge aggregate is ≤|V|² rows however large
-    # the event log; under the cap, hop-bounded Bellman-Ford in Python
-    # replaces max_hops whole-cluster rounds. ``driver_cap=0`` forces
-    # the distributed loop (the 100 TB path).
-    if driver_cap and e.count() <= driver_cap:
-        adj: dict = {}
-        for r in e.collect():  # bounded: <= driver_cap (count guard above)
-            adj.setdefault(r["u"], []).append((r["v"], r["w"]))
-        e.unpersist()
-        best = {source: 0}
-        frontier_py = {source: 0}
-        for _ in range(max_hops):
-            nxt: dict = {}
-            for u, d in frontier_py.items():
-                for v, w in adj.get(u, ()):
-                    nd = d + w
-                    if nd < nxt.get(v, nd + 1):
-                        nxt[v] = nd
-            frontier_py = nxt
-            for v, d in nxt.items():
-                if d < best.get(v, d + 1):
-                    best[v] = d
-            if not frontier_py:
-                break
-        return spark.createDataFrame(
-            sorted(best.items()), schema=f"vertex {vt}, dist bigint"
-        )
-    frontier = spark.createDataFrame([(source, 0)], schema=f"vertex {vt}, dist bigint")
-    acc = frontier
-    for _ in range(max_hops):
-        frontier = (
-            frontier.join(e, frontier["vertex"] == e["u"])
-            .select(F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist"))
-            .groupBy("vertex")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        acc = acc.unionByName(frontier)
-    return acc.groupBy("vertex").agg(F.min("dist").alias("dist"))
+    uvw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w_col).alias("w"))
+    with _held(uvw.groupBy("u", "v").agg(F.min("w").alias("w"))) as e:
+        vt = e.schema[0].dataType.simpleString()
+        schema = f"vertex {vt}, dist bigint"
+        rows = _small_graph(e, driver_cap)
+        if rows is not None:
+            best = {source: 0}
+            for _ in range(max_hops):
+                nxt = dict(best)
+                for u, v, w in rows:
+                    if u in best and best[u] + w < nxt.get(v, best[u] + w + 1):
+                        nxt[v] = best[u] + w
+                if nxt == best:
+                    break
+                best = nxt
+            return spark.createDataFrame(sorted(best.items()), schema=schema)
+
+        def relax(best, _):
+            hop = best.join(e.withColumnRenamed("u", "vertex"), "vertex").select(
+                F.col("v").alias("vertex"), (F.col("dist") + F.col("w")).alias("dist")
+            )
+            return best.unionByName(hop).groupBy("vertex").agg(F.min("dist").alias("dist"))
+
+        best = spark.createDataFrame([(source, 0)], schema=schema)
+        return _fixpoint(best, relax, max_hops)[0]
 
 
 def hits_scores(
@@ -724,43 +610,20 @@ def hits_scores(
     """(vertex, authority, hub) after a FIXED number of HITS iterations
     (Kleinberg 1999), in EXACT integer arithmetic.
 
-    The textbook recurrence alternates two vectors (a = Aᵀh, h = Aa),
-    which a single-self-reference recursive oracle can't express; but
-    the authority vector alone satisfies a_{t+1} = (AᵀA) a_t — one
-    fixed matrix, the SAME single-join-per-round shape as ``pagerank``.
-    So: materialize the co-citation matrix C = AᵀA once (edge self-join
-    on the source key — Σ outdeg² wedge pairs, the triangle-counting
-    bound), run ``iters`` rounds of C·a starting from all-ones, and
-    finish with one hub multiply h = A·a. Normalization is skipped
-    ENTIRELY: with a fixed iteration count the unnormalized integers
-    induce the identical ranking, every intermediate is an exact
-    BIGINT (no float drift, hash-exact across engines), and the
-    magnitude stays far under 2^63 for the bounded-vertex-space graphs
-    this targets. That bound is now ENFORCED, not just documented: the
-    max co-citation row sum is measured once (one scalar aggregate on
-    the checkpointed C) and the run aborts with a clear error if
-    maxrow^(iters+1) could cross 2^62 — Spark's non-ANSI BIGINT sum
-    would otherwise wrap silently and corrupt the ranking.
-
-    Plan: C is checkpointed once; each round is one equi-join + keyed
-    sum (Pregel shape); zero-weight self-entries keep isolated-authority
-    vertices present. Nothing collects to the driver.
+    The authority vector alone satisfies a_{t+1} = (AᵀA) a_t, one fixed
+    matrix that a single-self-reference recursive oracle can express:
+    materialize the co-citation matrix C = AᵀA once, run ``iters``
+    rounds of C·a from all-ones, finish with one hub multiply h = A·a.
+    Unnormalized integers induce the identical ranking and stay exact
+    BIGINTs; Spark's non-ANSI sum wraps silently, so the run aborts up
+    front if maxrow^(iters+1) could cross 2^62. Zero-weight self-entries
+    keep isolated-authority vertices present.
     """
-    raw = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        raw.select(F.col("u").alias("x"))
-        .unionByName(raw.select(F.col("v").alias("x")))
-        .distinct()
-    )
-    e1 = raw.select(F.col("u"), F.col("v").alias("w"))
-    e2 = raw.select(F.col("u"), F.col("v").alias("vv"))
-    cmat = (
-        e1.join(e2, "u")
+    raw = _cut(_directed(edges, src, dst).distinct())
+    verts = _endpoints(raw, "x")
+    cmat = _cut(
+        raw.select("u", F.col("v").alias("w"))
+        .join(raw.select("u", F.col("v").alias("vv")), "u")
         .groupBy("w", "vv")
         .agg(F.count("*").alias("c"))
         .unionByName(
@@ -768,15 +631,9 @@ def hits_scores(
                 F.col("x").alias("w"), F.col("x").alias("vv"), F.lit(0).cast("long").alias("c")
             )
         )
-        .localCheckpoint()
     )
-    # Overflow guard: a_{t+1}[vv] = Σ_w c[w,vv]·a_t[w], so with a_0 ≡ 1
-    # every |a_t| ≤ maxrow^t where maxrow = max_vv Σ_w c[w,vv], and the
-    # final hub multiply adds one more factor. Spark's non-ANSI BIGINT
-    # sum wraps SILENTLY on overflow — fail loudly up front instead of
-    # returning corrupted rankings on a denser graph / larger iters.
-    import math
-
+    # a_{t+1}[vv] = Σ_w c[w,vv]·a_t[w], so with a_0 ≡ 1 every
+    # |a_t| ≤ maxrow^t; the hub multiply adds one more factor.
     max_row = (
         cmat.groupBy("vv").agg(F.sum("c").alias("s")).agg(F.max("s")).first()[0]
         or 0
@@ -788,15 +645,17 @@ def hits_scores(
             f"bound maxrow^(iters+1) ≥ 2^62). Lower iters or add "
             f"per-round scaling."
         )
-    a = verts.select(F.col("x").alias("w"), F.lit(1).cast("long").alias("a"))
-    for _ in range(iters):
-        a = (
+
+    def step(a, _):
+        return (
             cmat.join(a, "w")
             .groupBy("vv")
             .agg(F.sum(F.col("c") * F.col("a")).alias("a"))
             .select(F.col("vv").alias("w"), "a")
-            .localCheckpoint(eager=False)
         )
+
+    a = verts.select(F.col("x").alias("w"), F.lit(1).cast("long").alias("a"))
+    a, _ = _fixpoint(a, step, iters)
     hub = (
         raw.join(a.select(F.col("w").alias("v"), F.col("a")), "v")
         .groupBy("u")
@@ -820,89 +679,30 @@ def msbfs_closeness(
     max_hops: int = 3,
     driver_cap: int = 100_000,
 ) -> DataFrame:
-    """(vertex, n_reached, total_dist): hop-bounded closeness
-    centrality sufficient statistics from a MULTI-SOURCE BFS — every
-    vertex is a source, distances capped at ``max_hops`` (the k-hop
-    closeness used on large graphs, since exact all-pairs closeness is
-    O(V·E) and unbounded hops are meaningless on a 100 TB event
-    graph). Emits exact integers (count of vertices reached in 1..h
-    hops and the sum of their min-distances) so certification needs no
-    float rendering; harmonic/closeness scores are one division away
-    for consumers.
-
-    Plan: the frontier is keyed by (source, vertex) — one equi-join
-    against the cached distinct edge set + one keyed min per round,
-    the Pregel BFS schedule with a source dimension riding along. Work
-    per round is |frontier|·outdeg, and the settled table is bounded
-    by |V|² — for id-compressed interaction graphs (the mod-bucketed
-    fixture) that saturates, which is exactly why the bound is safe.
-    Bounded-driver fast path below the cap, same posture as
-    ``bfs_hops``/``connected_components``; ``driver_cap=0`` forces the
-    distributed loop.
+    """(vertex, n_reached, total_dist): k-hop closeness sufficient
+    statistics from a MULTI-SOURCE BFS — every vertex is a source,
+    distances capped at ``max_hops`` (exact all-pairs closeness is
+    O(V·E)). Exact integers: vertices reached in 1..max_hops hops and the
+    sum of their min-distances; a vertex that reaches nothing reports
+    (0, 0). The shared BFS: the driver kernel per source under
+    ``driver_cap``, else the frontier loop keyed by (source, vertex).
     """
     spark = edges.sparkSession
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-    vt = e.schema[0].dataType.simpleString()
-    verts = (
-        e.select(F.col("u").alias("x"))
-        .unionByName(e.select(F.col("v").alias("x")))
-        .distinct()
-    )
-    if driver_cap and e.count() <= driver_cap:
-        adj: dict = {}
-        vs = set()
-        for r in e.collect():  # bounded: <= driver_cap (count guard above)
-            adj.setdefault(r["u"], []).append(r["v"])
-            vs.add(r["u"])
-            vs.add(r["v"])
-        e.unpersist()
-        out = []
-        for s in sorted(vs):
-            hops = {s: 0}
-            frontier_py = [s]
-            for h in range(1, max_hops + 1):
-                nxt = []
-                for u in frontier_py:
-                    for v in adj.get(u, ()):
-                        if v not in hops:
-                            hops[v] = h
-                            nxt.append(v)
-                if not nxt:
-                    break
-                frontier_py = nxt
-            reached = [d for d in hops.values() if d > 0]
-            out.append((s, len(reached), sum(reached)))
-        return spark.createDataFrame(
-            out, schema=f"vertex {vt}, n_reached bigint, total_dist bigint"
-        )
-
-    dist = verts.select(
-        F.col("x").alias("s"), F.col("x").alias("v"), F.lit(0).alias("d")
-    )
-    frontier = dist
-    for h in range(1, max_hops + 1):
-        grown = (
-            frontier.join(e, frontier["v"] == e["u"])
-            .select(F.col("s"), e["v"].alias("v"), F.lit(h).alias("d"))
-            .distinct()
-            # drop already-settled (s, v): min-dist semantics + keeps the
-            # frontier from re-walking earlier levels
-            .join(dist.select("s", "v"), ["s", "v"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        dist = dist.unionByName(grown).localCheckpoint(eager=False)
-        frontier = grown
-    return (
-        dist.filter(F.col("d") > 0)
-        .groupBy(F.col("s").alias("vertex"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_reached"),
-            F.sum("d").cast("bigint").alias("total_dist"),
-        )
+    with _held(_directed(edges, src, dst, loops=False).distinct()) as e:
+        vt = e.schema[0].dataType.simpleString()
+        rows = _small_graph(e, driver_cap)
+        if rows is not None:
+            adj = _adjacency(rows)
+            out = []
+            for s in sorted({x for uv in rows for x in uv}):
+                reached = [d for d in _bfs(adj, s, max_hops).values() if d > 0]
+                out.append((s, len(reached), sum(reached)))
+            return spark.createDataFrame(
+                out, schema=f"vertex {vt}, n_reached bigint, total_dist bigint"
+            )
+        seeds = _endpoints(e, "v").select(F.col("v").alias("s"), "v", F.lit(0).alias("d"))
+        st = _bfs_rounds(e, seeds, max_hops, until_empty=False)
+    return st.groupBy(F.col("s").alias("vertex")).agg(
+        F.count(F.when(F.col("d") > 0, 1)).cast("bigint").alias("n_reached"),
+        F.sum("d").cast("bigint").alias("total_dist"),
     )

@@ -16,7 +16,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-from ..streaming.pipeline import flow_projection, windowed_flow_metrics
+from ..streaming.pipeline import (
+    await_stream,
+    flow_projection,
+    windowed_flow_metrics,
+)
 from .flow import DST_MOD, ERROR_THRESHOLD, SRC_MOD
 from .registry import register
 
@@ -478,7 +482,7 @@ def q_stream_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_stream(q, "q_stream_e2e")
     _tm.mark("stream", rows=_staged_rows(cache))
     out = store.read(spark, "edges")
     if out is None:
@@ -574,7 +578,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_stream(q, "q_stream_dedup")
     # delivered twice via a_/b_ links
     _tm.mark("stream", rows=2 * _staged_rows(cache))
     out = spark.read.schema(EVENTS_SCHEMA).parquet(sink)
@@ -670,7 +674,7 @@ def q_stream_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_stream(q, "q_stream_window_e2e")
         _tm.state(q)
 
     run_once()  # drains the real data
@@ -773,7 +777,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_stream(q, "q_stream_stateful")
     _tm.mark("stream", rows=_staged_rows(cache))
     out = spark.read.parquet(sink_dir)
     return out.groupBy("src", "dst", "protocol").agg(
@@ -909,7 +913,7 @@ def q_stream_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_stream(q, "q_stream_join_e2e")
         _tm.state(q)
     _tm.mark("stream", rows=sum(_staged_rows(c) for c in caches))
     if not os.path.isdir(sink):
@@ -1024,7 +1028,7 @@ def q_stream_session_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(600)
+            await_stream(q, "q_stream_session_e2e")
             _tm.state(q)
 
     run_once("2")  # drains the real data; tail sessions still in state
@@ -1131,7 +1135,7 @@ def q_stream_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        await_stream(q, "q_stream_dedup_wm")
     # delivered twice via a_/b_ links
     _tm.mark("stream", rows=2 * _staged_rows(cache))
     out = spark.read.schema(EVENTS_SCHEMA).parquet(sink)
@@ -1299,12 +1303,7 @@ def q_stream_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(staging, "redelivered-" + staged[0]),
         )
         q2 = start_stream()
-        if not q2.awaitTermination(600):
-            q2.stop()
-            raise RuntimeError(
-                "q_stream_restart: restarted stream did not terminate "
-                "within the timeout"
-            )
+        await_stream(q2, "q_stream_restart")
 
     # staged files + the one redelivered copy (its rows come off the
     # parquet footer — the stream really does process that extra file,
@@ -1483,11 +1482,7 @@ def q_stream_multi_writer(
             .start()
         )
         for q in (qa, qb):
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "q_stream_multi_writer: stream did not terminate"
-                )
+            await_stream(q, "q_stream_multi_writer")
 
     # both writers scan the full staged input
     _tm.mark("stream", rows=2 * _staged_rows(cache))
@@ -1620,13 +1615,6 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # parallel driver thread while the stream drains into store_s
         # (guide §2.6: independent jobs back-fill micro-batch gaps).
         # Same delta bytes land either way; the stores never alias.
-        def _await_stream() -> None:
-            if not q.awaitTermination(600):
-                q.stop()
-                raise RuntimeError(
-                    "q_stream_ann_ingest: stream did not terminate"
-                )
-
         def _append_batch() -> None:
             # A failed append stops the stream too, so the awaiting
             # thread returns instead of sitting out its 600 s timeout.
@@ -1636,7 +1624,9 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 q.stop()
                 raise
 
-        run_concurrent(_await_stream, _append_batch)
+        run_concurrent(
+            lambda: await_stream(q, "q_stream_ann_ingest"), _append_batch
+        )
         _tm.mark("stream", rows=_staged_rows(cache))
 
         # streamed-vs-batched answers: two independent reads of two

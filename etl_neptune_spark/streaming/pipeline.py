@@ -321,6 +321,21 @@ def apply_health_alarms(
     return flagged
 
 
+def await_stream(q, name: str, timeout_s: float = 600) -> None:
+    """Wait for a query that drains and stops (``availableNow``). If it
+    is still running after ``timeout_s`` seconds, or the wait itself
+    fails, stop it and raise: no caller goes on to read a sink that the
+    stream is still writing."""
+    try:
+        done = timeout_s > 0 and q.awaitTermination(timeout_s)
+    except BaseException:
+        q.stop()
+        raise
+    if not done:
+        q.stop()
+        raise RuntimeError(f"{name}: stream did not terminate within {timeout_s} s")
+
+
 def run_deepflow_stream(
     spark: SparkSession,
     events_dir: str,
@@ -345,6 +360,6 @@ def run_deepflow_stream(
     )
     if processing_time is None:
         q = writer.trigger(availableNow=True).start()
-        q.awaitTermination(timeout_s)
+        await_stream(q, "run_deepflow_stream", timeout_s)
         return q
     return writer.trigger(processingTime=processing_time).start()

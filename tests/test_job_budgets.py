@@ -16,9 +16,25 @@ Budget history:
   merge, 13 with one ``agg().first()``, recorded snapshot schemas and
   degrees read from the published edges. The bounds leave 2-4 jobs of
   headroom for AQE re-planning a stage.
+- graph operators: (build, run) jobs of every ``operators.components``
+  call in ``graph_cases`` on a clean cache (local[4], 8 shuffle
+  partitions), pinned at the counts the operators had before they
+  shared one driver gate, one round loop and one BFS, plus 3 build and
+  2 run jobs of headroom. msbfs_closeness's distributed path raised an
+  AnalysisException then; its budget starts from its first working count
+  (14, 2). With the shared pieces the counts were, old → new:
+  pagerank 7+9 → 5+10, triangle_counts 4+10 → 1+9, kcore 9+2 → 8+2,
+  label_propagation 12+1 → 12+1, hits_scores 22+7 → 20+7;
+  connected_components 3+1 → 2+1 (distributed 31+3 → 27+4), bfs_hops
+  5+1 → 3+1 (44+1 → 31+1), temporal_reach 5+1 → 3+1 (33+1 → 33+1),
+  sssp_bounded 5+1 → 3+1 (15+2 → 15+1), msbfs_closeness 5+1 → 3+1.
 """
 
 from __future__ import annotations
+
+import pytest
+from graph_cases import CASES as GRAPH_CASES
+from graph_cases import graph_edges
 
 from etl_neptune_spark.pipelines import run_aws_snapshot_etl
 from etl_neptune_spark.sources import load_table
@@ -27,6 +43,23 @@ from etl_neptune_spark.streaming.pipeline import deepflow_batch
 
 AWS_RUN_JOBS = 22
 DEEPFLOW_APPLY_JOBS = 15
+GRAPH_JOBS = {  # (build, run)
+    "pagerank": (10, 11),
+    "triangle_counts": (7, 12),
+    "kcore": (12, 4),
+    "label_propagation": (15, 3),
+    "hits_scores": (25, 9),
+    "connected_components": (6, 3),
+    "connected_components-distributed": (34, 5),
+    "bfs_hops": (8, 3),
+    "bfs_hops-distributed": (47, 3),
+    "temporal_reach": (8, 3),
+    "temporal_reach-distributed": (36, 3),
+    "sssp_bounded": (8, 3),
+    "sssp_bounded-distributed": (18, 4),
+    "msbfs_closeness": (8, 3),
+    "msbfs_closeness-distributed": (17, 4),
+}
 
 
 def _next_job(spark) -> int:
@@ -50,3 +83,16 @@ def test_deepflow_apply_job_budget(spark, sf_dir, tmp_path):
     apply(batch, 1)
     jobs = _next_job(spark) - start
     assert jobs <= DEEPFLOW_APPLY_JOBS, jobs
+
+
+@pytest.mark.parametrize("case", sorted(GRAPH_CASES))
+def test_graph_operator_job_budget(spark, case):
+    spark.catalog.clearCache()
+    edges = graph_edges(spark)
+    start = _next_job(spark)
+    out = GRAPH_CASES[case](edges)
+    built = _next_job(spark)
+    out.collect()
+    jobs = (built - start, _next_job(spark) - built)
+    build_budget, run_budget = GRAPH_JOBS[case]
+    assert jobs[0] <= build_budget and jobs[1] <= run_budget, jobs

@@ -105,6 +105,18 @@ def test_availablenow_single_batch_matches_batch_engine(spark, events, tmp_path)
     assert entry.isdisjoint(with_in)
 
 
+def test_stream_timeout_stops_the_query_and_raises(spark, events, tmp_path):
+    """A drain that has not finished within ``timeout_s`` is stopped and
+    reported, so no caller goes on to read a store the stream is still
+    writing."""
+    src = str(tmp_path / "in")
+    _write_batches(events, src, 1)
+    store = GraphStore(str(tmp_path / "store"))
+    with pytest.raises(RuntimeError, match="did not terminate"):
+        run_deepflow_stream(spark, src + "/batch_0", store, timeout_s=0)
+    assert spark.streams.active == []
+
+
 def test_rerun_is_idempotent(spark, events, tmp_path):
     """ST1: the checkpoint makes a second drain a no-op; store state
     (version pointer included) is unchanged — the streaming analogue of

@@ -10,6 +10,9 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+from graph_cases import CASES as GRAPH_CASES
+from graph_cases import graph_edges
 from pyspark.sql import functions as F
 
 from etl_neptune_spark.operators.timeseries import (
@@ -412,6 +415,7 @@ def test_graph_driver_fast_path_matches_distributed(spark, sf_dir):
     graphs — the fast path is an execution strategy, not a semantic."""
     from etl_neptune_spark.operators.components import (
         bfs_hops,
+        msbfs_closeness,
         sssp_bounded,
         temporal_reach,
     )
@@ -438,6 +442,10 @@ def test_graph_driver_fast_path_matches_distributed(spark, sf_dir):
     fast_t = {(r.vertex, str(r.t)) for r in temporal_reach(et, 0).collect()}
     dist_t = {(r.vertex, str(r.t)) for r in temporal_reach(et, 0, driver_cap=0).collect()}
     assert fast_t == dist_t and len(fast_t) > 1
+
+    fast_c = {tuple(r) for r in msbfs_closeness(e).collect()}
+    dist_c = {tuple(r) for r in msbfs_closeness(e, driver_cap=0).collect()}
+    assert fast_c == dist_c and len(fast_c) > 1
 
 
 def test_ewma_hand_computed(spark):
@@ -582,3 +590,50 @@ def test_cc_regime_boundary_answers_match(spark):
     }
     assert drv == expect
     assert dist == expect
+
+
+def test_cc_contracted_graph_finishes_on_driver(spark, monkeypatch):
+    """A graph above ``driver_cap`` that one star round contracts under
+    it finishes with union-find over the CONTRACTED edges only; the
+    vertices they no longer name (the self-loop-only 99) join back
+    lazily and label themselves. Must equal the distributed answer."""
+    from etl_neptune_spark.operators import components
+
+    k10 = [(a, b) for a in range(10) for b in range(a + 1, 10)]  # 45 edges
+    edges = spark.createDataFrame(
+        k10 + [(20, 21), (21, 22), (99, 99)], "src long, dst long"
+    )
+    gates = []
+    gate = components._small_graph
+
+    def spy(e, cap):
+        rows = gate(e, cap)
+        gates.append(None if rows is None else len(rows))
+        return rows
+
+    monkeypatch.setattr(components, "_small_graph", spy)
+    got = {
+        r.vertex: r.component
+        for r in components.connected_components(edges, driver_cap=20).collect()
+    }
+    # 48 distinct rows > 20: distributed; round 1 leaves the 9-edge star
+    # of K10 plus the 2-edge star of the path, and those 11 finish here.
+    assert gates == [None, 11]
+    expect = {v: 0 for v in range(10)} | {20: 20, 21: 20, 22: 20, 99: 99}
+    assert got == expect
+    dist = {
+        r.vertex: r.component
+        for r in components.connected_components(edges, driver_cap=0).collect()
+    }
+    assert dist == expect
+
+
+@pytest.mark.parametrize("case", sorted(GRAPH_CASES))
+def test_graph_operator_leaves_no_cached_plan(spark, case):
+    """Every operators.components operator, in both regimes: once its
+    result is collected the session's CacheManager is empty — a leaked
+    cached plan would be substituted into any later query with the same
+    canonical plan and change its jobs and timings."""
+    spark.catalog.clearCache()
+    GRAPH_CASES[case](graph_edges(spark)).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
