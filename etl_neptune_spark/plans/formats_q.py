@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_neptune_spark.plans.registry import register
+from etl_neptune_spark.plans.registry import register, scratch_dir
 from etl_neptune_spark.sources.formats import explode_nested, read_json, read_tsv
 
 FIXTURES = os.path.join(
@@ -340,18 +340,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrite. Complements load_table's timestamp-encoding
     normalization (sources/tables.py) — that certifies type drift,
     this certifies column-set drift."""
-    import os
-    import shutil
-
     from etl_neptune_spark.sources import load_table
 
     orders = load_table(spark, sf_dir, "orders")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = os.path.join(repo_root, "spark-warehouse", f"schema_evo_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("schema_evo", sf_dir)
     gen_old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus"
     )

@@ -17,7 +17,7 @@ from ..functions import dec_avg
 from ..operators import degree_metrics, merge_keyed
 from ..sources import load_table
 from .flow import _flows
-from .registry import register
+from .registry import register, scratch_dir
 
 
 def q_upsert_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1425,19 +1425,10 @@ def q_store_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     stand-in for Delta/Iceberg commits (streaming/store.py docstring);
     the reference's Neptune graph has no time travel — this is the
     lakehouse capability added on top of its idempotent-upsert model."""
-    import os
-    import shutil
-
     from ..streaming.store import GraphStore
 
     ev = load_table(spark, sf_dir, "events")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = os.path.join(repo_root, "spark-warehouse", f"ttravel_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
-    store = GraphStore(root, keep_versions=2)
+    store = GraphStore(scratch_dir("ttravel", sf_dir), keep_versions=2)
 
     day = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
 
@@ -1555,19 +1546,10 @@ def q_store_delta_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold that keeps file counts bounded (reference analogue: the
     idempotent mergeV micro-batches that never rewrite the store,
     neptune_etl_aws.py:209-253)."""
-    import os
-    import shutil
-
     from ..streaming.store import GraphStore
 
     ev = load_table(spark, sf_dir, "events")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = os.path.join(repo_root, "spark-warehouse", f"deltalog_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
-    store = GraphStore(root, keep_versions=4)
+    store = GraphStore(scratch_dir("deltalog", sf_dir), keep_versions=4)
 
     day = F.floor(F.unix_micros("ts") / F.lit(86_400_000_000))
     decade = F.floor(day / 10).alias("decade")

@@ -11,6 +11,8 @@ Plan modules call ``register(name, fn, sql)`` at import time.
 
 from __future__ import annotations
 
+import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,6 +21,23 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLE: dict[str, str] = {}
+
+# The source tree's ``spark-warehouse/``: plans that write their own
+# tables (materialized views, stores, stream checkpoints) put them here.
+WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "spark-warehouse",
+)
+
+
+def scratch_dir(kind: str, sf_dir: str) -> str:
+    """``spark-warehouse/<kind>_<tag>``, emptied: one plan's private
+    directory per fixture (``tag`` is the fixture directory's name), so
+    every run starts from nothing its previous run left behind."""
+    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
+    root = os.path.join(WAREHOUSE, f"{kind}_{tag}")
+    shutil.rmtree(root, ignore_errors=True)
+    return root
 
 
 def register(name: str, fn: QueryFn, sql: str | None = None) -> None:

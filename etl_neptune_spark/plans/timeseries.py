@@ -24,7 +24,7 @@ from ..operators.timeseries import (
     sessionize,
 )
 from ..sources import load_table
-from .registry import register
+from .registry import register, scratch_dir
 
 GAP_MIN = 30
 SAMPLE_PER_STRATUM = 100
@@ -2081,16 +2081,8 @@ def q_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     without touching raw data. The decomposability rule is the same
     one the partial+final hash aggregates rely on inside one query,
     lifted to the storage layer."""
-    import os
-    import shutil
-
     ev = load_table(spark, sf_dir, "events")
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/")) or "sf"
-    root = os.path.join(repo_root, "spark-warehouse", f"mv_daily_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mv_daily", sf_dir)
     daily = ev.groupBy(
         F.to_date("ts").alias("day"),
         "event_type",

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import doc_shingles, minhash_band_entries
+from .pipeline import drain
 from .store import GraphStore
 
 BANDS_TABLE = "minhash_bands"
@@ -172,21 +173,16 @@ def run_neardup_stream(
     docs_dir: str,
     store: GraphStore,
     schema: str = "doc_id long, text string",
-    checkpoint: str | None = None,
 ) -> None:
     """Drain a file-arrival stream of documents through the near-dup
     flagger with availableNow (deterministic catch-up)."""
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
-    q = (
-        stream.writeStream.foreachBatch(flag_neardups_batch(store))
-        .option(
-            "checkpointLocation",
-            checkpoint or f"{store.root}/_checkpoints/neardup",
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark.readStream.schema(schema)
+        .parquet(docs_dir)
+        .writeStream.foreachBatch(flag_neardups_batch(store)),
+        f"{store.root}/_checkpoints/neardup",
+        "run_neardup_stream",
     )
-    q.awaitTermination()
 
 
 MIN_QUALITY = 0.35
@@ -273,19 +269,14 @@ def run_corpus_ingest_stream(
     docs_dir: str,
     store: GraphStore,
     schema: str = "doc_id long, text string",
-    checkpoint: str | None = None,
     **gate_kwargs,
 ) -> None:
     """Drain a file-arrival document stream through the full ingest
     gate (quality → language → near-dup → manifest) with availableNow."""
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
-    q = (
-        stream.writeStream.foreachBatch(ingest_corpus_batch(store, **gate_kwargs))
-        .option(
-            "checkpointLocation",
-            checkpoint or f"{store.root}/_checkpoints/corpus_ingest",
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        spark.readStream.schema(schema)
+        .parquet(docs_dir)
+        .writeStream.foreachBatch(ingest_corpus_batch(store, **gate_kwargs)),
+        f"{store.root}/_checkpoints/corpus_ingest",
+        "run_corpus_ingest_stream",
     )
-    q.awaitTermination()

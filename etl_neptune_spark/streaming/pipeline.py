@@ -336,6 +336,17 @@ def await_stream(q, name: str, timeout_s: float = 600) -> None:
         raise RuntimeError(f"{name}: stream did not terminate within {timeout_s} s")
 
 
+def drain(writer, checkpoint: str, name: str, timeout_s: float = 600):
+    """Run ``writer`` (a ``DataStreamWriter``) once with ``availableNow``
+    from the checkpoint at ``checkpoint``: start it, wait through
+    ``await_stream`` and return the query, which has stopped. Every
+    ``availableNow`` run in the package goes through here, except the
+    first query of q_stream_restart, which is meant to crash."""
+    q = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
+    await_stream(q, name, timeout_s)
+    return q
+
+
 def run_deepflow_stream(
     spark: SparkSession,
     events_dir: str,
@@ -353,13 +364,12 @@ def run_deepflow_stream(
     re-running after the same files yields no new batches (idempotent
     by upsert AND by source bookkeeping)."""
     flows = flow_projection(flow_stream(spark, events_dir, max_files_per_trigger))
-    writer = (
-        flows.writeStream.foreachBatch(deepflow_batch(store))
-        .option("checkpointLocation", f"{store.root}/_checkpoint")
-        .outputMode("update")
-    )
+    writer = flows.writeStream.foreachBatch(deepflow_batch(store)).outputMode("update")
+    checkpoint = f"{store.root}/_checkpoint"
     if processing_time is None:
-        q = writer.trigger(availableNow=True).start()
-        await_stream(q, "run_deepflow_stream", timeout_s)
-        return q
-    return writer.trigger(processingTime=processing_time).start()
+        return drain(writer, checkpoint, "run_deepflow_stream", timeout_s)
+    return (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(processingTime=processing_time)
+        .start()
+    )

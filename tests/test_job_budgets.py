@@ -63,6 +63,9 @@ GRAPH_JOBS = {  # (build, run)
 
 
 def _next_job(spark) -> int:
+    # The job id is session-wide: a stream left running by an earlier
+    # test would add its jobs to every budget measured after it.
+    assert spark.streams.active == [], spark.streams.active
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 

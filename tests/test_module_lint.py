@@ -134,3 +134,29 @@ def test_sign_bucket_sql_only_in_oracle_sql():
         "sign_bucket_expr evaluated outside registered oracle SQL — compute "
         f"engine buckets with with_sign_bucket: {offenders}"
     )
+
+
+# Every availableNow drain waits through streaming.pipeline.await_stream,
+# which bounds the wait and stops a query still running at its end. The
+# one other wait is q_stream_restart's, which expects its first query to
+# crash and handles that outcome itself.
+AWAIT_TERMINATION_ALLOWED = {
+    ("etl_neptune_spark/streaming/pipeline.py", "await_stream"): 1,
+    ("etl_neptune_spark/plans/streaming.py", "q_stream_restart"): 1,
+}
+
+
+def test_stream_waits_are_bounded():
+    """Count the ``awaitTermination`` uses in the package per top-level
+    definition: only the two waits above may remain."""
+    found: dict[tuple[str, str], int] = {}
+    for path in glob.glob(
+        os.path.join(REPO, "etl_neptune_spark", "**", "*.py"), recursive=True
+    ):
+        rel = os.path.relpath(path, REPO)
+        for top in ast.parse(open(path).read()).body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) and node.attr == "awaitTermination":
+                    found[(rel, owner)] = found.get((rel, owner), 0) + 1
+    assert found == AWAIT_TERMINATION_ALLOWED

@@ -117,6 +117,23 @@ def test_stream_timeout_stops_the_query_and_raises(spark, events, tmp_path):
     assert spark.streams.active == []
 
 
+def test_drain_reraises_a_failed_batch_and_leaves_no_stream(spark, tmp_path):
+    """``drain`` surfaces a ``foreachBatch`` failure as its own raise
+    and leaves no query running behind it."""
+    from etl_neptune_spark.streaming.pipeline import drain
+
+    src = str(tmp_path / "in")
+    spark.range(10).write.parquet(src)
+
+    def fail(batch, batch_id):
+        raise ValueError("batch body failed")
+
+    writer = spark.readStream.schema("id long").parquet(src).writeStream.foreachBatch(fail)
+    with pytest.raises(Exception, match="batch body failed"):
+        drain(writer, str(tmp_path / "ckpt"), "fail")
+    assert spark.streams.active == []
+
+
 def test_rerun_is_idempotent(spark, events, tmp_path):
     """ST1: the checkpoint makes a second drain a no-op; store state
     (version pointer included) is unchanged — the streaming analogue of
@@ -893,6 +910,45 @@ def test_stream_e2e_runs_multiple_microbatches(spark, sf_dir):
     assert batch.exceptAll(got).count() == 0
 
 
+def test_cert_record_counts_batches_and_phases(spark, sf_dir):
+    """The certificate harness records, next to the fixed/data split,
+    the micro-batch count and per-phase ``durationMs`` sums over every
+    query the certificate starts: q_stream_e2e's record holds one batch
+    per offset its checkpoint committed."""
+    from etl_neptune_spark.plans import streaming as st
+
+    st.CERT_TIMINGS.pop("q_stream_e2e", None)
+    st.q_stream_e2e(spark, sf_dir)
+    rec = st.CERT_TIMINGS["q_stream_e2e"]
+    tag = os.path.basename(sf_dir.rstrip("/"))
+    offsets = [
+        o
+        for o in os.listdir(
+            os.path.join(st.WAREHOUSE, f"stream_e2e_{tag}", "_checkpoint", "offsets")
+        )
+        if not o.startswith(".")
+    ]
+    assert rec["batches"] >= 2 and rec["batches"] == len(offsets), (rec, offsets)
+    assert rec["durationMs"]["addBatch"] > 0, rec
+    assert rec["durationMs"]["triggerExecution"] > 0, rec
+    assert {"setup_sec", "stream_sec", "stream_rows", "rows_per_sec"} <= rec.keys()
+
+
+def test_cert_drain_timeout_raises_and_restores_the_session(spark, sf_dir, monkeypatch):
+    """A certificate whose drain outlives the harness's wait raises,
+    leaves no stream running and gives the session back its shuffle
+    width."""
+    from etl_neptune_spark.plans import streaming as st
+
+    key = "spark.sql.shuffle.partitions"
+    width = spark.conf.get(key)
+    monkeypatch.setattr(st, "_WAIT_S", 0)
+    with pytest.raises(RuntimeError, match="did not terminate"):
+        st.q_stream_dedup(spark, sf_dir)
+    assert spark.streams.active == []
+    assert spark.conf.get(key) == width
+
+
 def test_stream_dedup_exactly_once_across_batches(spark, sf_dir):
     """q_stream_dedup: input delivered twice across multiple
     micro-batches; the state store must admit each event_id exactly
@@ -1100,6 +1156,43 @@ def test_staged_events_cache_hit_and_invalidation(spark, sf_dir, tmp_path, monke
     import shutil
 
     shutil.rmtree(c1, ignore_errors=True)  # only this test's layout dir
+
+
+def test_staged_layout_rebuilds_when_its_table_changes(spark, sf_dir, tmp_path):
+    """The stage-once cache keys on the fixture's files, not on one
+    table's row count: a layout staged from ``embeddings`` must be
+    rebuilt once ``embeddings.parquet`` is rewritten at the same path,
+    or a certificate would stream stale vectors."""
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    from etl_neptune_spark.plans import streaming as st
+
+    fixture = str(tmp_path / os.path.basename(sf_dir.rstrip("/")))
+    shutil.copytree(sf_dir, fixture)
+    os.chmod(fixture, 0o755)  # the copy keeps a read-only fixture's modes
+    builds = {"n": 0}
+
+    def build(tmp):
+        builds["n"] += 1
+        st.load_table(spark, fixture, "embeddings").repartition(2).write.parquet(tmp)
+
+    layout = f"test_{uuid.uuid4().hex[:12]}"
+    cache = st._staged_events(spark, fixture, layout, build)
+    try:
+        assert st._staged_events(spark, fixture, layout, build) == cache
+        assert builds["n"] == 1
+        emb = os.path.join(fixture, "embeddings.parquet")
+        table = pq.read_table(emb)
+        os.chmod(emb, 0o644)
+        pq.write_table(table.slice(0, table.num_rows // 2), emb)
+        st._staged_events(spark, fixture, layout, build)
+        assert builds["n"] == 2
+        assert st._staged_rows(cache) == table.num_rows // 2
+    finally:
+        shutil.rmtree(cache, ignore_errors=True)
 
 
 def test_stream_ann_ingest_multi_batch_and_compaction(spark, sf_dir):

@@ -64,7 +64,7 @@ def build_doubled(spark, sf_dir: str, out_dir: str) -> str:
 
 
 def run_cert(qs, timings, name: str, spark, sf_dir: str) -> dict:
-    # _CertTimer only publishes a run that BEATS the stored stream_sec
+    # The cert harness only publishes a run that BEATS the stored stream_sec
     # (best-of-N semantics for bench). The 1× and 8× datasets share one
     # cert name here, so without clearing, the slower 8× leg would keep
     # reading the stale 1× record and the data-cost term collapses to
@@ -120,7 +120,12 @@ def main() -> None:
         "real: MULTIPLYING the stream volume (8× rows, identical file/batch",
         "count) moves only the stream phase — setup stays flat — so",
         "regression gating reads `data_rows_per_sec`, which load noise",
-        "cannot fake. Best-of-2, `tools/stream_cost_ab.py`.",
+        "cannot fake. Best-of-2, `tools/stream_cost_ab.py`. Each record",
+        "also carries `batches` (the micro-batches of every query the cert",
+        "starts) and `durationMs`, per-phase sums over their",
+        "`recentProgress` (addBatch, walCommit, commitOffsets,",
+        "latestOffset, queryPlanning, getBatch, triggerExecution): the",
+        "terms the stream phase's seconds break into.",
         "",
         "| cert | setup 1× | setup 8× | stream 1× | stream 8× |"
         " data µs/row | fixed share of 1× wall |",
