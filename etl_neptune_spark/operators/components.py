@@ -12,20 +12,22 @@ driver-side kernel. Three shared pieces carry the rest:
   cap the driver receives one row. ``driver_cap=0`` forces the
   distributed path.
 - ``_fixpoint(state, step, rounds, until)``, the one round loop. It owns
-  the lineage cut (``_cut``) and the optional exit test: the
+  the lineage cut and the optional exit test: the
   ``_Settled`` digest of the label-correcting loops, an empty BFS
   frontier, or none for the fixed-round algorithms.
 - ``_bfs_rounds``, one source-keyed frontier BFS for ``bfs_hops`` (one
   source) and ``msbfs_closeness`` (every vertex).
 
-No operator leaves a cache entry behind (``_cut``, ``_held``): a leaked
-one would be substituted into every later query with the same plan.
+Every round's state and every edge set that the returned plan reads is
+a ``materialize.cut``; an edge set that only the rounds read is
+``materialize.held`` for the rounds, so a small one broadcasts. The
+rule, and why no operator may leave a cache entry behind, is in
+``etl_neptune_spark/materialize.py``.
 """
 
 from __future__ import annotations
 
 import bisect
-import contextlib
 import datetime
 import heapq
 import math
@@ -33,30 +35,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _cut(df: DataFrame) -> DataFrame:
-    """The module's one lineage cut, also its materialization of what
-    the returned plan reads: a lazy localCheckpoint, filled by the first
-    action that reads it (a round's exit test or the caller's own action)
-    and freed with the frame that references it. Swapping in
-    ``checkpoint(eager=False)`` (with ``spark.checkpoint.dir`` set) is the
-    one-line change that makes every iterative operator survive executor
-    loss."""
-    return df.localCheckpoint(eager=False)
-
-
-@contextlib.contextmanager
-def _held(df: DataFrame):
-    """Persist ``df``, an edge set that only the rounds read, for the
-    ``with`` block and release it at exit. Unlike a cut, a filled cache
-    reports its real size, so a small edge set broadcasts in the later
-    rounds. The returned plan must not read ``df``: at exit every round
-    is a cut whose shuffles adaptive execution has already run."""
-    df = df.persist()
-    try:
-        yield df
-    finally:
-        df.unpersist()
+from ..materialize import cut, held
 
 
 def _small_graph(edges: DataFrame, cap: int) -> list | None:
@@ -115,7 +94,7 @@ def _fixpoint(state: DataFrame, step, rounds: int, until=None, every: int = 1):
     for i in range(rounds):
         state = step(state, i)
         if (i + 1) % every == 0:
-            state = _cut(state)
+            state = cut(state)
         if until is not None and until(state, i):
             return state, True
     return state, until is None
@@ -210,13 +189,13 @@ def pagerank(
     is one equi-join of the O(|V|) rank frame into the materialized
     weighted edges plus one keyed sum; the linear rank lineage is cut
     every 10 iterations only."""
-    raw = _cut(_directed(edges, src, dst).distinct())
+    raw = cut(_directed(edges, src, dst).distinct())
     verts = _endpoints(raw, "x")
     weighted = raw.join(raw.groupBy("u").agg((F.lit(1.0) / F.count("*")).alias("w")), "u")
     # Zero-weight self edges keep every vertex present in each
     # iteration's aggregate (its sum contribution is 0 → rank = reset
     # when it has no real in-edges).
-    e2 = _cut(weighted.unionByName(
+    e2 = cut(weighted.unionByName(
         verts.select(F.col("x").alias("u"), F.col("x").alias("v"), F.lit(0.0).alias("w"))
     ))
 
@@ -248,7 +227,7 @@ def triangle_counts(
     is bounded by Σ deg²(v) over the ORDERED graph, which keeps hubs from
     exploding the wedge count. The edge set is materialized once for the
     five branches that read it."""
-    e = _cut(_undirected(edges, src, dst))
+    e = cut(_undirected(edges, src, dst))
     ab = e.select(F.col("a").alias("x"), F.col("b").alias("y"))
     bc = e.select(F.col("a").alias("y"), F.col("b").alias("z"))
     wedges = ab.join(bc, "y")  # x < y < z by construction
@@ -290,7 +269,7 @@ def kcore(
             .join(keep.select(F.col("v").alias("b")), "b", "left_semi")
         )
 
-    e = _cut(_undirected(edges, src, dst))
+    e = cut(_undirected(edges, src, dst))
     e, _ = _fixpoint(e, peel, rounds, _Settled(e))
     return _endpoints(e, "vertex")
 
@@ -343,7 +322,7 @@ def connected_components(
     contraction input. DuckDB's recursive CTE certifies q_dup_clusters.
     """
     spark = edges.sparkSession
-    raw = _cut(
+    raw = cut(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("a"),
             F.least(F.col(src), F.col(dst)).alias("b"),
@@ -437,7 +416,7 @@ def bfs_hops(
     the first empty frontier (O(eccentricity) rounds, the Pregel BFS
     schedule)."""
     spark = edges.sparkSession
-    with _held(_directed(edges, src, dst, loops=False).distinct()) as e:
+    with held(_directed(edges, src, dst, loops=False).distinct()) as e:
         vt = e.schema[0].dataType.simpleString()
         rows = _small_graph(e, driver_cap)
         if rows is not None:
@@ -477,7 +456,7 @@ def temporal_reach(
     # A null timestamp can never satisfy the ets >= t admissibility
     # predicate; dropping it here makes both execution paths agree.
     timed = _directed(edges, src, dst, F.col(ts_col).alias("ets"), loops=False)
-    with _held(timed.filter(F.col("ets").isNotNull()).distinct()) as e:
+    with held(timed.filter(F.col("ets").isNotNull()).distinct()) as e:
         vt = e.schema[0].dataType.simpleString()
         rows = _small_graph(e, driver_cap)
         if rows is not None:
@@ -544,7 +523,7 @@ def label_propagation(
             ).alias("community")
         )
 
-    with _held(
+    with held(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
@@ -575,7 +554,7 @@ def sssp_bounded(
     """
     spark = edges.sparkSession
     uvw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"), F.col(w_col).alias("w"))
-    with _held(uvw.groupBy("u", "v").agg(F.min("w").alias("w"))) as e:
+    with held(uvw.groupBy("u", "v").agg(F.min("w").alias("w"))) as e:
         vt = e.schema[0].dataType.simpleString()
         schema = f"vertex {vt}, dist bigint"
         rows = _small_graph(e, driver_cap)
@@ -619,9 +598,9 @@ def hits_scores(
     front if maxrow^(iters+1) could cross 2^62. Zero-weight self-entries
     keep isolated-authority vertices present.
     """
-    raw = _cut(_directed(edges, src, dst).distinct())
+    raw = cut(_directed(edges, src, dst).distinct())
     verts = _endpoints(raw, "x")
-    cmat = _cut(
+    cmat = cut(
         raw.select("u", F.col("v").alias("w"))
         .join(raw.select("u", F.col("v").alias("vv")), "u")
         .groupBy("w", "vv")
@@ -688,7 +667,7 @@ def msbfs_closeness(
     ``driver_cap``, else the frontier loop keyed by (source, vertex).
     """
     spark = edges.sparkSession
-    with _held(_directed(edges, src, dst, loops=False).distinct()) as e:
+    with held(_directed(edges, src, dst, loops=False).distinct()) as e:
         vt = e.schema[0].dataType.simpleString()
         rows = _small_graph(e, driver_cap)
         if rows is not None:

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..boundary import map_batches, map_rows, pylists, spread
+from ..materialize import cut
 
 HEX_ODD = "13579bdf"  # hex digits with low bit set → +1 vote in simhash
 
@@ -260,8 +261,8 @@ def minhash_lsh_pairs(
        a handful of texts) otherwise concentrates one band value and
        pays |clique|² candidate verifications for pairs whose score is
        1.0 by construction. When a one-row stats probe (which doubles as
-       the action that materializes the shingle cache, so the Python
-       kernel runs exactly once) finds duplicate sets, the LSH + verify
+       the action that fills the shingle cut, so the Python kernel runs
+       exactly once) finds duplicate sets, the LSH + verify
        machinery runs on ONE representative per distinct set (md5 of
        the shingle array keys the group — doc_shingles emits
        first-occurrence order, so equal texts give equal arrays) and
@@ -282,30 +283,26 @@ def minhash_lsh_pairs(
        (no hot bucket) skips the replication entirely — same candidate
        set, hot_salt× fewer rows through the join shuffle.
     """
-    # The shingle pass feeds several plan branches; persist + the stats
-    # probe below materializes the (Python, md5-heavy) kernel exactly
-    # once — lazy caching would let concurrently-launched stages race it.
-    from pyspark import StorageLevel
-
-    shingled = (
-        doc_shingles(docs, id_col, text_col)
-        .withColumn("__g", F.md5(F.to_json(F.col("shingles"))))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # The shingle pass feeds several plan branches, so the (Python,
+    # md5-heavy) kernel runs under a cut; the stats probe is the driver
+    # decision that fills it.
+    shingled = cut(
+        doc_shingles(docs, id_col, text_col).withColumn(
+            "__g", F.md5(F.to_json(F.col("shingles")))
+        )
     )
     members = shingled.select(id_col, "__g")
     stats = members.agg(
         F.count("*").alias("n"), F.countDistinct("__g").alias("g")
-    ).first()  # bounded: single global-agg row (and the cache-filling action)
+    ).first()  # bounded: single global-agg row (and the action that fills the cut)
     collapsed = stats["g"] < stats["n"]
     if collapsed:
         rep_ids = members.groupBy("__g").agg(F.min(id_col).alias(id_col))
-        rep_sh = shingled.join(rep_ids, [id_col, "__g"], "left_semi").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        rep_sh = cut(shingled.join(rep_ids, [id_col, "__g"], "left_semi"))
     else:
         rep_sh = shingled
     # Both sides of the band self-join read this frame. The bounded
-    # stats agg below materializes the banding kernel once (band_entries
+    # stats agg below fills the banding kernel's cut (band_entries
     # is tiny — ``bands`` short rows per rep) AND measures band skew
     # (VERDICT r9 task 5): the salt fan-out exists to spread a HOT
     # (band, band_hash) bucket across tasks, but on a uniform corpus it
@@ -314,14 +311,16 @@ def minhash_lsh_pairs(
     # meet — pair (a, b) meets exactly at b's replica of a's salt — so
     # both branches produce the identical candidate set (pinned by the
     # answer-equality tests covering both gating branches).
-    band_entries = minhash_band_entries(
-        rep_sh.select(id_col, "shingles"), id_col, num_hashes, bands
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    band_entries = cut(
+        minhash_band_entries(
+            rep_sh.select(id_col, "shingles"), id_col, num_hashes, bands
+        )
+    )
     bstats = (
         band_entries.groupBy("band", "band_hash")
         .count()
         .agg(F.max("count").alias("mx"), F.avg("count").alias("mean"))
-        .first()  # bounded: single stats row (and the cache-filling action)
+        .first()  # bounded: single stats row (and the action that fills the cut)
     )
     hottest = int(bstats["mx"] or 0)
     mean_bucket = float(bstats["mean"] or 0.0)
@@ -510,34 +509,24 @@ def _ngram_overlap_pairs(
     ``ngram_jaccard_pairs`` for the full scale argument)."""
     from pyspark.sql import Window
 
-    sh = doc_shingles(docs, id_col, text_col)
     # The posting list feeds three branches: both sides of the light
     # self-join and the heavy-set rollup. Document frequency comes from
     # a count window over the shingle partitioning — NOT a separate
     # groupBy + join — so all three branches sit on ONE exchange
     # (hashpartitioning(shingle)) that Spark reuses, and the self-join
-    # below needs no further shuffle of the postings.
-    from pyspark import StorageLevel
-
-    # The Arrow shingle kernel and the df-tag window feed FIVE plan
-    # branches (both sides of the light self-join, the heavy rollup —
-    # and the callers may join the shingle frame again for verify).
-    # Without eager materialization every concurrently-launched scan
-    # stage re-runs the kernel + window before a lazy cache could fill
-    # (the minhash_lsh_pairs materialization argument). ``tagged`` is
-    # the inverted index itself — exactly the intermediate you'd keep
-    # resident at scale; the bounded count that fills the cache costs
-    # one pass and saves up to three.
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
+    # below needs no further shuffle of the postings. The Arrow shingle
+    # kernel and the df-tag window sit under cuts: ``tagged`` is the
+    # inverted index itself — exactly the intermediate you'd keep
+    # resident at scale.
+    sh = cut(doc_shingles(docs, id_col, text_col))
     posts = sh.select(
         F.col(id_col),
         F.size("shingles").alias("n_sh"),
         F.explode("shingles").alias("shingle"),
     )
-    tagged = posts.withColumn(
-        "df", F.count("*").over(Window.partitionBy("shingle"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    tagged.count()
+    tagged = cut(
+        posts.withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
+    )
 
     lite = tagged.filter(F.col("df") <= df_cap)
     a = lite.select(
@@ -560,7 +549,7 @@ def _ngram_overlap_pairs(
     )
     pa = hot_sets.select(F.col(id_col).alias("id_a"), F.col("hot").alias("hot_a"))
     pb = hot_sets.select(F.col(id_col).alias("id_b"), F.col("hot").alias("hot_b"))
-    full = (
+    return (
         pairs.join(pa, "id_a", "left")
         .join(pb, "id_b", "left")
         .withColumn(
@@ -571,19 +560,6 @@ def _ngram_overlap_pairs(
         )
         .withColumn("n_inter", F.col("c_light") + F.col("c_heavy"))
     )
-    try:
-        # The candidate-pair frame is bounded by true near-dup density —
-        # tiny next to the postings. Materialize it so the big cached
-        # intermediates can be dropped NOW instead of leaking blocks
-        # into a long-lived session. localCheckpoint, not persist: a
-        # returned persisted frame pins CacheManager blocks forever,
-        # while checkpoint blocks are context-cleaned once the caller
-        # drops the DataFrame (repeat invocations don't accumulate).
-        full = full.localCheckpoint(eager=True)
-        return full
-    finally:
-        sh.unpersist()
-        tagged.unpersist()
 
 
 def simhash16(text: Column) -> Column:
@@ -750,14 +726,10 @@ def simhash64_band_pairs(
             f"(got max_hamming={max_hamming}, bands={bands})"
         )
     width = 64 // bands
-    # Eagerly materialize the signature cache: five downstream branches
-    # (distinct sigs, both fan-out sides, both same-sig sides) read it
-    # inside ONE action, and a lazily-persisted frame gets recomputed by
-    # each concurrently-launched stage before the cache fills — that
-    # races the (Python) signature kernel 4-5×. One bounded count fills
-    # the cache first.
-    sh = simhash64_signatures(docs, id_col, text_col).persist()
-    sh.count()
+    # Five downstream branches (distinct sigs, both fan-out sides, both
+    # same-sig sides) read the signatures, so the (Python) signature
+    # kernel runs under a cut.
+    sh = cut(simhash64_signatures(docs, id_col, text_col))
 
     # Candidate generation runs on INTEGER band words, not bit strings:
     # each distinct signature parses once into ``bands`` longs, the
@@ -773,8 +745,7 @@ def simhash64_band_pairs(
         .alias(f"w{i}")
         for i in range(bands)
     ]
-    usig = sh.select("simhash64").distinct().select("simhash64", *wcols).persist()
-    usig.count()
+    usig = cut(sh.select("simhash64").distinct().select("simhash64", *wcols))
     warr = F.array(*[f"w{i}" for i in range(bands)])
     ent = usig.withColumn(
         "band", F.explode(F.array(*[F.lit(i) for i in range(bands)]))
@@ -856,10 +827,8 @@ def simhash_band_pairs(
             f"mask enumeration is bounded only for max_hamming <= 3 "
             f"(C(16,h) masks per signature; got max_hamming={max_hamming})"
         )
-    # Eager materialization: see simhash64_band_pairs — concurrent
-    # stages would otherwise race the signature kernel.
-    sh = simhash_signatures(docs, id_col, text_col).persist()
-    sh.count()
+    # Several branches read the signatures: see simhash64_band_pairs.
+    sh = cut(simhash_signatures(docs, id_col, text_col))
 
     # All hamming work runs on DISTINCT signatures — bounded by 2^16
     # corpus-wide, so the candidate step has a CONSTANT ceiling no
@@ -945,10 +914,9 @@ def cross_minhash_pairs(
     at scale the corpus band entries are a precomputed table (see
     ``streaming/store.py``) and only the batch side pays signature work
     per run."""
-    from pyspark import StorageLevel
-
-    sh_c = doc_shingles(corpus, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
-    sh_b = doc_shingles(batch, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    # The banding and the verify join both read each side's shingles.
+    sh_c = cut(doc_shingles(corpus, id_col, text_col))
+    sh_b = cut(doc_shingles(batch, id_col, text_col))
     bands_c = minhash_band_entries(sh_c, id_col, num_hashes, bands)
     bands_b = minhash_band_entries(sh_b, id_col, num_hashes, bands)
     candidates = (
@@ -1010,14 +978,12 @@ def jaccard_prefix_pairs(
     candidate-id set) instead of shuffling every doc's array into the
     SMJ. Verify cost is O(candidates · avg set size).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     # The shingle frame feeds three consumers (postings + both sides of
     # the verify join) and the Arrow shingle kernel is the dominant
-    # per-row cost — same materialization argument as the MinHash path
-    # above.
-    sh = doc_shingles(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
+    # per-row cost, so it sits under a cut.
+    sh = cut(doc_shingles(docs, id_col, text_col))
     posts = sh.select(
         F.col(id_col),
         F.size("shingles").alias("n_sh"),
@@ -1051,13 +1017,11 @@ def jaccard_prefix_pairs(
         )
         .select(id_col, "dig", "n_sh", "rk")
     )
-    # Both sides of the candidate self-join scan the prefix postings;
-    # eager materialization stops the two concurrent scan stages from
-    # each re-running the df-tag + rank windows (two shuffles) before a
-    # lazy cache could fill. The prefix is small by construction
-    # (|A| - ceil(tau*|A|) + 1 entries per doc).
-    prefix = prefix.persist(StorageLevel.MEMORY_AND_DISK)
-    prefix.count()
+    # Both sides of the candidate self-join scan the prefix postings,
+    # so the df-tag + rank windows (two shuffles) run once, under a
+    # cut. The prefix is small by construction (|A| - ceil(tau*|A|) + 1
+    # entries per doc).
+    prefix = cut(prefix)
     # PPJoin's LENGTH and POSITIONAL filters as residual join
     # predicates — both exact. Length: J>=tau forces
     # min(|A|,|B|) >= tau*max(|A|,|B|). Positional: per-doc ranks
@@ -1131,7 +1095,7 @@ def jaccard_prefix_pairs(
         )
         .select("id_a", "id_b")
     )
-    cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
+    cand = cut(cand)
     # Only docs that appear in some candidate pair need their shingle
     # array in the verify join — a broadcast semi-join (ids are 8 bytes
     # × ≤ 2·candidates, and candidates are bounded by true near-dup
@@ -1146,9 +1110,9 @@ def jaccard_prefix_pairs(
     # where the positional filters degrade (the sf100 fixture produced
     # 477M raw candidates before the grouped filter), the distinct id
     # set can outgrow driver/broadcast memory and an unguarded hint
-    # fails the job instead of degrading to a shuffle. cand is already
-    # persisted, so the count is one cheap cached pass; past the bound
-    # the semi-join falls back to a shuffle join that AQE is free to
+    # fails the job instead of degrading to a shuffle. The count is the
+    # driver decision that also fills cand's cut; past the bound the
+    # semi-join falls back to a shuffle join that AQE is free to
     # re-plan.
     n_need_pairs = cand.count()
     if n_need_pairs <= 2_000_000:  # ids ≤ 2·pairs, ~8 B each → ≤32 MB
@@ -1156,31 +1120,18 @@ def jaccard_prefix_pairs(
     sh_need = sh.join(need, id_col, "leftsemi")
     sa = sh_need.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sh_need.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    try:
-        out = (
-            cand.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("n_inter")
-                    / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
-                    4,
-                ),
-            )
-            .filter(F.col("jaccard") >= min_jaccard)
-            .select("id_a", "id_b", "jaccard")
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("n_inter")
+                / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
+                4,
+            ),
         )
-        # The verified pair list is tiny (bounded by true near-dup
-        # density); materialize it so the big intermediates can be
-        # dropped NOW instead of leaking cached blocks into a
-        # long-lived session. localCheckpoint, not persist: checkpoint
-        # blocks are context-cleaned once the caller drops the frame,
-        # so repeat invocations don't accumulate cached blocks.
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        sh.unpersist()
-        prefix.unpersist()
-        cand.unpersist()
+        .filter(F.col("jaccard") >= min_jaccard)
+        .select("id_a", "id_b", "jaccard")
+    )

@@ -37,7 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Test hook (ADVICE r5): the localCheckpoint below truncates consumers'
+from ..materialize import cut
+
+# Test hook (ADVICE r5): the cut below truncates consumers'
 # visible plans at an ExistingRDD scan, hiding the range exchange from
 # plan-shape tests. When a test sets this to a list, every prefix_sums
 # call appends its PRE-checkpoint physical plan so the test can assert
@@ -96,20 +98,21 @@ def prefix_sums(
     for name, expr in sums.items():
         rp = rp.withColumn(tmp_of[name], expr)
     rp = rp.withColumn("_pid", F.spark_partition_id())
-    # MATERIALIZE the pid-stamped frame before it fans out to the two
+    # Cut the pid-stamped frame before it fans out to the two
     # consumers (local-rank window + per-partition offset table).
     # spark_partition_id() is nondeterministic: when exchange reuse
     # fails (AQE re-planning — first observed at the sf1 fixture, where
     # it silently shifted 97% of ranks), each branch re-executes the
     # range shuffle and assigns DIFFERENT pids, misaligning offsets
-    # against local ranks. The checkpoint pins one assignment for both
-    # branches; the frame is the collapsed rank input (per-key scale),
-    # not the corpus, so the materialization is bounded.
+    # against local ranks. The cut is a freeze correctness needs: it
+    # pins one assignment for both branches. The frame is the collapsed
+    # rank input (per-key scale), not the corpus, so the
+    # materialization is bounded.
     if PRECHECKPOINT_PLANS is not None:
         PRECHECKPOINT_PLANS.append(
             rp._jdf.queryExecution().executedPlan().toString()
         )
-    rp = rp.localCheckpoint(eager=False)
+    rp = cut(rp)
 
     w_local = (
         Window.partitionBy("_pid")

@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..boundary import spread
+from ..materialize import cut
 
 
 def dot(a: Column | str, b: Column | str, dim: int | None = None) -> Column:
@@ -799,8 +800,6 @@ def _cap_split(
     and both ``ivf_build`` and ``ivf_topk`` checkpoint the assignment
     before calling in), and callers composing new pipelines must either
     keep that property or checkpoint their frame first."""
-    from pyspark.storagelevel import StorageLevel
-
     history: list[tuple[int, list[str]]] = []
     done: list[DataFrame] = []
     active = frame
@@ -820,16 +819,13 @@ def _cap_split(
         # Under-cap rows freeze: a lazy view over the PREVIOUS round's
         # checkpoint blocks (no new materialization, no re-keying).
         done.append(active.filter(~hit))
-        # Only the oversized remainder is re-keyed and checkpointed —
-        # serialized storage: compact bytes instead of per-row objects
-        # (the MemoryStore/SizeEstimator churn measured above).
-        active = _resplit_cells(
-            active.filter(hit), "vec", history[-1:], split_bits, dim, key
-        ).localCheckpoint(
-            # MEMORY_AND_DISK is the SERIALIZED level in the Python
-            # API (MEMORY_AND_DISK_DESER is the DataFrame default).
-            eager=False,
-            storageLevel=StorageLevel.MEMORY_AND_DISK,
+        # Only the oversized remainder is re-keyed, under a cut (its
+        # serialized storage level is the fix for the MemoryStore
+        # churn measured above).
+        active = cut(
+            _resplit_cells(
+                active.filter(hit), "vec", history[-1:], split_bits, dim, key
+            )
         )
     for d in done:
         active = active.unionByName(d)
@@ -948,14 +944,11 @@ def _capped_roles(
     with cells capped by ``cap_ivf_cells`` unless ``cell_cap`` is None
     (the shared tail of ``ivf_topk`` and ``ivfpq_topk``)."""
     if cell_cap is not None:
-        # localCheckpoint (compute-once), not persist: a persisted
-        # frame owned by nobody leaks CacheManager blocks across
-        # repeated invocations in a long-lived session; checkpoint
-        # blocks are context-cleaned once the result is dropped. It
-        # must wrap `assigned` BEFORE corpus/queries derive from it —
-        # r9 found the original rebound the name after the derivation,
-        # so every cap-split round silently re-ran the assign kernel.
-        assigned = assigned.localCheckpoint(eager=False)
+        # The cap-split rounds re-read the assignment. The cut must
+        # wrap `assigned` BEFORE corpus/queries derive from it — r9
+        # found the original rebound the name after the derivation, so
+        # every cap-split round silently re-ran the assign kernel.
+        assigned = cut(assigned)
     corpus = assigned.select(*corpus_cols)
     queries = _probe_rows(assigned, nprobe)
     if cell_cap is None:
@@ -1139,12 +1132,10 @@ def ivf_build(
     dim = sample.shape[1]
     cents = _kmeans(sample, n_clusters, seed=seed)
 
-    # Checkpoint the assignment: the recorded cap-split loop below runs
-    # one aggregate + collect per round over this frame, and without the
-    # checkpoint each round re-runs the whole assign kernel (r9).
-    corpus = _assign_with_centroids(
-        emb, cents, id_col, vec_col, nprobe=0
-    ).localCheckpoint(eager=False)
+    # Cut the assignment: the recorded cap-split loop below runs one
+    # aggregate + collect per round over this frame, and without the
+    # cut each round re-runs the whole assign kernel (r9).
+    corpus = cut(_assign_with_centroids(emb, cents, id_col, vec_col, nprobe=0))
     history: list[tuple[int, list[str]]] = []
     if cell_cap is not None:
         empty_q = spark.createDataFrame(
@@ -1308,9 +1299,10 @@ def ivf_query_persisted(
     # that fraction of the index, not the whole corpus (pinned by
     # tests/test_llm_ops.py's PartitionFilters plan test). The probed
     # set is DIMENSION-sized (≤ n_clusters + split history, no matter
-    # how many queries), so the collect is bounded; probe_q is
-    # checkpointed first so the assign kernel runs once, not twice.
-    probe_q = _probe_rows(assigned, nprobe).localCheckpoint(eager=True)
+    # how many queries), so the collect is bounded; probe_q is a cut,
+    # which that collect fills, so the assign kernel runs once, not
+    # twice.
+    probe_q = cut(_probe_rows(assigned, nprobe))
     probed = sorted(
         r["cell"] for r in probe_q.select("cell").distinct().collect()  # bounded: <= n_clusters + split cells
     )

@@ -21,6 +21,7 @@ from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Any
 
 from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 
 def run_concurrent(*thunks: Callable[[], Any]) -> list[Any]:
@@ -35,16 +36,16 @@ def run_concurrent(*thunks: Callable[[], Any]) -> list[Any]:
 
     ``inheritable_thread_target`` carries the JVM thread-locals (job
     group/description) into the pool threads under pinned-thread mode —
-    the PySpark-documented way to run driver-side job threads."""
+    the PySpark-documented way to run driver-side job threads. Given the
+    active session, it also carries the caller's job tags."""
     if not thunks:
         raise ValueError("run_concurrent: needs at least one thunk")
     if len(thunks) == 1:
         return [thunks[0]()]
+    inherit = inheritable_thread_target(SparkSession.active())
     pool = ThreadPoolExecutor(max_workers=len(thunks))
     try:
-        futures = [
-            pool.submit(inheritable_thread_target(t)) for t in thunks
-        ]
+        futures = [pool.submit(inherit(t)) for t in thunks]
         done, _ = wait(futures, return_when=FIRST_EXCEPTION)
         for f in futures:
             if f in done and f.exception() is not None:

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dec_avg
+from ..materialize import cut
 from ..operators import degree_metrics, merge_keyed
 from ..sources import load_table
 from .flow import _flows
@@ -1577,14 +1578,12 @@ def q_store_delta_log(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_events").alias("n_events"),
         F.sum("cents").alias("cents"),
     )
-    # Materialize the delta-merged aggregate BEFORE compacting:
-    # compact() retires the delta dirs, and a lazy plan would re-read
-    # the deleted files at collection time.
-    from_deltas = (
-        agg(merged)
-        .withColumn("phase", F.lit("delta_read"))
-        .localCheckpoint(eager=True)
-    )
+    # Freeze the delta-merged aggregate BEFORE compacting: compact()
+    # retires the delta dirs, and a lazy plan would re-read the deleted
+    # files at collection time. The collect is that freeze's one job;
+    # it fills the cut and its rows are not needed.
+    from_deltas = cut(agg(merged).withColumn("phase", F.lit("delta_read")))
+    from_deltas.collect()  # bounded: one row per decade
 
     store.compact(spark, "profiles", 3)
     compacted = store.read_version(spark, "profiles", 3)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..boundary import spread
+from ..materialize import cut
 from ..operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -655,14 +656,12 @@ def q_ann_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # form evaluated all three frames too).
     from ..parallel import run_concurrent
 
+    # Each frame is a cut: the equality checks read all three and the
+    # caller reads ``second`` again.
     first, second, fresh = run_concurrent(
-        lambda: ivf_query_persisted(
-            emb, store, k=5, nprobe=4, state=state
-        ).localCheckpoint(),
-        lambda: ivf_query_persisted(
-            emb, store, k=5, nprobe=4, state=state
-        ).localCheckpoint(),
-        lambda: ivf_topk(emb, n_clusters=8, nprobe=4).localCheckpoint(),
+        lambda: cut(ivf_query_persisted(emb, store, k=5, nprobe=4, state=state)),
+        lambda: cut(ivf_query_persisted(emb, store, k=5, nprobe=4, state=state)),
+        lambda: cut(ivf_topk(emb, n_clusters=8, nprobe=4)),
     )
     rerun_diff, build_diff = run_concurrent(
         lambda: multiset_diff_count(first, second),
@@ -928,7 +927,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct 3-gram shingles that are corpus-wide HOT (document
     frequency > 10) — high fractions mark templated/recrawled content.
 
-    Shape: the shingle frame is PERSISTED so the Arrow shingling
+    Shape: the shingle frame is a CUT so the Arrow shingling
     kernel — the dominant per-row cost — runs once however many plan
     branches read it (the first draft's two branches each re-ran it;
     the sf100 probe measured 12.5× on a 10× step). r10 (VERDICT r9
@@ -941,53 +940,40 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals come from size() on the cached frame (zero shuffle); the
     postings shuffle once for the df agg; the join-back moves only HOT
     postings (≤ postings/BOILER_DF keys by definition), so the doc_id
-    agg touches hot rows only. localCheckpoint freezes the result
-    before the cache is dropped — same lifecycle discipline as
-    jaccard_prefix_pairs. (Digest equality stands in for string
+    agg touches hot rows only. (Digest equality stands in for string
     equality; distinct shingles colliding in 64-bit hash space is the
     same accepted regime as every xxhash64 keying in the engine.)"""
-    from pyspark import StorageLevel
-
     from ..operators.dedup import doc_shingles
 
-    sh = (
-        doc_shingles(load_table(spark, sf_dir, "documents"))
-        .select(
+    sh = cut(
+        doc_shingles(load_table(spark, sf_dir, "documents")).select(
             "doc_id",
             F.size("shingles").cast("long").alias("n_shingles"),
             F.expr("transform(shingles, s -> xxhash64(s))").alias("sh_h"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    sh.count()  # eager fill: concurrent branches must not race the cache
-    try:
-        ex = sh.select("doc_id", F.explode("sh_h").alias("s"))
-        hot = (
-            ex.groupBy("s")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > BOILER_DF)
-            .select("s")
+    ex = sh.select("doc_id", F.explode("sh_h").alias("s"))
+    hot = (
+        ex.groupBy("s")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > BOILER_DF)
+        .select("s")
+    )
+    n_boiler = (
+        ex.join(hot, "s").groupBy("doc_id").agg(F.count("*").alias("n_boiler"))
+    )
+    return (
+        sh.select("doc_id", "n_shingles")
+        .join(n_boiler, "doc_id", "left")
+        .select(
+            "doc_id",
+            "n_shingles",
+            F.coalesce("n_boiler", F.lit(0)).alias("n_boiler"),
+            F.round(
+                F.coalesce("n_boiler", F.lit(0)) / F.col("n_shingles"), 4
+            ).alias("boiler_frac"),
         )
-        n_boiler = (
-            ex.join(hot, "s")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n_boiler"))
-        )
-        out = (
-            sh.select("doc_id", "n_shingles")
-            .join(n_boiler, "doc_id", "left")
-            .select(
-                "doc_id",
-                "n_shingles",
-                F.coalesce("n_boiler", F.lit(0)).alias("n_boiler"),
-                F.round(
-                    F.coalesce("n_boiler", F.lit(0)) / F.col("n_shingles"), 4
-                ).alias("boiler_frac"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        sh.unpersist()
+    )
 
 
 register(
@@ -1155,14 +1141,12 @@ def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    shingled = doc_shingles(docs).persist()
-    shingled.count()
-    # Eager persists: entries and sigs each feed BOTH sides of a
-    # self-join; lazily-cached frames get raced by the concurrent scan
-    # stages and the 12-md5s-per-shingle signature kernel runs 2× per
-    # frame (4× total). Both caches are signature-sized (small).
-    entries = minhash_band_entries(shingled, "doc_id", 12, 6).persist()
-    entries.count()
+    # Cuts: the shingles feed both kernels and both verify sides, and
+    # entries and sigs each feed BOTH sides of a self-join, so without
+    # them the 12-md5s-per-shingle signature kernel runs 2× per frame.
+    # Both signature-side cuts are small.
+    shingled = cut(doc_shingles(docs))
+    entries = cut(minhash_band_entries(shingled, "doc_id", 12, 6))
     cands = (
         entries.select("band", "band_hash", F.col("doc_id").alias("id_a"))
         .join(
@@ -1173,8 +1157,7 @@ def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b")
         .distinct()
     )
-    sigs = minhash_signatures(shingled).persist()
-    sigs.count()
+    sigs = cut(minhash_signatures(shingled))
     sa = sigs.select(F.col("doc_id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("doc_id").alias("id_b"), F.col("sig").alias("sig_b"))
     sha = shingled.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))

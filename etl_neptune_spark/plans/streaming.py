@@ -17,6 +17,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..materialize import cut
 from ..sources import load_table
 from ..streaming.pipeline import (
     EVENTS_SCHEMA,
@@ -1388,13 +1389,12 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _stream_shuffle(spark):
         # streamed-vs-batched answers: two independent reads of two
         # frozen stores — parallel threads (§2.6), identical frames.
+        # ``streamed`` must be frozen before compact() below retires
+        # the deltas it reads: the split diff is the action that fills
+        # its cut.
         streamed, batched = run_concurrent(
-            lambda: ivf_query_persisted(
-                emb, store_s, k=5, state=ivf_state
-            ).localCheckpoint(),
-            lambda: ivf_query_persisted(
-                emb, store_b, k=5, state=ivf_state
-            ).localCheckpoint(),
+            lambda: cut(ivf_query_persisted(emb, store_s, k=5, state=ivf_state)),
+            lambda: cut(ivf_query_persisted(emb, store_b, k=5, state=ivf_state)),
         )
         split_diff = multiset_diff_count(streamed, batched)
         if split_diff:
@@ -1420,9 +1420,8 @@ def q_stream_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError(
                 "q_stream_ann_ingest: compaction left deltas behind"
             )
-        compacted = ivf_query_persisted(
-            emb, store_s, k=5, state=ivf_state
-        ).localCheckpoint()
+        # The compaction diff reads it and the caller reads it again.
+        compacted = cut(ivf_query_persisted(emb, store_s, k=5, state=ivf_state))
     compact_diff = multiset_diff_count(streamed, compacted)
     if compact_diff:
         raise RuntimeError(

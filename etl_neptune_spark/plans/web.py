@@ -82,7 +82,7 @@ def q_url_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "q_url_parse",
     q_url_parse,
-    f"""
+    rf"""
     WITH u AS (
         SELECT doc_id, n_chars,
                {URL_EXPR.replace("AS STRING", "AS VARCHAR")} AS url

@@ -28,6 +28,18 @@ Budget history:
   connected_components 3+1 → 2+1 (distributed 31+3 → 27+4), bfs_hops
   5+1 → 3+1 (44+1 → 31+1), temporal_reach 5+1 → 3+1 (33+1 → 33+1),
   sssp_bounded 5+1 → 3+1 (15+2 → 15+1), msbfs_closeness 5+1 → 3+1.
+- dedup and store queries: (build, run) jobs of the queries whose
+  materializations moved into ``etl_neptune_spark.materialize``, on the
+  sf0.01 fixture with the result ``count()``ed, on a clean cache
+  (local[4], 8 shuffle partitions), pinned with no headroom. Old → new,
+  when each cut stopped being filled by an eager ``count()`` or an
+  eager output ``localCheckpoint``: q_jaccard_prefix 19+2 → 8+5,
+  q_ngram_jaccard 12+2 → 3+5, q_containment 12+2 → 3+5,
+  q_dedup_minhash 10+6 → 8+5, q_minhash_estimate 11+8 → 2+6,
+  q_cross_dedup 1+11 → 3+6, q_simhash64_band 9+6 → 3+6,
+  q_simhash_band 5+8 → 2+7, q_edit_verify 9+7 → 3+7, q_boilerplate
+  8+2 → 2+2, q_store_delta_log 10+3 → 10+3. A run count may rise: a
+  cut's last stage now runs inside the query's own action.
 """
 
 from __future__ import annotations
@@ -35,6 +47,9 @@ from __future__ import annotations
 import pytest
 from graph_cases import CASES as GRAPH_CASES
 from graph_cases import graph_edges
+from test_plan_budgets import SF_01
+
+import __spark_entry__ as entry
 
 from etl_neptune_spark.pipelines import run_aws_snapshot_etl
 from etl_neptune_spark.sources import load_table
@@ -59,6 +74,19 @@ GRAPH_JOBS = {  # (build, run)
     "sssp_bounded-distributed": (18, 4),
     "msbfs_closeness": (8, 3),
     "msbfs_closeness-distributed": (17, 4),
+}
+QUERY_JOBS = {  # (build, run) at sf0.01
+    "q_jaccard_prefix": (8, 5),
+    "q_ngram_jaccard": (3, 5),
+    "q_containment": (3, 5),
+    "q_dedup_minhash": (8, 5),
+    "q_minhash_estimate": (2, 6),
+    "q_cross_dedup": (3, 6),
+    "q_simhash64_band": (3, 6),
+    "q_simhash_band": (2, 7),
+    "q_edit_verify": (3, 7),
+    "q_boilerplate": (2, 2),
+    "q_store_delta_log": (10, 3),
 }
 
 
@@ -98,4 +126,16 @@ def test_graph_operator_job_budget(spark, case):
     out.collect()
     jobs = (built - start, _next_job(spark) - built)
     build_budget, run_budget = GRAPH_JOBS[case]
+    assert jobs[0] <= build_budget and jobs[1] <= run_budget, jobs
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_JOBS))
+def test_query_job_budget(spark, name):
+    spark.catalog.clearCache()
+    start = _next_job(spark)
+    df = entry.queries()[name](spark, SF_01)
+    built = _next_job(spark)
+    df.count()
+    jobs = (built - start, _next_job(spark) - built)
+    build_budget, run_budget = QUERY_JOBS[name]
     assert jobs[0] <= build_budget and jobs[1] <= run_budget, jobs

@@ -160,3 +160,54 @@ def test_stream_waits_are_bounded():
                 if isinstance(node, ast.Attribute) and node.attr == "awaitTermination":
                     found[(rel, owner)] = found.get((rel, owner), 0) + 1
     assert found == AWAIT_TERMINATION_ALLOWED
+
+
+def test_modules_compile_without_warnings():
+    """Compile every package module with SyntaxWarning and
+    DeprecationWarning raised as errors: an invalid escape such as
+    ``'\\?'`` in a non-raw string is a warning today and an error in a
+    later Python."""
+    import warnings
+
+    for path in glob.glob(
+        os.path.join(REPO, "etl_neptune_spark", "**", "*.py"), recursive=True
+    ):
+        with open(path) as f:
+            src = f.read()
+        with warnings.catch_warnings():
+            warnings.simplefilter("error", SyntaxWarning)
+            warnings.simplefilter("error", DeprecationWarning)
+            compile(src, os.path.relpath(path, REPO), "exec")
+
+
+# Every persist and checkpoint goes through etl_neptune_spark.materialize
+# (``cut`` / ``held``), which owns the storage level and the release.
+MATERIALIZE_METHODS = ("persist", "unpersist", "localCheckpoint", "checkpoint", "cache")
+
+
+def test_materialization_only_in_the_helper():
+    """Scan the package for the materialization methods (as attributes)
+    and ``StorageLevel`` (as a name or an import): only
+    ``etl_neptune_spark/materialize.py`` may use them."""
+    offenders = []
+    for path in glob.glob(
+        os.path.join(REPO, "etl_neptune_spark", "**", "*.py"), recursive=True
+    ):
+        rel = os.path.relpath(path, REPO)
+        if rel == "etl_neptune_spark/materialize.py":
+            continue
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in MATERIALIZE_METHODS:
+                offenders.append(f"{rel}:{node.lineno} .{node.attr}")
+            elif isinstance(node, ast.Name) and node.id == "StorageLevel":
+                offenders.append(f"{rel}:{node.lineno} StorageLevel")
+            elif isinstance(node, ast.ImportFrom) and any(
+                a.name == "StorageLevel" for a in node.names
+            ):
+                offenders.append(f"{rel}:{node.lineno} import StorageLevel")
+    assert not offenders, (
+        "materialization outside etl_neptune_spark/materialize.py — use "
+        f"cut or held: {offenders}"
+    )

@@ -21,3 +21,12 @@ def test_run_concurrent_fails_fast_and_keeps_order(spark):
     with pytest.raises(RuntimeError, match="boom"):
         run_concurrent(lambda: time.sleep(30), boom)
     assert time.monotonic() - t0 < 10
+
+
+def test_run_concurrent_carries_the_callers_job_tags(spark):
+    spark.addTag("run-concurrent-caller")
+    try:
+        seen = run_concurrent(spark.getTags, spark.getTags)
+    finally:
+        spark.removeTag("run-concurrent-caller")
+    assert all("run-concurrent-caller" in tags for tags in seen), seen

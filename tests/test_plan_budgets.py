@@ -21,6 +21,18 @@ Budget history:
   8 more queries pinned, incl. q_bucketed_merge at ZERO runtime
   exchanges — the bytes band catches the one re-execution mode counts
   cannot: the same exchange node run twice accumulates its metrics.
+- q_dedup_minhash (2, 3, 0, 91795) -> (1, 2, 1, 1447): its shingle and
+  band-entry frames became cuts (``etl_neptune_spark.materialize``)
+  instead of persisted caches. The walk followed a cache into its
+  cached plan, so it counted the shingle kernel's round-robin spread
+  and its volume; a cut's plan ends at its RDD scan, and that spread
+  now runs when the cut is made, during construction. The verify
+  join's two sides read one cut, so the second broadcast is REUSED.
+- the six rank rewrites' bytes bands, None -> values: measured on
+  local[4], each query in a fresh session and all of them in this
+  fixture's order, at the parent and after the change, the bytes agree
+  to 0.1% (q_ks_test 34214-34253, the other five exactly), so their
+  volume does not depend on session history.
 """
 
 from __future__ import annotations
@@ -40,7 +52,9 @@ BUDGETS = {
     "q_degrees": (4, 0, 0, 10358),      # out/in/label-filtered degree aggs
     "q_upsert_nodes": (2, 0, 0, 41248), # SMJ full-outer MERGE (both sides)
     "q_gc_anti": (1, 1, 0, 2960),       # broadcast anti-join + final agg
-    "q_dedup_minhash": (2, 3, 0, 91795),  # banded LSH: band agg + verify
+    # banded LSH: candidate distinct; band-entry broadcast, verify-side
+    # broadcast reused by the other side
+    "q_dedup_minhash": (1, 2, 1, 1447),
     # composed stages SHARE 2 exchanges; 3 broadcasts, not 4, since
     # 6f60344's curate_corpus(carry=) change (the token count rides the
     # curation scan instead of a join-back)
@@ -61,15 +75,12 @@ BUDGETS = {
     # two-phase rank rewrites — post-checkpoint consumers only (the
     # pre-checkpoint range exchange is pinned by test_plans.py's
     # capture hook); the offset-table windows are metadata-scale.
-    # Bytes bands None: a localCheckpoint materialized by an EARLIER
-    # call in the same session absorbs part of the volume, so bytes are
-    # session-history-dependent even though the counts are stable
-    "q_gini": (4, 1, 0, None),
-    "q_rfm": (3, 1, 0, None),
-    "q_auc": (4, 1, 0, None),
-    "q_lorenz": (5, 1, 0, None),
-    "q_gains": (5, 1, 0, None),
-    "q_ks_test": (4, 1, 0, None),
+    "q_gini": (4, 1, 0, 2895),
+    "q_rfm": (3, 1, 0, 5119),
+    "q_auc": (4, 1, 0, 7826),
+    "q_lorenz": (5, 1, 0, 3451),
+    "q_gains": (5, 1, 0, 9199),
+    "q_ks_test": (4, 1, 0, 34240),
 }
 
 # Shuffle-bytes band: same plan + same fixture + same partitioning give

@@ -17,9 +17,13 @@ def test_every_query_has_oracle_or_is_declared(registry):
 
 def test_all_queries_run_nonempty(spark, sf_dir, registry):
     queries, _ = registry
+    # A query must leave no cache entry behind: a leaked one would be
+    # substituted into every later query with the same plan.
+    cache = spark._jsparkSession.sharedState().cacheManager()
     for name, fn in queries.items():
         df = fn(spark, sf_dir)
         assert df.count() > 0, f"{name} returned no rows at {sf_dir}"
+        assert cache.isEmpty(), f"{name} left a cached plan behind"
 
 
 def test_argmax_latest_per_key(spark, sf_dir, registry):
