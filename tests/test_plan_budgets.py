@@ -21,13 +21,16 @@ Budget history:
   8 more queries pinned, incl. q_bucketed_merge at ZERO runtime
   exchanges — the bytes band catches the one re-execution mode counts
   cannot: the same exchange node run twice accumulates its metrics.
-- q_dedup_minhash (2, 3, 0, 91795) -> (1, 2, 1, 1447): its shingle and
-  band-entry frames became cuts (``etl_neptune_spark.materialize``)
-  instead of persisted caches. The walk followed a cache into its
-  cached plan, so it counted the shingle kernel's round-robin spread
-  and its volume; a cut's plan ends at its RDD scan, and that spread
-  now runs when the cut is made, during construction. The verify
-  join's two sides read one cut, so the second broadcast is REUSED.
+- q_dedup_minhash (2, 3, 0) -> (2, 2, 1): its shingle and band-entry
+  frames became cuts (``etl_neptune_spark.materialize``) instead of
+  persisted caches. The walk follows a cut into the plan it was made
+  from, as it followed a cache into its cached plan, so the shingle
+  kernel's round-robin spread and its volume stay counted (the 91795
+  bytes pin holds: 91690 measured on local[4]). The verify join's two
+  sides read one cut scan, and its second broadcast is now a
+  ReusedExchange of the first; the cached frame was read through two
+  separate TableCacheQueryStages, which AQE broadcast twice. Same
+  shuffles, one broadcast fewer.
 - the six rank rewrites' bytes bands, None -> values: measured on
   local[4], each query in a fresh session and all of them in this
   fixture's order, at the parent and after the change, the bytes agree
@@ -52,9 +55,10 @@ BUDGETS = {
     "q_degrees": (4, 0, 0, 10358),      # out/in/label-filtered degree aggs
     "q_upsert_nodes": (2, 0, 0, 41248), # SMJ full-outer MERGE (both sides)
     "q_gc_anti": (1, 1, 0, 2960),       # broadcast anti-join + final agg
-    # banded LSH: candidate distinct; band-entry broadcast, verify-side
-    # broadcast reused by the other side
-    "q_dedup_minhash": (1, 2, 1, 1447),
+    # banded LSH: shingle spread (in the cut's origin) + candidate
+    # distinct; band-entry broadcast, verify-side broadcast reused by
+    # the other side
+    "q_dedup_minhash": (2, 2, 1, 91795),
     # composed stages SHARE 2 exchanges; 3 broadcasts, not 4, since
     # 6f60344's curate_corpus(carry=) change (the token count rides the
     # curation scan instead of a join-back)
@@ -72,9 +76,9 @@ BUDGETS = {
     # on filesystem state from earlier calls in the session
     "q_partition_prune": (2, 0, 0, None),
     "q_ann_lsh": (1, 0, 0, 135451),     # bucket agg; kernel is Arrow-side
-    # two-phase rank rewrites — post-checkpoint consumers only (the
-    # pre-checkpoint range exchange is pinned by test_plans.py's
-    # capture hook); the offset-table windows are metadata-scale.
+    # two-phase rank rewrites — post-cut consumers only (POST_CUT: the
+    # pre-cut range exchange is pinned by test_plans.py's capture
+    # hook); the offset-table windows are metadata-scale.
     "q_gini": (4, 1, 0, 2895),
     "q_rfm": (3, 1, 0, 5119),
     "q_auc": (4, 1, 0, 7826),
@@ -82,6 +86,9 @@ BUDGETS = {
     "q_gains": (5, 1, 0, 9199),
     "q_ks_test": (4, 1, 0, 34240),
 }
+
+# measured up to their cut's scan, not into the plan it was made from
+POST_CUT = {"q_gini", "q_rfm", "q_auc", "q_lorenz", "q_gains", "q_ks_test"}
 
 # Shuffle-bytes band: same plan + same fixture + same partitioning give
 # deterministic shuffle volume up to layout/compression jitter. The band
@@ -101,7 +108,9 @@ def measured(spark):
     out = {}
     for name in BUDGETS:
         df = queries[name](spark, SF_01)
-        out[name] = collect_exec_metrics(spark, df)
+        out[name] = collect_exec_metrics(
+            spark, df, follow_cuts=name not in POST_CUT
+        )
     return out
 
 

@@ -172,10 +172,9 @@ def main() -> int:
         f"{len(failures)} with hard anti-patterns."
         + (
             " Exchange / shuffle columns are RUNTIME metrics from the"
-            " executed adaptive plan (tools/plan_metrics.py); queries"
-            " routing through a localCheckpoint report the"
-            " post-checkpoint consumers only (the pre-checkpoint range"
-            " exchange is pinned by tests/test_plans.py)."
+            " executed adaptive plan (tools/plan_metrics.py), which"
+            " follows a cached or cut frame into the plan it was made"
+            " from."
             if exec_mode
             else ""
         ),

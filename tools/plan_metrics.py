@@ -11,8 +11,10 @@ exchange materialized twice).
 ``collect_exec_metrics(spark, df)`` executes ``df`` through the noop
 sink and walks the post-execution adaptive plan (following
 AdaptiveSparkPlanExec -> executedPlan, QueryStageExec -> plan,
-ReusedExchangeExec -> child, and subqueries), deduplicating nodes by JVM
-identity so a reused exchange is counted ONCE. Returns::
+ReusedExchangeExec -> child, a cache's scan -> its cached plan, a cut's
+scan -> the plan it was made from (``materialize.origin_plan``), and
+subqueries), deduplicating nodes by JVM identity so a reused exchange
+is counted ONCE. Returns::
 
     {"shuffle_exchanges": int,   # distinct ShuffleExchangeExec executed
      "broadcast_exchanges": int, # distinct BroadcastExchangeExec
@@ -34,8 +36,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_neptune_spark.materialize import origin_plan
 
-def _walk(node, jvm, seen: set, out: list) -> None:
+
+def _walk(node, jvm, seen: set, out: list, follow_cuts: bool) -> None:
     ident = jvm.java.lang.System.identityHashCode(node)
     if ident in seen:
         return
@@ -45,25 +49,29 @@ def _walk(node, jvm, seen: set, out: list) -> None:
     try:
         ch = node.children()
         for i in range(ch.size()):
-            _walk(ch.apply(i), jvm, seen, out)
+            _walk(ch.apply(i), jvm, seen, out, follow_cuts)
     except Exception:  # noqa: BLE001 — leaf/py4j edge
         pass
     # wrappers that hide their real subtree from children()
     if "AdaptiveSparkPlanExec" in cls:
-        _walk(node.executedPlan(), jvm, seen, out)
+        _walk(node.executedPlan(), jvm, seen, out, follow_cuts)
     elif "QueryStageExec" in cls:
-        _walk(node.plan(), jvm, seen, out)
+        _walk(node.plan(), jvm, seen, out, follow_cuts)
     elif "ReusedExchangeExec" in cls:
-        _walk(node.child(), jvm, seen, out)
+        _walk(node.child(), jvm, seen, out, follow_cuts)
     elif "InMemoryTableScanExec" in cls:
         try:
-            _walk(node.relation().cachedPlan(), jvm, seen, out)
+            _walk(node.relation().cachedPlan(), jvm, seen, out, follow_cuts)
         except Exception:  # noqa: BLE001
             pass
+    elif "RDDScanExec" in cls and follow_cuts:
+        origin = origin_plan(node.rdd().id())
+        if origin is not None:
+            _walk(origin, jvm, seen, out, follow_cuts)
     try:
         sq = node.subqueries()
         for i in range(sq.size()):
-            _walk(sq.apply(i), jvm, seen, out)
+            _walk(sq.apply(i), jvm, seen, out, follow_cuts)
     except Exception:  # noqa: BLE001
         pass
 
@@ -78,7 +86,9 @@ def _metric(node, key: str) -> int:
     return 0
 
 
-def collect_exec_metrics(spark: SparkSession, df: DataFrame) -> dict:
+def collect_exec_metrics(
+    spark: SparkSession, df: DataFrame, follow_cuts: bool = True
+) -> dict:
     # Execute THIS DataFrame's own QueryExecution (a noop-sink write
     # would wrap the logical plan in a new command with a fresh qe,
     # leaving df's plan nodes unexecuted and their metrics zero).
@@ -87,7 +97,7 @@ def collect_exec_metrics(spark: SparkSession, df: DataFrame) -> dict:
     jvm = spark._jvm
     seen: set = set()
     nodes: list = []
-    _walk(qe.executedPlan(), jvm, seen, nodes)
+    _walk(qe.executedPlan(), jvm, seen, nodes, follow_cuts)
 
     shuffle_n = broadcast_n = reused_n = 0
     shuffle_bytes = shuffle_records = 0
