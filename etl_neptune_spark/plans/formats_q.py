@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from etl_neptune_spark.plans.registry import register, scratch_dir
 from etl_neptune_spark.sources.formats import explode_nested, read_json, read_tsv
+from etl_neptune_spark.sources.tables import read_parquet
 
 FIXTURES = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -207,7 +208,7 @@ def q_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mode("overwrite")
         .parquet(out)
     )
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     pruned = back.filter(
         (F.col("day") >= F.lit("2024-01-05").cast("date"))
         & (F.col("day") <= F.lit("2024-01-07").cast("date"))

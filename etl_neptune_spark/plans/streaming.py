@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..materialize import cut
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from ..streaming.pipeline import (
     EVENTS_SCHEMA,
     drain,
@@ -241,7 +241,7 @@ def _staged_events(spark: SparkSession, sf_dir: str, layout: str, build) -> str:
     shutil.rmtree(tmp, ignore_errors=True)
     # One metadata-only count at staging time: certs report their
     # stream-phase rows/sec from this without a per-run scan.
-    n_rows = spark.read.parquet(cache).count()
+    n_rows = read_parquet(spark, cache).count()
     with open(marker, "w") as fh:
         json.dump({"fp": fp, "rows": n_rows}, fh)
     return cache
@@ -702,7 +702,7 @@ def q_stream_window_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     _flush_sentinels(c, staging, mx_us, lambda: run_once(1))
 
-    out = spark.read.parquet(sink)
+    out = read_parquet(spark, sink)
     return out.filter(F.col("event_type") != "zz_sentinel").select(
         F.unix_seconds(F.col("w.start")).alias("win_start"),
         "event_type",
@@ -752,7 +752,7 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = running_edge_totals(flow_projection(flow_stream(spark, staging, 2)))
     with c.stream():
         c.drain(totals.writeStream.foreachBatch(sink).outputMode("update"))
-    out = spark.read.parquet(sink_dir)
+    out = read_parquet(spark, sink_dir)
     return out.groupBy("src", "dst", "protocol").agg(
         F.max("calls").alias("calls"),
         F.max("errors").alias("errors"),

@@ -23,7 +23,7 @@ from ..operators.timeseries import (
     scd2_compact,
     sessionize,
 )
-from ..sources import load_table
+from ..sources import load_table, read_parquet
 from .registry import register, scratch_dir
 
 GAP_MIN = 30
@@ -2091,7 +2091,7 @@ def q_mv_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
     )
     daily.write.mode("overwrite").parquet(root)  # the MV materializes
-    mv = spark.read.parquet(root)
+    mv = read_parquet(spark, root)
     return mv.groupBy(
         F.date_trunc("month", F.col("day")).cast("date").alias("month"),
         "event_type",

@@ -12,6 +12,7 @@ from .tables import (
     load_tables,
     lookback_cutoff_micros,
     max_ts_micros,
+    read_parquet,
     register_views,
 )
 
@@ -26,6 +27,7 @@ __all__ = [
     "max_ts_micros",
     "parse_template_text",
     "read_json",
+    "read_parquet",
     "read_tsv",
     "register_views",
 ]

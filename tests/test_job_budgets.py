@@ -40,6 +40,14 @@ Budget history:
   q_simhash_band 5+8 → 2+7, q_edit_verify 9+7 → 3+7, q_boilerplate
   8+2 → 2+2, q_store_delta_log 10+3 → 10+3. A run count may rise: a
   cut's last stage now runs inside the query's own action.
+- parquet schema once per layout: every schema-less parquet read goes
+  through ``sources.tables.read_parquet``, which reuses the schema of an
+  earlier file with the same footer layout and session settings. The
+  warm aws run went 18 → 13 jobs (its five table reads no longer infer),
+  so ``AWS_RUN_JOBS`` goes 22 → 16 (3 of headroom as before). The 12
+  benchmark ``query-mix`` queries at sf0.01 build with 17 jobs in a warm
+  pass before and 0 after; ``test_warm_query_build_launches_no_job``
+  pins the 0.
 """
 
 from __future__ import annotations
@@ -56,7 +64,7 @@ from etl_neptune_spark.sources import load_table
 from etl_neptune_spark.streaming import GraphStore, flow_projection
 from etl_neptune_spark.streaming.pipeline import deepflow_batch
 
-AWS_RUN_JOBS = 22
+AWS_RUN_JOBS = 16
 DEEPFLOW_APPLY_JOBS = 15
 GRAPH_JOBS = {  # (build, run)
     "pagerank": (10, 11),
@@ -75,6 +83,22 @@ GRAPH_JOBS = {  # (build, run)
     "msbfs_closeness": (8, 3),
     "msbfs_closeness-distributed": (17, 4),
 }
+# The benchmark's query-mix queries (perfbench QUERY_MIX), copied so
+# this budget does not depend on the benchmark package.
+WARM_BUILD_QUERIES = (
+    "q_flow_edges",
+    "q_json_refs_udtf",
+    "q_gc_anti",
+    "q_lang_id",
+    "q_stream_window",
+    "q_tpch_q1",
+    "q_tpch_q9",
+    "q_entity_match",
+    "q_semdedup",
+    "q_template_scan",
+    "q_url_parse",
+    "q_geofence",
+)
 QUERY_JOBS = {  # (build, run) at sf0.01
     "q_jaccard_prefix": (8, 5),
     "q_ngram_jaccard": (3, 5),
@@ -139,3 +163,17 @@ def test_query_job_budget(spark, name):
     jobs = (built - start, _next_job(spark) - built)
     build_budget, run_budget = QUERY_JOBS[name]
     assert jobs[0] <= build_budget and jobs[1] <= run_budget, jobs
+
+
+def test_warm_query_build_launches_no_job(spark):
+    """After one pass, building each query again launches no job: the
+    table schemas, time anchors and staged inputs are all reused."""
+    queries = entry.queries()
+    for name in WARM_BUILD_QUERIES:
+        queries[name](spark, SF_01).count()
+    built = {}
+    for name in WARM_BUILD_QUERIES:
+        start = _next_job(spark)
+        queries[name](spark, SF_01)
+        built[name] = _next_job(spark) - start
+    assert built == dict.fromkeys(WARM_BUILD_QUERIES, 0), built

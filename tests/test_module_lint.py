@@ -211,3 +211,69 @@ def test_materialization_only_in_the_helper():
         "materialization outside etl_neptune_spark/materialize.py — use "
         f"cut or held: {offenders}"
     )
+
+
+# Every parquet read without a given schema goes through
+# sources.tables.read_parquet, which infers once per footer layout and
+# session settings. The two other sites read directories on purpose:
+# the store reads its snapshots with their recorded schema and infers
+# only for a directory written before schemas were recorded, and
+# q_schema_evolution certifies Spark's own mergeSchema inference.
+SCHEMALESS_PARQUET_READS_ALLOWED = {
+    ("etl_neptune_spark/sources/tables.py", "read_parquet"): 1,
+    ("etl_neptune_spark/streaming/store.py", "_read_parquet"): 1,
+    ("etl_neptune_spark/plans/formats_q.py", "q_schema_evolution"): 1,
+}
+
+
+def _chain(node: ast.AST) -> tuple[list[str], ast.AST]:
+    """The attribute names a call chain passes through, outermost
+    first, and the node it starts from."""
+    names = []
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            return names, node
+
+
+def _schemaless_read(chains: list[list[str]]) -> bool:
+    """True when the chains assigned to one reader include a batch read
+    and not every one of them sets a schema."""
+    if any(c & {"write", "writeStream", "readStream"} for c in map(set, chains)):
+        return False
+    return any("read" in c for c in chains) and not all("schema" in c for c in chains)
+
+
+def test_schemaless_parquet_reads_go_through_read_parquet():
+    """Count the ``.parquet(...)`` calls on a batch reader with no
+    ``.schema(...)`` per top-level definition, following a reader held
+    in a local name through its assignments: only the sites above may
+    remain."""
+    found: dict[tuple[str, str], int] = {}
+    for path in glob.glob(
+        os.path.join(REPO, "etl_neptune_spark", "**", "*.py"), recursive=True
+    ):
+        rel = os.path.relpath(path, REPO)
+        for top in ast.parse(open(path).read()).body:
+            owner = getattr(top, "name", "<module>")
+            assigned: dict[str, list[list[str]]] = {}
+            for node in ast.walk(top):
+                if isinstance(node, ast.Assign):
+                    for t in node.targets:
+                        if isinstance(t, ast.Name):
+                            assigned.setdefault(t.id, []).append(_chain(node.value)[0])
+            for node in ast.walk(top):
+                if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "parquet"):
+                    continue
+                names, root = _chain(node.func.value)
+                chains = [names]
+                if isinstance(root, ast.Name) and root.id in assigned:
+                    chains = [names + c for c in assigned[root.id]]
+                if _schemaless_read(chains):
+                    found[(rel, owner)] = found.get((rel, owner), 0) + 1
+    assert found == SCHEMALESS_PARQUET_READS_ALLOWED

@@ -218,3 +218,147 @@ def test_paginated_datasource_partitioning_and_bounds(spark):
         .load()
     )
     assert empty.count() == 0
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _write(path, **cols) -> str:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table({k: pa.array(v) for k, v in cols.items()}), str(path))
+    return str(path)
+
+
+def test_read_parquet_infers_once_per_layout(spark, tmp_path):
+    """A second read of a file, and a read of another file with the same
+    footer layout, take the schema of the first read: no job. The rows
+    equal an inferred read's."""
+    from etl_neptune_spark.sources import read_parquet
+
+    first = _write(tmp_path / "a.parquet", rp_once_id=[1, 2], rp_once_name=["x", "y"])
+    read_parquet(spark, first)
+    start = _next_job(spark)
+    df = read_parquet(spark, first)
+    assert _next_job(spark) - start == 0
+    assert df.schema == spark.read.parquet(first).schema
+
+    other = _write(tmp_path / "b.parquet", rp_once_id=[3, 4, 5], rp_once_name=["z", None, "w"])
+    start = _next_job(spark)
+    df = read_parquet(spark, other)
+    assert _next_job(spark) - start == 0
+    assert sorted(df.collect()) == sorted(spark.read.parquet(other).collect())
+
+
+def test_read_parquet_rewritten_path_gets_its_new_schema(spark, tmp_path):
+    from etl_neptune_spark.sources import read_parquet
+
+    p = _write(tmp_path / "t.parquet", rp_rewrite_a=[1])
+    assert read_parquet(spark, p).columns == ["rp_rewrite_a"]
+    _write(p, rp_rewrite_b=["s"], rp_rewrite_c=[2.0])
+    df = read_parquet(spark, p)
+    assert df.dtypes == [("rp_rewrite_b", "string"), ("rp_rewrite_c", "double")]
+    assert df.collect()[0].rp_rewrite_b == "s"
+
+
+def test_read_parquet_keys_on_the_inference_settings(spark, tmp_path):
+    """A setting that changes the inferred type gives its own cache
+    entry. Spark 4.1 rejects TIMESTAMP(NANOS) without nanosAsLong, so
+    under that setting the nanos file is inferred again and fails as an
+    inferred read does; the micros file reads as timestamp_ntz or
+    timestamp under inferTimestampNTZ."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from etl_neptune_spark.sources import read_parquet
+    from etl_neptune_spark.sources import tables
+
+    us = 1_700_000_000_000_000
+    nanos = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({"rp_key_ts": pa.array([us * 1000], type=pa.timestamp("ns"))}), nanos)
+    micros = str(tmp_path / "us.parquet")
+    pq.write_table(pa.table({"rp_key_ts": pa.array([us], type=pa.timestamp("us"))}), micros)
+
+    keys = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.inferTimestampNTZ.enabled")
+    saved = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], "true")
+        assert dict(read_parquet(spark, nanos).dtypes)["rp_key_ts"] == "bigint"
+        spark.conf.set(keys[0], "false")
+        with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
+            read_parquet(spark, nanos)
+
+        before = len(tables._SCHEMAS)
+        got = []
+        for ntz in ("true", "false"):
+            spark.conf.set(keys[1], ntz)
+            got.append(dict(read_parquet(spark, micros).dtypes)["rp_key_ts"])
+            assert read_parquet(spark, micros).schema == spark.read.parquet(micros).schema
+        assert got == ["timestamp_ntz", "timestamp"]
+        assert len(tables._SCHEMAS) == before + 2
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+
+
+def test_read_parquet_directory_still_infers(spark, tmp_path):
+    from etl_neptune_spark.sources import read_parquet
+
+    d = str(tmp_path / "dir")
+    spark.range(3).write.parquet(d)
+    read_parquet(spark, d)
+    start = _next_job(spark)
+    assert read_parquet(spark, d).count() == 3
+    assert _next_job(spark) - start > 1  # the inference job and the count
+
+
+def test_read_parquet_schema_equals_inferred(spark, sf_dir, tmp_path):
+    """Every fixture table and every timestamp encoding of
+    ``test_timestamp_encoding_drift``: the schema ``read_parquet`` gives,
+    inferred or cached, is the one Spark infers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_neptune_spark.sources import TABLES, read_parquet
+
+    paths = [f"{sf_dir}/{t}.parquet" for t in TABLES]
+    ts_us = [1_700_000_000_000_000 + i * 60_000_000 for i in range(4)]
+    for name, arr in {
+        "micros_ntz": pa.array(ts_us, type=pa.timestamp("us")),
+        "micros_utc": pa.array(ts_us, type=pa.timestamp("us", tz="UTC")),
+        "nanos": pa.array([u * 1000 for u in ts_us], type=pa.timestamp("ns")),
+    }.items():
+        p = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"event_id": pa.array([1, 2, 3, 4]), "ts": arr}), p,
+                       version="2.6", coerce_timestamps=None)
+        paths.append(p)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    for p in paths:
+        for _ in range(2):
+            assert read_parquet(spark, p).schema == spark.read.parquet(p).schema, p
+
+
+def test_ts_anchor_follows_a_rewritten_file(spark, tmp_path):
+    """Regression: the anchor of a table rewritten at the same path is
+    resolved again, not served from the first file's cache entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_neptune_spark.sources import max_ts_micros
+
+    us = 1_700_000_000_000_000
+
+    def write(ts):
+        pq.write_table(
+            pa.table({"event_id": pa.array(range(len(ts))),
+                      "ts": pa.array(ts, type=pa.timestamp("us", tz="UTC"))}),
+            str(tmp_path / "events.parquet"),
+        )
+
+    write([us, us + 1])
+    assert max_ts_micros(spark, str(tmp_path)) == us + 1
+    write([us, us + 1, us + 86_400_000_000])
+    assert max_ts_micros(spark, str(tmp_path)) == us + 86_400_000_000

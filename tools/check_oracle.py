@@ -21,11 +21,16 @@ task 7, same philosophy as the 7-partition gate): results must not depend on
 the physical join strategy, and any plan that only avoids a CartesianProduct
 because broadcast kicked in surfaces here. Explicit ``broadcast()`` hints
 still broadcast — those are deliberate plan design, not threshold luck.
+
+Each DuckDB oracle runs for at most ``ORACLE_TIMEOUT_S``; one still
+running then is interrupted, printed as ``TIMEOUT name`` and counted as
+failed, so a sweep over the all-pairs oracles at sf0.1 and above ends.
 """
 
 from __future__ import annotations
 
 import sys
+import threading
 
 sys.path.insert(0, ".")
 
@@ -49,6 +54,25 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
         )
     return con
+
+
+# Longest one DuckDB oracle may run. The all-pairs oracles (q_jaccard_prefix,
+# q_leakage_split) ran past 20 minutes at sf0.1 on a 4-core host; every
+# oracle at sf0.01 finishes in seconds.
+ORACLE_TIMEOUT_S = 300
+
+
+def run_oracle(con: duckdb.DuckDBPyConnection, sql: str) -> pd.DataFrame | None:
+    """``sql``'s result, or None when it was still running after
+    ``ORACLE_TIMEOUT_S`` and was interrupted."""
+    timer = threading.Timer(ORACLE_TIMEOUT_S, con.interrupt)
+    timer.start()
+    try:
+        return con.execute(sql).fetchdf()
+    except duckdb.InterruptException:
+        return None
+    finally:
+        timer.cancel()
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -184,9 +208,13 @@ def main() -> int:
             print(f"ok?  {name}: rows-only check, {len(spark_pdf)} rows (no oracle)")
             continue
         try:
-            duck_pdf = con.execute(sql).fetchdf()
+            duck_pdf = run_oracle(con, sql)
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: duckdb raised {type(exc).__name__}: {exc}")
+            failed.append(name)
+            continue
+        if duck_pdf is None:
+            print(f"TIMEOUT {name}")
             failed.append(name)
             continue
         problems = compare(name, spark_pdf, duck_pdf, strict=strict)
