@@ -133,8 +133,10 @@ def reset_then_degrade(nodes: DataFrame, alarms: DataFrame) -> DataFrame:
     """ST7 health join-update (neptune_etl_aws.py:2068-2111): every node
     resets to ``healthy``, then the nodes keyed by an ``(label, name)``
     alarm row flip to ``degraded`` — two sequential join-updates, the
-    reference's Step-16 shape. Shared by the aws snapshot run and the
-    streaming batch apply (``streaming.pipeline.apply_health_alarms``)."""
+    reference's Step-16 shape. Used by the streaming batch apply
+    (``streaming.pipeline.apply_health_alarms``); the aws snapshot run
+    computes the same column from the alarm flag of its metrics
+    aggregate."""
     flagged = alarms.select("label", "name").distinct().withColumn("_alarm", F.lit(True))
     return (
         nodes.withColumn("health_status", F.lit("healthy"))

@@ -8,14 +8,19 @@ region→Region, nation→AvailabilityZone, customer→resource entities
 with a tier tag, supplier→a second writer converging on the same
 store, orders→the metrics/alarms side-channel.
 
-Every step is a certified operator (merge_keyed, gc_keep, tag
-precedence coalesce, join-update, reset-then-degrade); this module
-only sequences them — like the reference's ``run_etl``, which is pure
-step order. All steps are single declarative plans; the only driver
-action is the final store write per table. The per-run ``stats`` are
-counted by ``Observation``s on those writes, as the reference
-accumulates them from the upserts it is already doing (etl_aws:1410,
-2060-2064) — the graph is never queried a second time to count.
+Every step is a certified operator or a column of one (merge_keyed,
+tag precedence coalesce, join-update); this module only sequences them
+— like the reference's ``run_etl``, which is pure step order. The
+ghost GC and the health alarms ride on passes the run already makes:
+the merge carries a presence column that is non-null exactly for the
+keys in the live snapshot, so the per-label GC is one filter on the
+merged rows, and the per-customer metrics aggregate also computes the
+alarm flag that sets ``health_status``. All steps are single
+declarative plans; the only driver action is the final store write per
+table. The per-run ``stats`` are counted by ``Observation``s on those
+writes, as the reference accumulates them from the upserts it is
+already doing (etl_aws:1410, 2060-2064) — the graph is never queried a
+second time to count.
 """
 
 from __future__ import annotations
@@ -23,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.gc import gc_keep
-from ..operators.merge import merge_keyed, reset_then_degrade
+from ..operators.merge import merge_keyed
 from ..sources import load_table
 from ..streaming.store import GraphStore
 
@@ -38,8 +42,8 @@ def _nodes(df: DataFrame, label: str, name: F.Column, **props: F.Column) -> Data
 def run_aws_snapshot_etl(
     spark: SparkSession, sf_dir: str, store: GraphStore, version: int = 0
 ) -> dict[str, int]:
-    """One full snapshot run: upserts → enrichment → metrics →
-    GC → health. Returns per-step counts (the reference's ``stats``
+    """One full snapshot run: upserts → enrichment → GC → metrics and
+    health. Returns per-step counts (the reference's ``stats``
     accumulation, §2.4 A16), observed during the writes. Idempotent: a
     second identical run leaves the store byte-identical, also when it
     republishes the same ``version`` its own plan reads."""
@@ -91,11 +95,14 @@ def run_aws_snapshot_etl(
 
     # Assemble incoming node set; one MERGE into the store.
     # Region/AZ/service rows carry no tier or segment: the union pads
-    # them with typed nulls.
+    # them with typed nulls. ``_live`` marks every incoming key; the
+    # merge takes it from incoming only, so afterwards it is non-null
+    # exactly for the nodes in the live snapshot.
     incoming = (
         resources.unionByName(regions, allowMissingColumns=True)
         .unionByName(azs, allowMissingColumns=True)
         .unionByName(services, allowMissingColumns=True)
+        .withColumn("_live", F.lit(True))
     )
 
     existing = store.read(spark, "nodes")
@@ -105,31 +112,15 @@ def run_aws_snapshot_etl(
     # degree metrics, cfn evidence) pass through untouched; this
     # pipeline's namespace is tier/segment + the metric/health columns
     # it recomputes below.
-    own = {"label", "name", "tier", "segment", "order_count", "total_spend",
+    own = {"label", "name", "tier", "segment", "_live", "order_count", "total_spend",
            "health_status"}
     preserve = [c for c in existing.columns if c not in own]
     merged = merge_keyed(
         existing,
         incoming,
         keys=["label", "name"],
-        update_cols=["tier", "segment"],
+        update_cols=["tier", "segment", "_live"],
         preserve_cols=preserve,
-    )
-
-    # Metrics join-update (etl_aws:1484-1499, SNK3): per-customer order
-    # stats attached to the matching resource nodes; untouched elsewhere.
-    metrics = (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.count("*").alias("order_count"),
-            F.round(F.sum("o_totalprice"), 2).alias("total_spend"),
-        )
-        .join(customer.select("c_custkey", "c_name"), F.col("o_custkey") == F.col("c_custkey"))
-        .select(F.lit("EC2Instance").alias("label"), F.col("c_name").alias("name"),
-                "order_count", "total_spend")
-    )
-    enriched = (
-        merged.join(metrics, ["label", "name"], "left")
     )
 
     # Step 15: ghost GC (etl_aws:1932-2066, J8) — PER-LABEL, and only
@@ -139,20 +130,35 @@ def run_aws_snapshot_etl(
     # what lets three cadences share one store without deleting each
     # other's state (ST6).
     gc_labels = ["Region", "AvailabilityZone", "EC2Instance"]
-    gced = gc_keep(
-        enriched.filter(F.col("label").isin(gc_labels)),
-        incoming,
-        keys=["label", "name"],
-    ).unionByName(enriched.filter(~F.col("label").isin(gc_labels)))
+    gced = merged.filter(~F.col("label").isin(gc_labels) | F.col("_live").isNotNull())
 
-    # Step 16: health reset-then-degrade (etl_aws:2068-2111, ST7) —
-    # alarm set = customers with any urgent open order.
-    alarms = (
-        orders.filter((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "O"))
+    # Metrics join-update (etl_aws:1484-1499, SNK3): per-customer order
+    # stats attached to the matching resource nodes; untouched elsewhere.
+    # The same aggregate flags the alarm set of Step 16: customers with
+    # any urgent open order.
+    urgent_open = (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "O")
+    metrics = (
+        orders.groupBy("o_custkey")
+        .agg(
+            F.count("*").alias("order_count"),
+            F.round(F.sum("o_totalprice"), 2).alias("total_spend"),
+            F.max(urgent_open).alias("_alarm"),
+        )
         .join(customer.select("c_custkey", "c_name"), F.col("o_custkey") == F.col("c_custkey"))
-        .select(F.lit("EC2Instance").alias("label"), F.col("c_name").alias("name"))
+        .select(F.lit("EC2Instance").alias("label"), F.col("c_name").alias("name"),
+                "order_count", "total_spend", "_alarm")
     )
-    final = reset_then_degrade(gced, alarms)
+
+    # Step 16: health reset-then-degrade (etl_aws:2068-2111, ST7) as one
+    # column: every node resets to healthy unless its customer alarms.
+    final = (
+        gced.join(metrics, ["label", "name"], "left")
+        .withColumn(
+            "health_status",
+            F.when(F.col("_alarm"), F.lit("degraded")).otherwise(F.lit("healthy")),
+        )
+        .drop("_live", "_alarm")
+    )
 
     edges = contains.unionByName(located_in)
     node_stats, edge_stats = Observation(), Observation()

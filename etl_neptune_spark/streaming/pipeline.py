@@ -34,7 +34,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -212,16 +212,28 @@ def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
     :536-617), so the nodes write does not re-run the edge merge. A
     replay after a crash between the two publishes re-merges the batch
     into its own published edges, which last-write-wins makes a no-op.
+
+    The batch is never probed before the writes: the TTL horizon (the
+    batch's latest ``ts``) is observed during the edges write, as the
+    latest ``last_seen`` the merge took from the batch. A batch without
+    a horizon (only null ``ts``, or no rows at all) GCs nothing. A batch
+    whose rows the projection all filtered out is applied like any
+    other: both tables keep their rows unchanged and are published at
+    its batch id, so every batch id still has one version.
     """
 
     def apply(batch: DataFrame, batch_id: int) -> None:
-        # One pass over the batch for both the emptiness test and the
-        # TTL horizon.
-        rows, horizon = batch.agg(F.count(F.lit(1)), F.max("ts")).first()
-        if rows == 0:
-            return
         spark = batch.sparkSession
-        edges_inc = _edge_agg(batch).withColumn("active", F.lit(True))
+        # ``_seen`` copies each incoming edge's last_seen through the
+        # merge, where only incoming rows carry it: its max over the
+        # write is the batch's horizon. The observation sits on the
+        # write's root, because on an empty batch AQE drops the merge's
+        # incoming side, and an observation there with it.
+        edges_inc = (
+            _edge_agg(batch)
+            .withColumn("active", F.lit(True))
+            .withColumn("_seen", F.col("last_seen"))
+        )
         empty_edges = spark.createDataFrame([], edges_inc.schema)
         edges_cur = store.read(spark, "edges") or empty_edges
         edges_merged = merge_keyed(
@@ -234,13 +246,20 @@ def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
                 "error_count",
                 "last_seen",
                 "active",
+                "_seen",
             ],
         )
         # ST5: edges in this batch carry active=true via the merge;
         # absent edges keep their previous active + last_seen stamp
         # (implicit decay — the reference has no edge GC, downstream
         # consumers filter on last_seen).
-        store.write(edges_merged, "edges", batch_id)
+        seen = Observation()
+        store.write(
+            edges_merged.observe(seen, F.max("_seen").alias("horizon")).drop("_seen"),
+            "edges",
+            batch_id,
+        )
+        horizon = seen.get["horizon"]
 
         nodes_inc = (
             batch.select(F.col("src").cast("string").alias("name"), "ts")
@@ -272,10 +291,12 @@ def deepflow_batch(store: GraphStore) -> Callable[[DataFrame, int], None]:
         # ST4: retention — OWN label only (per-writer GC, like the
         # reference's per-label anti-joins): Microservice nodes unseen
         # past the TTL are dropped; other writers' labels pass through.
-        nodes_final = nodes_merged.filter(
-            (F.col("label") != "Microservice")
-            | (F.col("last_seen") >= F.lit(horizon) - F.expr(f"INTERVAL {NODE_TTL}"))
-        )
+        nodes_final = nodes_merged
+        if horizon is not None:
+            nodes_final = nodes_merged.filter(
+                (F.col("label") != "Microservice")
+                | (F.col("last_seen") >= F.lit(horizon) - F.expr(f"INTERVAL {NODE_TTL}"))
+            )
 
         # §3.1 step 8: per-service degree metrics join-updated onto the
         # nodes (the reference's batch_fetch_dependency_and_update,

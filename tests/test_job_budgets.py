@@ -48,6 +48,14 @@ Budget history:
   benchmark ``query-mix`` queries at sf0.01 build with 17 jobs in a warm
   pass before and 0 after; ``test_warm_query_build_launches_no_job``
   pins the 0.
+- one pass per pipeline write: the aws run takes its ghost GC from a
+  presence column carried through the merge and its alarms from the
+  metrics aggregate, so the separate GC semi-join and alarm join go
+  (13 → 9 jobs warm); a deepflow apply observes its TTL horizon on the
+  edges write instead of probing the batch first, and the degrees are
+  one aggregate (13 → 10 jobs warm, 12 → 8-10 into an empty store).
+  ``AWS_RUN_JOBS`` 16 → 12 and ``DEEPFLOW_APPLY_JOBS`` 15 → 12, and the
+  first apply into an empty store is held to the same budget.
 """
 
 from __future__ import annotations
@@ -64,8 +72,8 @@ from etl_neptune_spark.sources import load_table
 from etl_neptune_spark.streaming import GraphStore, flow_projection
 from etl_neptune_spark.streaming.pipeline import deepflow_batch
 
-AWS_RUN_JOBS = 16
-DEEPFLOW_APPLY_JOBS = 15
+AWS_RUN_JOBS = 12
+DEEPFLOW_APPLY_JOBS = 12
 GRAPH_JOBS = {  # (build, run)
     "pagerank": (10, 11),
     "triangle_counts": (7, 12),
@@ -133,11 +141,12 @@ def test_warm_aws_run_job_budget(spark, sf_dir, tmp_path):
 def test_deepflow_apply_job_budget(spark, sf_dir, tmp_path):
     apply = deepflow_batch(GraphStore(str(tmp_path / "store")))
     batch = flow_projection(load_table(spark, sf_dir, "events"))
-    apply(batch, 0)
-    start = _next_job(spark)
-    apply(batch, 1)
-    jobs = _next_job(spark) - start
-    assert jobs <= DEEPFLOW_APPLY_JOBS, jobs
+    jobs = []
+    for batch_id in (0, 1):  # into the empty store, then over it
+        start = _next_job(spark)
+        apply(batch, batch_id)
+        jobs.append(_next_job(spark) - start)
+    assert max(jobs) <= DEEPFLOW_APPLY_JOBS, jobs
 
 
 @pytest.mark.parametrize("case", sorted(GRAPH_CASES))

@@ -222,3 +222,50 @@ def test_corpus_pipeline_stages_and_determinism(spark, sf_dir):
     packed2, stats2 = run_corpus_pipeline(spark, sf_dir)
     assert stats2 == stats
     assert sorted(map(tuple, packed2.collect())) == sorted(map(tuple, rows))
+
+
+def test_aws_gc_and_health_from_one_pass(spark, sf_dir, tmp_path):
+    """The ghost GC and the health alarms of one run, on a store another
+    writer shares: an EC2Instance ghost absent from the snapshot is
+    dropped, a Microservice row the other writer put there survives
+    (this pipeline GCs only its own labels), a customer with an urgent
+    open order is degraded, one whose urgent orders are all closed is
+    healthy, and a re-run at the same version returns the same stats
+    and rows."""
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    urgent = orders.filter(F.col("o_orderpriority") == "1-URGENT").join(
+        customer, F.col("o_custkey") == F.col("c_custkey")
+    )
+    open_any = urgent.groupBy("c_name").agg(
+        F.max(F.col("o_orderstatus") == "O").alias("open")
+    )
+    alarmed = {r.c_name for r in open_any.filter("open").collect()}
+    closed_only = {r.c_name for r in open_any.filter("NOT open").collect()}
+    assert alarmed and closed_only
+
+    store = GraphStore(str(tmp_path / "store"))
+    run_aws_snapshot_etl(spark, sf_dir, store, version=0)
+    foreign = spark.createDataFrame(
+        [("EC2Instance", "ghost-node-not-in-aws", "degraded"),
+         ("Microservice", "svc-of-another-writer", "degraded")],
+        "label string, name string, health_status string",
+    )
+    store.write(
+        store.read(spark, "nodes").unionByName(foreign, allowMissingColumns=True), "nodes", 1
+    )
+
+    stats = run_aws_snapshot_etl(spark, sf_dir, store, version=2)
+    nodes = {(r.label, r.name): r for r in store.read(spark, "nodes").collect()}
+    assert ("EC2Instance", "ghost-node-not-in-aws") not in nodes
+    assert nodes[("Microservice", "svc-of-another-writer")].health_status == "healthy"
+    ec2 = {n: r.health_status for (label, n), r in nodes.items() if label == "EC2Instance"}
+    assert all(ec2[n] == "degraded" for n in alarmed)
+    assert all(ec2[n] == "healthy" for n in closed_only)
+    assert {n for n, h in ec2.items() if h == "degraded"} == alarmed
+    assert stats["degraded"] == len(alarmed)
+    assert stats["nodes"] == len(nodes)
+
+    rows = _snapshot(spark, store, "nodes")
+    assert run_aws_snapshot_etl(spark, sf_dir, store, version=2) == stats
+    assert _snapshot(spark, store, "nodes") == rows

@@ -216,6 +216,43 @@ def test_incremental_batches_lww(spark, events, tmp_path):
         assert nodes1[name].created_at == row.created_at
 
 
+def _rows(spark, store, table, version):
+    return sorted(map(tuple, store.read_version(spark, table, version).collect()))
+
+
+def test_null_ts_batch_keeps_nodes(spark, events, tmp_path):
+    """ST4: a batch whose rows all have a null ``ts`` has no TTL
+    horizon, so it GCs nothing — the nodes already in the store stay."""
+    from etl_neptune_spark.streaming.pipeline import deepflow_batch
+
+    store = GraphStore(str(tmp_path / "store"))
+    apply = deepflow_batch(store)
+    apply(flow_projection(events), 0)
+    before = {r.name for r in store.read(spark, "nodes").collect()}
+    assert before
+
+    apply(flow_projection(events.withColumn("ts", F.lit(None).cast("timestamp"))), 1)
+    nodes = store.read(spark, "nodes")
+    assert store.latest_version("nodes") == 1
+    assert {r.name for r in nodes.collect()} == before
+    assert nodes.filter(F.col("last_seen").isNull()).count() == 0
+
+
+def test_all_filtered_batch_publishes_unchanged_tables(spark, events, tmp_path):
+    """A batch whose rows the projection all filters out is still one
+    store version: edges and nodes are both published at its batch id,
+    each with the rows of the version before it."""
+    from etl_neptune_spark.streaming.pipeline import deepflow_batch
+
+    store = GraphStore(str(tmp_path / "store"))
+    apply = deepflow_batch(store)
+    apply(flow_projection(events), 0)
+    apply(flow_projection(events.withColumn("value", -F.col("value"))), 1)
+    for table in ("edges", "nodes"):
+        assert store.latest_version(table) == 1
+        assert _rows(spark, store, table, 1) == _rows(spark, store, table, 0)
+
+
 def _edge_agg_keys(events_half):
     return (
         flow_projection(events_half)
